@@ -4,15 +4,18 @@
 
 Run from the root of a checkout. It generates the workload's inputs from
 ``--seed``, computes the expected outputs with DuckDB, starts a
-``local[nproc]`` session through the engine's own factory, runs one cold
-iteration, then runs the workload as a closed loop from one client for
-``--seconds`` seconds, checking every iteration's outputs. It prints one
-JSON line of run details (environment, input mix, set-up parts, errors) and
-then, as its last stdout line, the result object. ``--trace 0`` reports the
-end-to-end metrics; ``--trace 1`` alternates untraced and traced iterations
-and reports the per-layer metrics (see ``metrics.py``), and writes the
-spans to ``.perfbench_work/trace-<workload>-<seed>.json``. Everything else
-it writes stays under ``.perfbench_work/run-<pid>/`` and is removed at exit.
+``local[nproc]`` session through the engine's own factory, and runs one cold
+iteration. ``--trace 0`` then runs the
+workload as a closed loop from one client for ``--seconds`` seconds, and at
+least the workload's minimum number of iterations, and reports the
+end-to-end metrics. ``--trace 1`` instead runs one untraced and one traced
+iteration, then the workload's serve phase if it has one, traced with the
+latter; it reports the per-layer metrics (see ``metrics.py``) and writes the
+spans to ``.perfbench_work/trace-<workload>-<seed>.json``. Every output is
+checked. The run prints one JSON line of run details (environment, input
+mix, set-up parts, errors) and then, as its last stdout line, the result
+object. Everything else it writes stays under ``.perfbench_work/run-<pid>/``
+and is removed at exit.
 """
 
 from __future__ import annotations
@@ -71,15 +74,23 @@ def _rss_mb(pid: int | str) -> float:
     return 0.0
 
 
-def _versions() -> dict:
+def _cpu_s(pid: int) -> float:
+    """CPU seconds used so far by the JVM ``pid`` and this process. Time the
+    hypervisor steals from the machine is not charged to either."""
+    with open(f"/proc/{pid}/stat", encoding="ascii") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    own = os.times()
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK") + own.user + own.system
+
+
+def _versions(spark) -> dict:
     import duckdb
     import pyspark
 
-    java = subprocess.run(["java", "-version"], capture_output=True, text=True).stderr
     return {
         "pyspark": pyspark.__version__,
         "duckdb": duckdb.__version__,
-        "java": next((line for line in java.splitlines() if " version " in line), ""),
+        "java": spark._jvm.java.lang.System.getProperty("java.version"),
         "python": platform.python_version(),
     }
 
@@ -110,7 +121,6 @@ def _run(a, work: str) -> int:
         "nproc": os.cpu_count(),
         "SPARK_GRAFT_CPUS": os.environ["SPARK_GRAFT_CPUS"],
         "load_start": os.getloadavg(),
-        **_versions(),
     }
     wl = W.WORKLOADS[a.workload]()
     in_dir = os.path.join(work, "in")
@@ -141,7 +151,7 @@ def _run(a, work: str) -> int:
     session_s = time.perf_counter() - t
     sc = spark.sparkContext
     env.update(master=sc.master, default_parallelism=sc.defaultParallelism,
-               driver_memory=sc.getConf().get("spark.driver.memory"))
+               driver_memory=sc.getConf().get("spark.driver.memory"), **_versions(spark))
     jvm_pid = sc._gateway.proc.pid
     try:
         wl.prepare(spark, in_dir, work, truth, expected)
@@ -150,60 +160,78 @@ def _run(a, work: str) -> int:
         samples: list[tuple[bool, dict]] = []
         errors: list[str] = []
 
-        def one(traced: bool) -> dict | None:
+        def op(fn):
+            """One counted operation; an exception or a failed check is a
+            failure."""
             nonlocal attempted, failed
-            tracer.enabled = traced
-            tracer.iteration = attempted
             attempted += 1
             try:
-                r = wl.iteration(tracer)
-                wl.check(r)
+                return fn()
             except Exception as e:  # noqa: BLE001 - every failure is counted
                 failed += 1
                 errors.append(f"{type(e).__name__}: {e}"[:500])
                 return None
             finally:
                 tracer.enabled = False
-            r["iteration"] = tracer.iteration
-            samples.append((traced, r))
-            wl.cleanup(r)
+
+        def one(traced: bool) -> dict | None:
+            tracer.enabled = traced
+            tracer.iteration = attempted
+            r = op(lambda: _checked(wl, tracer, jvm_pid))
+            if r is not None:
+                r["iteration"] = tracer.iteration
+                samples.append((traced, r))
+                wl.cleanup(r)
             return r
 
         cold = one(False)
         samples.clear()
-        # Trace runs alternate untraced and traced iterations, at least one
-        # of each, so the overhead compares iterations of one session.
-        min_iters = 2 if a.trace else wl.min_iterations
-        t_end = time.perf_counter() + a.seconds
-        n = 0
-        while (time.perf_counter() < t_end or n < min_iters) and failed <= 3:
-            one(bool(a.trace) and n % 2 == 1)
-            n += 1
+        if a.trace:
+            # One untraced and one traced iteration of one session, so the
+            # overhead compares like with like.
+            one(False)
+            one(True)
+        else:
+            t_end = time.perf_counter() + a.seconds
+            n = 0
+            while (time.perf_counter() < t_end or n < wl.min_iterations) and failed <= 3:
+                one(False)
+                n += 1
+        serves = a.trace and hasattr(wl, "serve")
+        served = None
+        if serves and samples:
+            # Its spans count toward the traced iteration.
+            tracer.enabled = True
+            served = op(lambda: wl.serve(tracer))
         env["load_end"] = os.getloadavg()
         rss = _rss_mb("self") + _rss_mb(jvm_pid)
 
         untraced = [r for t, r in samples if not t]
         traced = [r for t, r in samples if t]
-        measured = cold is not None and bool(untraced) and (bool(traced) or not a.trace)
+        measured = (cold is not None and bool(untraced) and (bool(traced) or not a.trace)
+                    and (served is not None or not serves))
         ok = measured and failed == 0
         gen_med = statistics.median(gen_s)
         if not measured:
             values = {}
         elif a.trace:
-            values = M.per_layer(tracer, traced, untraced, session_s, gen_med)
+            values = M.per_layer(tracer, wl.rows, cold, traced, untraced, session_s, gen_med,
+                                 lookup_s=served["lat"] if served else [])
             os.makedirs(WORK, exist_ok=True)
             with open(os.path.join(WORK, f"trace-{a.workload}-{a.seed}.json"), "w",
                       encoding="utf-8") as fh:
                 json.dump([s.__dict__ for s in tracer.spans], fh)
         else:
-            values = M.end_to_end(wl, untraced, setup_s=session_s + gen_med, cold_s=cold["s"],
-                                  rss_mb=rss)
+            values = M.end_to_end(untraced, setup_s=session_s + gen_med,
+                                  cold_cpu_s=cold["cpu_s"], rss_mb=rss)
         detail = {
             "workload": a.workload, "seed": a.seed, "env": env,
             "setup": {"session_s": session_s, "gen_s": gen_s, "oracle_s": oracle_s},
             "iterations": {"untraced": len(untraced), "traced": len(traced)},
             "iteration_s": {"cold": cold and cold["s"], "untraced": [r["s"] for r in untraced],
                             "traced": [r["s"] for r in traced]},
+            "iteration_cpu_s": {"cold": cold and cold["cpu_s"],
+                                "untraced": [r["cpu_s"] for r in untraced]},
             "failed_frac": failed / max(1, attempted),
             "mix": truth.mix,
             "rows": {"shares": truth.n_shares, "public": truth.n_public,
@@ -221,6 +249,14 @@ def _run(a, work: str) -> int:
         "metrics": values,
     }))
     return 0
+
+
+def _checked(wl, tracer, jvm_pid: int) -> dict:
+    c = _cpu_s(jvm_pid)
+    r = wl.iteration(tracer)
+    r["cpu_s"] = _cpu_s(jvm_pid) - c
+    wl.check(r)
+    return r
 
 
 def _stop_jvm(sc) -> None:

@@ -6,6 +6,8 @@
 * the DuckDB oracle agrees with the generator's own branch mix;
 * a deliberately perturbed output fails each workload's check, and the
   pipeline oracle's own output passes it;
+* the layer row counts a traced iteration must observe follow the
+  generator's mix, and a perturbed count fails the check;
 * the metric names and units the benchmark emits match ``BENCHMARK.json``.
 
 Exits 0 when every test passes.
@@ -68,6 +70,20 @@ def test_perturbed_migration_output_fails(tmp):
     _fails(lambda: wl.check({"out": out}))
 
 
+def test_perturbed_counts_fail(tmp):
+    wl = W.Migrate(SHARES)
+    truth = wl.generate(tmp, 5)
+    counts = W.expected_counts(truth)
+    m = truth.mix
+    assert counts["functions.kv.rows_parsed"] + counts["functions.kv.rows_unparsed"] \
+        == truth.n_replies
+    assert sum(v for k, v in counts.items() if k.startswith("operators.router.rows.")) \
+        == sum(m[b] for b in gen.BRANCHES)
+    wl.prepare(None, tmp, tmp, truth, {"audit": {}, "dead": {}})
+    bad = {**counts, "operators.router.rows.DEFAULT": counts["operators.router.rows.DEFAULT"] + 1}
+    _fails(lambda: wl.check({"counts": bad}))
+
+
 def test_perturbed_manifest_fails(tmp):
     wl = W.Pretrain(DOCUMENTS)
     truth = wl.generate(tmp, 5)
@@ -88,9 +104,9 @@ def test_metric_names_match_benchmark_json(_tmp):
         (n, u, "higher" if n in M.HIGHER else "lower") for n, u in M.per_layer_names()
     ]
     assert [w["name"] for w in bench["workloads"]] == list(W.WORKLOADS)
-    samples = [{"s": 2.0, "bytes_per_row": 10.0}, {"s": 3.0, "bytes_per_row": 12.0}]
-    emitted = M.end_to_end(W.WORKLOADS["migrate_small"](), samples, setup_s=1.0, cold_s=4.0,
-                           rss_mb=100.0)
+    assert all(len(m["name"]) <= 64 for m in bench["end_to_end"] + bench["per_layer"])
+    samples = [{"cpu_s": 2.0, "bytes_per_row": 10.0}, {"cpu_s": 3.0, "bytes_per_row": 12.0}]
+    emitted = M.end_to_end(samples, setup_s=1.0, cold_cpu_s=4.0, rss_mb=100.0)
     assert sorted((k, v["unit"]) for k, v in emitted.items()) == sorted(M.END_TO_END)
     assert all(v["value"] > 0 for v in emitted.values())
 

@@ -6,8 +6,10 @@ iterations (``iteration``) until the measuring window ends, and at least
 4-core machine the minimum outlasts the window, so the number of samples
 behind a median is the same from run to run. Every iteration
 is checked (``check``) outside its timing; a mismatch or an exception
-counts as a failed operation. Calls into the program's layers are wrapped
-in ``tracer.span`` so the traced run can attribute Spark work to them.
+counts as a failed operation. A workload may also have a ``serve`` phase,
+which the traced run runs once after its iterations. Calls into the
+program's layers are wrapped in ``tracer.span`` so the traced run can
+attribute Spark work to them.
 """
 
 from __future__ import annotations
@@ -32,9 +34,11 @@ from cernbox_migration_database_spark.plans import migration as MIG
 from cernbox_migration_database_spark.queries import train as TRAIN
 from cernbox_migration_database_spark.queries._registry import ORACLE, STAGE_TIMES
 
+_ENRICH = "operators.enrich.lookup_join"
+
 SHARES = 10_000
 DOCUMENTS = 500
-LOOKUPS = 4
+LOOKUPS = 20
 UPDATE_ROWS = 50
 
 
@@ -97,7 +101,7 @@ def _count_lookup_join(counts: _Counts):
             key = f"operators.enrich.lookup_join.{stage}"
             one = F.count(F.lit(1))
             return (
-                counts.observe(key, matched, one.alias("rows_matched")),
+                counts.observe(key, matched, one.alias("rows_hit")),
                 counts.observe(key, dead, one.alias("rows_missed")),
             )
         return lookup_join
@@ -133,14 +137,32 @@ def _check_truth(expected: dict, m: dict) -> None:
     })
 
 
+def expected_counts(truth: gen.Truth) -> dict:
+    """The layer row counts a traced iteration must observe, from the
+    generator's branch mix."""
+    m = truth.mix
+    return {
+        "functions.kv.rows_parsed": truth.n_replies - m["unparseable"],
+        "functions.kv.rows_unparsed": m["unparseable"],
+        f"{_ENRICH}.eos_info_by_inode.rows_hit": sum(m[b] for b in gen.BRANCHES),
+        f"{_ENRICH}.eos_info_by_inode.rows_missed": m["dangling"] + m["unparseable"],
+        f"{_ENRICH}.eos_info_by_parent_path.rows_hit": m["parent"] - m["parent_missing"],
+        f"{_ENRICH}.eos_info_by_parent_path.rows_missed": m["parent_missing"],
+        f"{_ENRICH}.versions_folder_create.rows_hit": m["versions_created"],
+        f"{_ENRICH}.versions_folder_create.rows_missed": m["create_refused"],
+        **{f"operators.router.rows.{d}": m[b] for d, b in zip(DECISIONS, gen.BRANCHES)},
+    }
+
+
 class Migrate:
     """scan -> parse -> enrich -> route -> create sink -> re-lookup ->
     merge_into a share table partitioned by share_type -> audit and dead
-    letters. Each iteration migrates a freshly created table."""
+    letters. Each iteration migrates a freshly created table; ``serve``
+    then indexes the last one, merges an update batch and looks keys up."""
 
-    # One warm iteration already outlasts the window; a second would add
-    # about 13 s to every run (4 cores), more than the run budget allows.
-    min_iterations = 1
+    # Three warm samples behind the median; at about 6 s each (4 cores)
+    # they outlast a 10 s window.
+    min_iterations = 3
 
     def __init__(self, n_shares: int):
         self.rows = n_shares
@@ -157,8 +179,8 @@ class Migrate:
     def prepare(self, spark, in_dir, work, truth, expected) -> None:
         self.spark, self.in_dir, self.work = spark, in_dir, work
         self.truth, self.expected = truth, expected
-        self.first_hash = None
         self.it = 0
+        self.last = None
         self.updated = np.asarray(sorted(truth.after), dtype=np.int64)
 
     def _meta(self, counts):
@@ -202,7 +224,6 @@ class Migrate:
         spark, it = self.spark, self.it
         self.it += 1
         root = os.path.join(self.work, f"shares_v{it}")
-        index = os.path.join(self.work, f"index_v{it}")
         out = os.path.join(self.work, f"out{it}")
         counts = _Counts() if tracer.enabled else None
         if counts is not None:
@@ -229,23 +250,22 @@ class Migrate:
                 res.audit.write.parquet(os.path.join(out, "audit"))
             with tracer.span("plans.migration.dead_letter_sink"):
                 res.dead.write.parquet(os.path.join(out, "dead"))
-            migrated = time.perf_counter()
-            serve = self._serve(root, index, tracer)
             elapsed = time.perf_counter() - t0
         finally:
             if counts is not None:
                 counts.close()
-        r = {"s": elapsed, "migrate_s": migrated - t0, "root": root, "index": index,
-             "out": out, "version": version, "merge": merge, **serve}
+        r = {"s": elapsed, "root": root, "out": out, "version": version, "merge": merge}
         if counts is not None:
             r["counts"] = counts.values(spark)
         return r
 
-    def _serve(self, root: str, index: str, tracer) -> dict:
-        """Index the migrated table, merge one small update batch, refresh
-        the index from the change feed, then look up seeded share ids --
-        half of them from the batch -- one key at a time."""
-        spark = self.spark
+    def serve(self, tracer) -> dict:
+        """Index the last migrated table, merge one small update batch,
+        refresh the index from the change feed, then look up seeded share
+        ids -- half of them from the batch -- one key at a time, checking
+        each row against the generator's truth."""
+        spark, root = self.spark, self.last["root"]
+        index = root + "_index"
         with tracer.span("operators.keyindex.create_key_index"):
             KI.create_key_index(spark, root, index, "id")
         rng = np.random.default_rng(self.it)
@@ -266,17 +286,23 @@ class Migrate:
         with tracer.span("operators.keyindex.refresh_key_index"):
             KI.refresh_key_index(spark, index)
         keys = [*batch[: LOOKUPS // 2], *rng.choice(self.updated, LOOKUPS - LOOKUPS // 2)]
-        got, lat = [], []
-        for k in keys:
-            a = time.perf_counter()
+        lat = []
+        for k in map(int, keys):
             with tracer.span("operators.keyindex.point_lookup"):
-                rows = KI.point_lookup(spark, index, [int(k)]).select(*oracle.MERGED_COLS).collect()
-            lat.append(time.perf_counter() - a)
-            got.append((int(k), rows))
-        return {"lookups": got, "lat": lat, "upd": upd}
+                a = time.perf_counter()
+                rows = KI.point_lookup(spark, index, [k]).select(*oracle.MERGED_COLS).collect()
+                lat.append(time.perf_counter() - a)
+            _expect(f"rows for share {k}", len(rows), 1)
+            row = rows[0]
+            _expect(f"share {k}", (row["item_source"], row["item_target"], row["file_source"],
+                                   row["file_target"]), upd.get(k, self.truth.after[k]))
+        shutil.rmtree(index, ignore_errors=True)
+        return {"lat": lat}
 
     def check(self, r: dict) -> None:
         exp = self.expected
+        if "counts" in r:
+            _expect("layer row counts", r["counts"], expected_counts(self.truth))
         audit = pq.read_table(os.path.join(r["out"], "audit"), columns=["decision"])
         _expect("audit rows per decision",
                 _value_counts(audit.column("decision")), exp["audit"])
@@ -285,32 +311,20 @@ class Migrate:
                 _value_counts(dead.column("error_stage")), exp["dead"])
         table = TF.read_table(self.spark, r["root"], version=r["version"]).select(
             *oracle.MERGED_COLS)
-        if self.first_hash is None:
-            _expect("merged table hash", oracle.frame_hash(table.toPandas()), exp["merged_hash"])
-            self.first_hash = _spark_hash(table)
-        else:
-            _expect("merged table fingerprint", _spark_hash(table), self.first_hash)
-        for k, rows in r["lookups"]:
-            _expect(f"rows for share {k}", len(rows), 1)
-            row = rows[0]
-            _expect(f"share {k}", (row["item_source"], row["item_target"], row["file_source"],
-                                   row["file_target"]), r["upd"].get(k, self.truth.after[k]))
+        _expect("merged table hash", oracle.frame_hash(table.toPandas()), exp["merged_hash"])
         r["bytes_per_row"] = r["merge"]["bytes_written"] / exp["updates"]
 
     def cleanup(self, r: dict) -> None:
-        for d in (r["root"], r["index"], r["out"]):
-            shutil.rmtree(d, ignore_errors=True)
+        """Drop the previous iteration's outputs; the last table stays for
+        ``serve``."""
+        if self.last is not None:
+            for d in (self.last["root"], self.last["out"]):
+                shutil.rmtree(d, ignore_errors=True)
+        self.last = r
 
 
 def _value_counts(col) -> dict:
     return {d["values"]: int(d["counts"]) for d in col.value_counts().to_pylist()}
-
-
-def _spark_hash(df) -> tuple:
-    row = df.select(
-        F.bit_xor(F.xxhash64(*df.columns)).alias("h"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    return (row["h"], row["n"])
 
 
 def _merge_stats(root: str, version: int) -> dict:
