@@ -38,12 +38,11 @@ is bit-identical to the executor-side build — pinned by test.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from .sketches import bloom_pos
 from .table_format import current_version, partition_scheme, read_changes, read_table
 
@@ -125,28 +124,18 @@ def _fold(bitsets: dict, positions: dict, m_bits: int) -> None:
         bitsets[part] = bytes(cur)
 
 
-def _write_state(index_path: str, st: dict, bitsets: dict) -> None:
-    payload = {
-        **st,
-        "blooms": {
-            ("\x00null" if p is None else str(p)): b.hex()
-            for p, b in bitsets.items()
-        },
+def _blooms_to_json(bitsets: dict) -> dict:
+    return {
+        ("\x00null" if p is None else str(p)): b.hex()
+        for p, b in bitsets.items()
     }
-    tmp = index_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, index_path)
 
 
-def _read_state(index_path: str) -> tuple[dict, dict]:
-    with open(index_path, encoding="utf-8") as fh:
-        payload = json.load(fh)
-    blooms = {
+def _blooms_from_json(st: dict) -> dict:
+    return {
         (None if p == "\x00null" else p): bytes.fromhex(h)
-        for p, h in payload.pop("blooms").items()
+        for p, h in st["blooms"].items()
     }
-    return payload, blooms
 
 
 def create_bloom_index(
@@ -193,8 +182,9 @@ def create_bloom_index(
             ("\x00null" if p is None else str(p)): _popcount(b)
             for p, b in bitsets.items()
         },
+        "blooms": _blooms_to_json(bitsets),
     }
-    _write_state(index_path, st, bitsets)
+    store_state.write(index_path, st)
     return base_v
 
 
@@ -203,7 +193,7 @@ def refresh_bloom_index(spark: SparkSession, index_path: str) -> int:
     their positions into the post-image partition. Deletes are a NO-OP by
     design (add-only; stale bits are false-positive reads, never misses).
     O(changed rows) cluster work, zero shuffle beyond the CDF diff."""
-    st, bitsets = _read_state(index_path)
+    st = store_state.read(index_path)
     cur = current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -230,13 +220,15 @@ def refresh_bloom_index(spark: SparkSession, index_path: str) -> int:
         st.get("deletes_since_build", 0) + by_type.get("delete", 0)
     )
     adds = ch.where(F.col("_change_type").isin("insert", "update"))
+    bitsets = _blooms_from_json(st)
     _fold(
         bitsets,
         _part_positions(adds, st["key"], st["part_col"], st["m_bits"], st["k"]),
         st["m_bits"],
     )
     st["base_version"] = cur
-    _write_state(index_path, st, bitsets)
+    st["blooms"] = _blooms_to_json(bitsets)
+    store_state.write(index_path, st)
     return cur
 
 
@@ -258,7 +250,7 @@ def bloom_prune_lookup(
     INSERT's key has no bits, so probing a lagging index would silently
     MISS rows (the false negative the contract forbids). Refresh first;
     the fold is O(changed rows)."""
-    st, blooms = _read_state(index_path)
+    st = store_state.read(index_path)
     cur = current_version(st["base_root"])
     if cur != st["base_version"]:
         raise ValueError(
@@ -277,7 +269,7 @@ def bloom_prune_lookup(
         probe_pos = _probe_positions(spark, values, key_type, k, m)
     parts = [
         part
-        for part, bitset in blooms.items()
+        for part, bitset in _blooms_from_json(st).items()
         if any(_may_contain(bitset, pos) for pos in probe_pos.values())
     ]
     # Compare in string space (the state's normalized form). The cast is a
@@ -320,7 +312,8 @@ def bloom_debt_report(
     :func:`rebuild_bloom_index` — one column-pruned base scan, the same
     O(corpus)-but-cheap class as table compaction, priced and executed
     by ``maintenance.apply_maintenance``."""
-    st, blooms = _read_state(index_path)
+    st = store_state.read(index_path)
+    blooms = _blooms_from_json(st)
     m, k = st["m_bits"], st["k"]
     fills = {p: _popcount(b) / m for p, b in blooms.items()}
     est_fp = (
@@ -368,7 +361,7 @@ def rebuild_bloom_index(spark: SparkSession, index_path: str) -> int:
     index's own recorded parameters — the repair :func:`bloom_debt_report`
     prescribes. Stale bits from folded deletions vanish; the debt
     counters and fill anchors re-zero. One column-pruned base scan."""
-    st, _ = _read_state(index_path)
+    st = store_state.read(index_path)
     return create_bloom_index(
         spark,
         st["base_root"],

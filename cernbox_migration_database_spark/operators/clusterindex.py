@@ -37,13 +37,13 @@ so the full insert/delete/update lifecycle is incremental.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import lshindex as LX
+from . import store_state
 from . import table_format as TF
 from .dedup import connected_components_star, minhash_lsh_dedup
 
@@ -88,7 +88,7 @@ def build_cluster_index(
     scratch (one full LSH pass + O(log d) component rounds) and commit
     the (doc_id, cluster) map plus the edge relation side table that
     makes deletes incremental. Returns the base version clustered."""
-    st_idx = LX._state(index_root)
+    st_idx = store_state.read(os.path.join(index_root, LX._META))
     base_root, id_col = st_idx["base_root"], st_idx["id_col"]
     base_v = TF.current_version(base_root)
     if base_v != st_idx["base_version"]:
@@ -109,15 +109,14 @@ def build_cluster_index(
         _canon_edges(pairs.select("doc_a", "doc_b")),
         _edges_root(cluster_root),
     )
-    with open(os.path.join(cluster_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "index_root": index_root,
-                "base_version": base_v,
-                "threshold": threshold,
-            },
-            fh,
-        )
+    store_state.write(
+        os.path.join(cluster_root, _STATE),
+        {
+            "index_root": index_root,
+            "base_version": base_v,
+            "threshold": threshold,
+        },
+    )
     return base_v
 
 
@@ -205,10 +204,9 @@ def ingest_clusters(spark: SparkSession, cluster_root: str) -> int:
     re-insert (post-image re-probes with the batch); the decomposition
     is complete because the edge predicate depends only on final
     content."""
-    with open(os.path.join(cluster_root, _STATE), encoding="utf-8") as fh:
-        st = json.load(fh)
+    st = store_state.read(os.path.join(cluster_root, _STATE))
     idx = st["index_root"]
-    st_idx = LX._state(idx)
+    st_idx = store_state.read(os.path.join(idx, LX._META))
     base_root, id_col = st_idx["base_root"], st_idx["id_col"]
     cur = TF.current_version(base_root)
     if cur == st["base_version"]:
@@ -232,10 +230,7 @@ def ingest_clusters(spark: SparkSession, cluster_root: str) -> int:
         # cluster, but the index + state still advance to the new version
         LX.refresh_lsh_index(spark, idx)
         st["base_version"] = cur
-        with open(
-            os.path.join(cluster_root, _STATE), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(st, fh)
+        store_state.write(os.path.join(cluster_root, _STATE), st)
         return cur
     e1 = e2 = None
     if has_batch:
@@ -322,8 +317,7 @@ def ingest_clusters(spark: SparkSession, cluster_root: str) -> int:
                 check_cardinality=False,
             )
     st["base_version"] = cur
-    with open(os.path.join(cluster_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(cluster_root, _STATE), st)
     return cur
 
 

@@ -615,9 +615,9 @@ def simhash64(
     generated-class size (the 65-agg codegen compile dominated the cold
     run), with identical signatures (A/B-asserted on the sf0.1 corpus).
     21-bit counters are exact up to 2^21-1 distinct tokens per document
-    (~2 M unique words — far beyond any real document; the per-doc count
-    would overflow the slice silently past that, so the width is chosen
-    for margin, not for the fixture).
+    (~2 M unique words — far beyond any real document). Past that a slice
+    sum can carry into its neighbour and silently flip signature bits, so
+    a document at or above the limit fails the query instead.
     """
     toks = (
         ensure_parallelism(df)
@@ -667,7 +667,20 @@ def simhash64(
             for j in range(64)
         ]
     )
-    return votes.select(F.col(id_col), sig.alias("simhash"))
+    exact = F.col("n_tok") < F.lit(1 << 21)
+    too_long = F.raise_error(
+        F.concat(
+            F.lit("simhash64: document "),
+            F.col(id_col).cast("string"),
+            F.lit(" has "),
+            F.col("n_tok").cast("string"),
+            F.lit(" distinct tokens; the packed counters are exact only "
+                  "below 2^21"),
+        )
+    )
+    return votes.select(
+        F.col(id_col), F.when(exact, sig).otherwise(too_long).alias("simhash")
+    )
 
 
 def simhash_hamming_pairs(

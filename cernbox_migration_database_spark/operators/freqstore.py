@@ -45,12 +45,12 @@ candidates against a broadcast sketch. Serving reads only store state.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 from .sketches import _bucket
 
@@ -168,14 +168,8 @@ def build_freq_store(
     ).select("token")
     TF.create_table(keep, os.path.join(store_root, "cand"))
     os.makedirs(store_root, exist_ok=True)
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return base_v
-
-
-def _state(store_root: str) -> dict:
-    with open(os.path.join(store_root, _STATE), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def _prune_zero_counters(spark: SparkSession, sroot: str) -> None:
@@ -259,7 +253,7 @@ def refresh_freq_store(spark: SparkSession, store_root: str) -> int:
     and ``heavy_hitters`` would serve an incomplete set without raising.
     Deletion-heavy drift (total below half of any vet-time total) flags
     ``needs_rescan`` instead of serving silently-incomplete candidates."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     sroot = os.path.join(store_root, "sketch")
     committed = TF.last_txn_entry(sroot, _TXN_APP)
     seq0 = int(st.get("fold_seq", 0))
@@ -286,10 +280,7 @@ def refresh_freq_store(spark: SparkSession, store_root: str) -> int:
             _tokens_signed(wch, st["text_col"]).select("token").distinct(),
             int(st["total"]),
         )
-        with open(
-            os.path.join(store_root, _STATE), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(st, fh)
+        store_state.write(os.path.join(store_root, _STATE), st)
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -334,8 +325,7 @@ def refresh_freq_store(spark: SparkSession, store_root: str) -> int:
     )
     st["total"] = new_total
     st["base_version"] = cur
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return cur
 
 
@@ -344,7 +334,7 @@ def rescan_candidates(spark: SparkSession, store_root: str) -> int:
     current base snapshot re-derives the candidate set (the sketch needs
     no repair — it is linear and exact under folds). Clears the flag and
     re-anchors vet_total. Returns the candidate count."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     df = TF.read_table(spark, st["base_root"], st["base_version"])
     cand = df.select(
         F.explode(
@@ -376,8 +366,7 @@ def rescan_candidates(spark: SparkSession, store_root: str) -> int:
         )
     st["needs_rescan"] = False
     st["vet_total"] = int(st["total"])
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return keep.count()
 
 
@@ -386,7 +375,7 @@ def heavy_hitters(spark: SparkSession, store_root: str) -> DataFrame:
     est·den ≥ num·T — store state only, zero base IO. Raises while
     ``needs_rescan`` is up rather than serving a possibly-incomplete set
     (run :func:`rescan_candidates` first)."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     if st.get("needs_rescan"):
         raise ValueError(
             "freq store needs a candidate rescan (total shrank past the "

@@ -37,12 +37,12 @@ instead of silently corrupting counts.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 
 _STATE = "_hist_state.json"
@@ -133,31 +133,8 @@ def build_hist_store(
         .agg(F.sum("n").alias("tot"))
         .collect()
     }
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return base_v
-
-
-def _state(store_root: str) -> dict:
-    with open(os.path.join(store_root, _STATE), encoding="utf-8") as fh:
-        return json.load(fh)
-
-
-def _write_state(store_root: str, st: dict) -> None:
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
-
-
-def _check_not_rebuilding(st: dict) -> None:
-    """A crashed :func:`rebuild_hist_store` leaves the store between its
-    delete-all and insert (or with new counts under the OLD sidecar
-    edges) — folding into or serving from that state is silently wrong,
-    so every other entry point raises until the rebuild is re-run."""
-    if st.get("rebuilding"):
-        raise ValueError(
-            "hist store rebuild in progress or crashed mid-way — re-run "
-            "rebuild_hist_store() to complete the repair"
-        )
 
 
 def refresh_hist_store(spark: SparkSession, store_root: str) -> int:
@@ -175,8 +152,8 @@ def refresh_hist_store(spark: SparkSession, store_root: str) -> int:
     changes AFTER it instead of double-applying (which would silently
     corrupt counts). Zero-prune needs no recovery scoping: the state
     table is KiB-sized, so every refresh checks/prunes it in full."""
-    st = _state(store_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(store_root, _STATE))
+    store_state.check_not_rebuilding(st, "rebuild_hist_store")
     committed = TF.last_txn_entry(store_root, _TXN_APP)
     seq0 = int(st.get("fold_seq", 0))
     if committed is not None and committed["txn_ver"] > seq0:
@@ -191,10 +168,7 @@ def refresh_hist_store(spark: SparkSession, store_root: str) -> int:
             st["n_added"] = int(st.get("n_added", 0)) + int(
                 committed["hs_clamp"][1]
             )
-        with open(
-            os.path.join(store_root, _STATE), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(st, fh)
+        store_state.write(os.path.join(store_root, _STATE), st)
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -271,8 +245,7 @@ def refresh_hist_store(spark: SparkSession, store_root: str) -> int:
     st["base_version"] = cur
     st["n_added"] = int(st.get("n_added", 0)) + n_add
     st["n_clamped"] = int(st.get("n_clamped", 0)) + n_out
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return cur
 
 
@@ -292,8 +265,8 @@ def estimate_quantiles(
     bin width of the exact quantile by construction. Returns
     (scope, q_label, total_n, bin, est_cents) — a ≤ |scopes|·|quantiles|
     row result computed from KiB of state."""
-    st = _state(store_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(store_root, _STATE))
+    store_state.check_not_rebuilding(st, "rebuild_hist_store")
     lo, span, nbins = st["lo"], st["span"], st["nbins"]
     states = TF.read_table(spark, store_root)
     spec = spark.createDataFrame(
@@ -373,8 +346,8 @@ def drift_report(
     KMV store's repair discipline — detect loudly, repair targeted)."""
     import math
 
-    st = _state(store_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(store_root, _STATE))
+    store_state.check_not_rebuilding(st, "rebuild_hist_store")
     n_added = int(st.get("n_added", 0))
     n_clamped = int(st.get("n_clamped", 0))
     clamp_rate = (n_clamped / n_added) if n_added else 0.0
@@ -424,7 +397,7 @@ def rebuild_hist_store(spark: SparkSession, store_root: str) -> int:
     repair: the delete-all + insert pair is idempotent. Returns the base
     version the rebuilt store reflects; matches :func:`build_hist_store`
     from scratch bit-for-bit (pinned in tests)."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     cur = TF.current_version(st["base_root"])
     df = TF.read_table(spark, st["base_root"], cur)
     row = df.agg(
@@ -439,7 +412,7 @@ def rebuild_hist_store(spark: SparkSession, store_root: str) -> int:
     # stay in the sidecar until the final commit below, but nothing may
     # serve or fold against them while the flag is up
     st["rebuilding"] = True
-    _write_state(store_root, st)
+    store_state.write(os.path.join(store_root, _STATE), st)
     st["lo"] = int(row["lo"])
     st["span"] = int(row["hi"]) - int(row["lo"]) + 1
     fresh = (
@@ -470,5 +443,5 @@ def rebuild_hist_store(spark: SparkSession, store_root: str) -> int:
         .collect()
     }
     st["rebuilding"] = False
-    _write_state(store_root, st)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return cur

@@ -38,12 +38,12 @@ aggregate); repair is O(corpus) — deliberate, loud, never automatic.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 from .similarity import cell_of, cosine_scaled, probe_cells, with_norm
 
@@ -100,31 +100,8 @@ def build_ivf_index(
     # drift anchors (cell mass for PSI, mean quantization error) —
     # ivf_drift_report measures against the index AS BUILT
     _drift_refs(spark, index_root, st)
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _META), st)
     return st["base_version"]
-
-
-def _state(index_root: str) -> dict:
-    with open(os.path.join(index_root, _META), encoding="utf-8") as fh:
-        return json.load(fh)
-
-
-def _write_state(index_root: str, st: dict) -> None:
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
-
-
-def _check_not_rebuilding(st: dict) -> None:
-    """A crashed :func:`rebuild_ivf_index` may have committed re-assigned
-    rows while the meta still names the OLD centroids — probing or
-    folding against that mismatch is silently wrong, so everything else
-    raises until the rebuild is re-run to completion."""
-    if st.get("rebuilding"):
-        raise ValueError(
-            "ivf index rebuild in progress or crashed mid-way — re-run "
-            "rebuild_ivf_index() to complete the repair"
-        )
 
 
 def _cell_counts(spark: SparkSession, index_root: str) -> dict[int, int]:
@@ -249,8 +226,8 @@ def ivf_drift_report(
     empty ones) followed by :func:`rebuild_ivf_index` — targeted
     re-clustering, not a from-scratch retrain, unless PSI says the whole
     shape moved."""
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivf_index")
     rep = population_drift(
         _cell_counts(spark, index_root),
         {int(c): int(n) for c, n in st.get("ref_cells", {}).items()},
@@ -308,8 +285,8 @@ def replan_centroids(
     as one (driver state stays per_cell·|hot| KiB centroid rows). Feed
     the result to :func:`rebuild_ivf_index`; cell ids renumber — every
     consumer re-derives assignment from the new list."""
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivf_index")
     retired = set(empty_cells or [])
     kept = [
         (list(c), float(n))
@@ -410,7 +387,7 @@ def rebuild_ivf_index(
     function of (snapshot, centroids)). ``centroids=None`` on a clean
     index raises — a rebuild without a new plan is a no-op wearing a
     corpus-scale cost."""
-    st = _state(index_root)
+    st = store_state.read(os.path.join(index_root, _META))
     if st.get("rebuilding"):
         # resume the crashed rebuild with its own staged plan
         pend = st["pending_centroids"]
@@ -422,12 +399,12 @@ def rebuild_ivf_index(
                 "(replan_centroids / kmeans_train + centroid_literals)"
             )
         refresh_ivf_index(spark, index_root)
-        st = _state(index_root)
+        st = store_state.read(os.path.join(index_root, _META))
         st["rebuilding"] = True
         st["pending_centroids"] = [
             [list(c), float(n)] for c, n in centroids
         ]
-        _write_state(index_root, st)
+        store_state.write(os.path.join(index_root, _META), st)
     new_st = dict(st)
     new_st["centroids"] = [[list(c), float(n)] for c, n in centroids]
     cur = st["base_version"]
@@ -442,7 +419,7 @@ def rebuild_ivf_index(
     new_st.pop("pending_centroids", None)
     new_st["rebuilding"] = False
     _drift_refs(spark, index_root, new_st)
-    _write_state(index_root, new_st)
+    store_state.write(os.path.join(index_root, _META), new_st)
     return cur
 
 
@@ -451,8 +428,8 @@ def refresh_ivf_index(spark: SparkSession, index_root: str) -> int:
     writes bounded by the cells the changes land in. Keyed by the vector
     id (one index row per vector), so inserts/deletes/updates all fold
     exactly — the index stays a pure function of (snapshot, centroids)."""
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivf_index")
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -482,8 +459,7 @@ def refresh_ivf_index(spark: SparkSession, index_root: str) -> int:
             on=st["id_col"], check_cardinality=False,
         )
     st["base_version"] = cur
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _META), st)
     return cur
 
 
@@ -510,8 +486,8 @@ def probe_ivf_index(
     everywhere: cells are probed by QUERY proximity, so a highly
     selective predicate can empty the probed cells while matches exist in
     unprobed ones — raise nprobe for selective filters."""
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivf_index")
     cents = [(list(c), float(n)) for c, n in st["centroids"]]
     cells_root = os.path.join(index_root, "cells")
     id_col = st["id_col"]

@@ -31,12 +31,12 @@ integers, so maintenance and probe are oracle-pairable.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 from .similarity import (
     cell_of,
@@ -94,14 +94,8 @@ def build_ivfpq_index(
     st["ref_cells"] = {
         str(c): n for c, n in _cell_counts(spark, index_root).items()
     }
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _META), st)
     return st["base_version"]
-
-
-def _state(index_root: str) -> dict:
-    with open(os.path.join(index_root, _META), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def _cell_counts(spark: SparkSession, index_root: str) -> dict[int, int]:
@@ -133,8 +127,8 @@ def ivfpq_drift_report(
     :func:`rebuild_ivfpq_index` with retrained centroids."""
     from .ivfindex import population_drift
 
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivfpq_index")
     rep = population_drift(
         _cell_counts(spark, index_root),
         {int(c): int(n) for c, n in st.get("ref_cells", {}).items()},
@@ -155,14 +149,6 @@ def ivfpq_drift_report(
     return rep
 
 
-def _check_not_rebuilding(st: dict) -> None:
-    if st.get("rebuilding"):
-        raise ValueError(
-            "ivfpq index rebuild in progress or crashed mid-way — re-run "
-            "rebuild_ivfpq_index() to complete the repair"
-        )
-
-
 def rebuild_ivfpq_index(
     spark: SparkSession,
     index_root: str,
@@ -181,7 +167,7 @@ def rebuild_ivfpq_index(
     ivfindex.rebuild_ivf_index: `rebuilding` + staged
     `pending_centroids` in the meta, every other entry point raises
     while the flag is up, resume re-runs the same idempotent merge."""
-    st = _state(index_root)
+    st = store_state.read(os.path.join(index_root, _META))
     if st.get("rebuilding"):
         centroids = [
             (list(c), float(n)) for c, n in st["pending_centroids"]
@@ -194,15 +180,12 @@ def rebuild_ivfpq_index(
                 "ivfindex.replan_centroids on the full-vector sibling)"
             )
         refresh_ivfpq_index(spark, index_root)
-        st = _state(index_root)
+        st = store_state.read(os.path.join(index_root, _META))
         st["rebuilding"] = True
         st["pending_centroids"] = [
             [list(c), float(n)] for c, n in centroids
         ]
-        with open(
-            os.path.join(index_root, _META), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(st, fh)
+        store_state.write(os.path.join(index_root, _META), st)
     new_st = dict(st)
     new_st["centroids"] = [[list(c), float(n)] for c, n in centroids]
     cur = st["base_version"]
@@ -219,8 +202,7 @@ def rebuild_ivfpq_index(
     new_st["ref_cells"] = {
         str(c): n for c, n in _cell_counts(spark, index_root).items()
     }
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(new_st, fh)
+    store_state.write(os.path.join(index_root, _META), new_st)
     return cur
 
 
@@ -229,8 +211,8 @@ def refresh_ivfpq_index(spark: SparkSession, index_root: str) -> int:
     keyed merges on the vector id — deletes merge their single index row
     out; updates re-encode and re-assign in place (cross-cell moves
     included, the merge rewrites the row under its new cell partition)."""
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivfpq_index")
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -256,8 +238,7 @@ def refresh_ivfpq_index(spark: SparkSession, index_root: str) -> int:
             on=key, check_cardinality=False,
         )
     st["base_version"] = cur
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _META), st)
     return cur
 
 
@@ -270,8 +251,8 @@ def probe_ivfpq_index(
 ) -> DataFrame:
     """ADC top-k through the index — output contract identical to
     similarity.ivf_pq_topk (exact integer adc, total tie-break)."""
-    st = _state(index_root)
-    _check_not_rebuilding(st)
+    st = store_state.read(os.path.join(index_root, _META))
+    store_state.check_not_rebuilding(st, "rebuild_ivfpq_index")
     cents = [(list(c), float(n)) for c, n in st["centroids"]]
     codes_root = os.path.join(index_root, "codes")
     id_col = st["id_col"]

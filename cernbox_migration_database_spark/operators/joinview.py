@@ -41,12 +41,12 @@ replayed window is recovered, never double-applied.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from .table_format import (
     create_table,
     current_version,
@@ -113,28 +113,22 @@ def create_join_view(
         .join(read_table(spark, b_root, b_v).select(*on, *b_cols), on)
     )
     create_table(_bag(joined, out), mv_root)
-    with open(os.path.join(mv_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "a_root": a_root,
-                "b_root": b_root,
-                "on": on,
-                "a_key": a_key,
-                "b_key": b_key,
-                "a_cols": list(a_cols),
-                "b_cols": list(b_cols),
-                "a_version": a_v,
-                "b_version": b_v,
-                "fold_seq": 0,
-            },
-            fh,
-        )
+    store_state.write(
+        os.path.join(mv_root, _STATE),
+        {
+            "a_root": a_root,
+            "b_root": b_root,
+            "on": on,
+            "a_key": a_key,
+            "b_key": b_key,
+            "a_cols": list(a_cols),
+            "b_cols": list(b_cols),
+            "a_version": a_v,
+            "b_version": b_v,
+            "fold_seq": 0,
+        },
+    )
     return a_v, b_v
-
-
-def _state(mv_root: str) -> dict:
-    with open(os.path.join(mv_root, _STATE), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def refresh_join_view(spark: SparkSession, mv_root: str) -> tuple[int, int]:
@@ -149,7 +143,7 @@ def refresh_join_view(spark: SparkSession, mv_root: str) -> tuple[int, int]:
     commit log — the replayed refresh folds only changes AFTER the
     committed window instead of double-applying it (which would silently
     double n_dup on insert-only windows)."""
-    st = _state(mv_root)
+    st = store_state.read(os.path.join(mv_root, _STATE))
     a_root, b_root, on = st["a_root"], st["b_root"], st["on"]
     # Crash recovery: the commit log is the source of truth for what has
     # been folded. If the latest jv marker outruns the state file, the
@@ -161,8 +155,7 @@ def refresh_join_view(spark: SparkSession, mv_root: str) -> tuple[int, int]:
         win = committed["jv_window"]  # [a_from, b_from, a_to, b_to]
         st["a_version"], st["b_version"] = int(win[2]), int(win[3])
         st["fold_seq"] = seq0 = int(committed["txn_ver"])
-        with open(os.path.join(mv_root, _STATE), "w", encoding="utf-8") as fh:
-            json.dump(st, fh)
+        store_state.write(os.path.join(mv_root, _STATE), st)
     a0, b0 = st["a_version"], st["b_version"]
     a1, b1 = current_version(a_root), current_version(b_root)
     if (a0, b0) == (a1, b1):
@@ -212,8 +205,7 @@ def refresh_join_view(spark: SparkSession, mv_root: str) -> tuple[int, int]:
     )
     st["a_version"], st["b_version"] = a1, b1
     st["fold_seq"] = seq
-    with open(os.path.join(mv_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(mv_root, _STATE), st)
     return a1, b1
 
 
@@ -265,7 +257,7 @@ def read_join_view(
     """The served view: joined tuples with their ``n_dup`` multiplicity,
     or (``expand=True``) re-expanded to exact row-level bag parity with
     ``A JOIN B`` — a row-local generator, no shuffle."""
-    st = _state(mv_root)
+    st = store_state.read(os.path.join(mv_root, _STATE))
     out = st["on"] + st["a_cols"] + st["b_cols"]
     mv = read_table(spark, mv_root).select(*out, "n_dup")
     if not expand:

@@ -26,12 +26,12 @@ travels, and compacts. Like matview, refresh assumes a single maintainer
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from .table_format import (
     create_table,
     current_version,
@@ -66,29 +66,23 @@ def create_key_index(
     base_v = current_version(base_root)
     idx = _index_frame(read_table(spark, base_root, base_v), key, part_col)
     create_table(idx, index_root)
-    with open(os.path.join(index_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "base_root": base_root,
-                "base_version": base_v,
-                "key": key,
-                "part_col": part_col,
-            },
-            fh,
-        )
+    store_state.write(
+        os.path.join(index_root, _STATE),
+        {
+            "base_root": base_root,
+            "base_version": base_v,
+            "key": key,
+            "part_col": part_col,
+        },
+    )
     return base_v
-
-
-def _state(index_root: str) -> dict:
-    with open(os.path.join(index_root, _STATE), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def refresh_key_index(spark: SparkSession, index_root: str) -> int:
     """Advance the index to the base's current version from its change
     feed — upsert insert/update entries (post-image partition), delete
     removed keys. Never rescans the base."""
-    st = _state(index_root)
+    st = store_state.read(os.path.join(index_root, _STATE))
     cur = current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -122,8 +116,7 @@ def refresh_key_index(spark: SparkSession, index_root: str) -> int:
             check_cardinality=False,
         )
     st["base_version"] = cur
-    with open(os.path.join(index_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _STATE), st)
     return cur
 
 
@@ -134,7 +127,7 @@ def point_lookup(
     from the index (2-column scan, key filter pushed down), then read the
     base with partition + key filters so the scan touches only those
     partition directories. Returns the matching base rows."""
-    st = _state(index_root)
+    st = store_state.read(os.path.join(index_root, _STATE))
     idx = read_table(spark, index_root)
     parts = [
         r["__part"]

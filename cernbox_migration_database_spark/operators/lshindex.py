@@ -26,12 +26,12 @@ layout-internal and never compared cross-engine.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 from .dedup import BAND_SIZE, NUM_MINHASHES, _shingle_sets, minhash_signatures
 
@@ -119,14 +119,8 @@ def build_lsh_index(
         partition_by="bucket", distribute=True,
     )
     os.makedirs(index_root, exist_ok=True)
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _META), st)
     return st["base_version"]
-
-
-def _state(index_root: str) -> dict:
-    with open(os.path.join(index_root, _META), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def refresh_lsh_index(
@@ -143,7 +137,7 @@ def refresh_lsh_index(
     (state-version → current) window (clusterindex ingest) hand it over
     instead of paying the two snapshot scans again; it must carry
     ``_change_type`` with pre-images included."""
-    st = _state(index_root)
+    st = store_state.read(os.path.join(index_root, _META))
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -175,8 +169,7 @@ def refresh_lsh_index(
             on=key, when_matched=None, check_cardinality=False,
         )
     st["base_version"] = cur
-    with open(os.path.join(index_root, _META), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(index_root, _META), st)
     return cur
 
 
@@ -196,7 +189,7 @@ def probe_lsh_index(
     verification reads ONLY the candidate corpus documents' text
     (semi-join on candidate ids against the base snapshot). No stage
     touches the non-candidate corpus."""
-    st = _state(index_root)
+    st = store_state.read(os.path.join(index_root, _META))
     bands_root = os.path.join(index_root, "bands")
     id_col = st["id_col"]
     # one shingle pass for the batch, shared between signaturing and the

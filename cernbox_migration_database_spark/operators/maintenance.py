@@ -62,6 +62,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import store_state
 from . import table_format as TF
 
 # thresholds: conservative defaults, all overridable per call
@@ -116,9 +117,6 @@ def _price_store(spark: SparkSession, kind: str, sroot: str) -> dict:
     per-kind arm of the unified registry. Detection reads the store's
     own STATE (a JSON sidecar, KiB) plus at most one store aggregate
     (hist/ivf); never the base table's data."""
-    import json as _json
-    import os as _os
-
     if kind == "hist":
         from . import histstore as HS
 
@@ -190,7 +188,7 @@ def _price_store(spark: SparkSession, kind: str, sroot: str) -> dict:
     elif kind == "freq":
         from . import freqstore as FS
 
-        st = FS._state(sroot)
+        st = store_state.read(os.path.join(sroot, FS._STATE))
         rep = _lag_report(st["base_root"], st["base_version"])
         rep["needs_rescan"] = bool(st.get("needs_rescan"))
         rep["drifted"] = rep["needs_rescan"] or rep["versions_behind"] > 0
@@ -211,8 +209,7 @@ def _price_store(spark: SparkSession, kind: str, sroot: str) -> dict:
     elif kind == "text":
         from . import textindex as TX
 
-        with open(_os.path.join(sroot, TX._META), encoding="utf-8") as fh:
-            meta = _json.load(fh)
+        meta = store_state.read(os.path.join(sroot, TX._META))
         if meta.get("corpus_root") is None:
             rep = {"bound": False, "drifted": False}
             actions = []
@@ -239,10 +236,10 @@ def _price_store(spark: SparkSession, kind: str, sroot: str) -> dict:
             )
     elif kind in ("lsh", "key"):
         if kind == "lsh":
-            from . import lshindex as mod
+            from .lshindex import _META as sidecar
         else:
-            from . import keyindex as mod
-        st = mod._state(sroot)
+            from .keyindex import _STATE as sidecar
+        st = store_state.read(os.path.join(sroot, sidecar))
         rep = _lag_report(st["base_root"], st["base_version"])
         rep["drifted"] = rep["versions_behind"] > 0
         actions = (

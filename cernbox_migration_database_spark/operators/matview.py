@@ -25,12 +25,12 @@ groups are pruned by a follow-up delete-merge scoped to the delta's keys.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from .table_format import (
     create_table,
     current_version,
@@ -108,26 +108,20 @@ def create_aggregate_view(
         weight_col=weight_col,
     )
     create_table(mv, mv_root)
-    with open(os.path.join(mv_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "base_root": base_root,
-                "base_version": base_v,
-                "key": key,
-                "group_cols": group_cols,
-                "sum_cols": sum_cols,
-                "scale": scale,
-                "weight_col": weight_col,
-                "fold_seq": 0,
-            },
-            fh,
-        )
+    store_state.write(
+        os.path.join(mv_root, _STATE),
+        {
+            "base_root": base_root,
+            "base_version": base_v,
+            "key": key,
+            "group_cols": group_cols,
+            "sum_cols": sum_cols,
+            "scale": scale,
+            "weight_col": weight_col,
+            "fold_seq": 0,
+        },
+    )
     return base_v
-
-
-def _state(mv_root: str) -> dict:
-    with open(os.path.join(mv_root, _STATE), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def refresh_aggregate_view(spark: SparkSession, mv_root: str) -> int:
@@ -149,15 +143,14 @@ def refresh_aggregate_view(spark: SparkSession, mv_root: str) -> int:
     recovered refresh also runs the zero-group prune over the FULL view
     (the crashed run's delta is gone, so its emptied groups are not
     covered by the new delta's scope)."""
-    st = _state(mv_root)
+    st = store_state.read(os.path.join(mv_root, _STATE))
     committed = last_txn_entry(mv_root, _TXN_APP)
     seq0 = int(st.get("fold_seq", 0))
     recovered = committed is not None and committed["txn_ver"] > seq0
     if recovered:
         st["base_version"] = int(committed["mv_window"][1])
         st["fold_seq"] = seq0 = int(committed["txn_ver"])
-        with open(os.path.join(mv_root, _STATE), "w", encoding="utf-8") as fh:
-            json.dump(st, fh)
+        store_state.write(os.path.join(mv_root, _STATE), st)
     base_root, from_v = st["base_root"], st["base_version"]
     group_cols, sum_cols, scale = st["group_cols"], st["sum_cols"], st["scale"]
     cur = current_version(base_root)
@@ -210,8 +203,7 @@ def refresh_aggregate_view(spark: SparkSession, mv_root: str) -> int:
     )
     st["base_version"] = cur
     st["fold_seq"] = seq
-    with open(os.path.join(mv_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(mv_root, _STATE), st)
     return cur
 
 
@@ -235,7 +227,7 @@ def _prune_zero_groups(spark, mv_root: str, scope: DataFrame | None) -> None:
 def read_aggregate_view(spark: SparkSession, mv_root: str) -> DataFrame:
     """The served view: group columns, exact count, sums back in double
     (one terminal division — the stored integers stay exact)."""
-    st = _state(mv_root)
+    st = store_state.read(os.path.join(mv_root, _STATE))
     mv = read_table(spark, mv_root)
     out = [*st["group_cols"], F.col("n_rows")]
     out += [

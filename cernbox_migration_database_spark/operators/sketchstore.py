@@ -29,12 +29,12 @@ never bias membership.)
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 
 _STATE = "_kmv_state.json"
@@ -83,24 +83,18 @@ def build_kmv_store(
     TF.create_table(
         _topk(_hashes(docs, part_col, text_col), k), store_root
     )
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "base_root": base_root,
-                "base_version": base_v,
-                "part_col": part_col,
-                "text_col": text_col,
-                "key": key,
-                "k": k,
-            },
-            fh,
-        )
+    store_state.write(
+        os.path.join(store_root, _STATE),
+        {
+            "base_root": base_root,
+            "base_version": base_v,
+            "part_col": part_col,
+            "text_col": text_col,
+            "key": key,
+            "k": k,
+        },
+    )
     return base_v
-
-
-def _state(store_root: str) -> dict:
-    with open(os.path.join(store_root, _STATE), encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def refresh_kmv_store(spark: SparkSession, store_root: str) -> int:
@@ -108,7 +102,7 @@ def refresh_kmv_store(spark: SparkSession, store_root: str) -> int:
     + a merge over the k·#partitions-row state table. Raises on deletes /
     update pre-images in the window (see module doc) — rebuild those
     partitions instead."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -133,8 +127,7 @@ def refresh_kmv_store(spark: SparkSession, store_root: str) -> int:
         ch.where(F.col("_change_type").isin("insert", "update_postimage")),
     )
     st["base_version"] = cur
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
     return cur
 
 
@@ -178,7 +171,7 @@ def refresh_or_repair(
     sink's post_batch hook wants: RTBF deletes flow through and the
     estimates converge without intervention, and the repair stays loud in
     the return value — (new base version, partitions rebuilt)."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     cur = TF.current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur, []
@@ -224,7 +217,7 @@ def rebuild_partitions(
     window. Callers that already diffed a change window MUST pass the
     version they diffed to, so the recorded base_version never outruns
     the folded inserts."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     cur = TF.current_version(st["base_root"]) if version is None else version
     docs = TF.read_table(spark, st["base_root"], cur).where(
         F.col(st["part_col"]).isin(parts)
@@ -242,8 +235,7 @@ def rebuild_partitions(
         when_matched=None, check_cardinality=False,
     )
     st["base_version"] = cur
-    with open(os.path.join(store_root, _STATE), "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
+    store_state.write(os.path.join(store_root, _STATE), st)
 
 
 def estimate(
@@ -255,7 +247,7 @@ def estimate(
     selected states' union, estimator = (k-1) * 2^52 div kth-min, pure
     integer arithmetic (bit-identical to a from-scratch KMV over the same
     rows)."""
-    st = _state(store_root)
+    st = store_state.read(os.path.join(store_root, _STATE))
     states = TF.read_table(spark, store_root)
     outs = []
     for name, parts in scopes.items():

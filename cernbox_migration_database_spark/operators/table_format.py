@@ -72,6 +72,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from .merge import assert_exactly_one
 
 # Actions whose commit materializes/records a FULL uniform snapshot state:
@@ -274,8 +275,7 @@ def _dv_frame(spark: SparkSession, vdir: str, rels: list[str] | None = None):
 def _dv_counts(vdir: str) -> dict[str, int]:
     """Tombstones per partition rel ('' for unpartitioned), {} when none."""
     try:
-        with open(os.path.join(vdir, _DV_COUNTS), encoding="utf-8") as fh:
-            return json.load(fh)
+        return store_state.read(os.path.join(vdir, _DV_COUNTS))
     except FileNotFoundError:
         return {}
 
@@ -288,10 +288,7 @@ def _write_dv_counts(vdir: str, counts: dict[str, int]) -> None:
         if os.path.exists(path):
             os.unlink(path)
         return
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(counts, fh)
-    os.replace(tmp, path)
+    store_state.write(path, counts)
 
 
 def _rel_file_expr(n_pcols: int):
@@ -3514,10 +3511,7 @@ def create_tag(
     if os.path.exists(path) and not replace:
         raise FileExistsError(f"tag {name!r} already exists on {root}")
     entry = {"name": name, "version": v, "created_at": time.time()}
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(entry, fh)
-    os.replace(tmp, path)
+    store_state.write(path, entry)
     return entry
 
 
@@ -3541,16 +3535,14 @@ def list_tags(root: str) -> list[dict]:
     for n in names:
         if not n.endswith(".json") or n.endswith(".tmp"):
             continue
-        with open(os.path.join(tdir, n), encoding="utf-8") as fh:
-            out.append(json.load(fh))
+        out.append(store_state.read(os.path.join(tdir, n)))
     return out
 
 
 def resolve_tag(root: str, name: str) -> int:
     path = os.path.join(root, _TAGS, f"{name}.json")
     try:
-        with open(path, encoding="utf-8") as fh:
-            return int(json.load(fh)["version"])
+        return int(store_state.read(path)["version"])
     except FileNotFoundError:
         raise KeyError(f"no tag {name!r} on {root}")
 
@@ -3618,10 +3610,7 @@ def create_branch(root: str, name: str, version: int | None = None) -> str:
         v = current_version(root) if version is None else version
         clone_table(root, broot, v)
     meta = {"name": name, "base_version": v, "created_at": time.time()}
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)
+    store_state.write(path, meta)
     return broot
 
 
@@ -3656,8 +3645,7 @@ def list_branches(root: str) -> list[dict]:
     for n in names:
         p = _branch_meta_path(root, n)
         if os.path.exists(p):
-            with open(p, encoding="utf-8") as fh:
-                out.append(json.load(fh))
+            out.append(store_state.read(p))
     return out
 
 
@@ -3740,8 +3728,7 @@ def merge_branch(
             f"{on_conflict!r}"
         )
     broot = branch_root(root, name)
-    with open(_branch_meta_path(root, name), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(_branch_meta_path(root, name))
     base = int(meta["base_version"])
     # feed_base = the branch version whose changes a PRIOR merge already
     # applied to main (1 = the fork clone, nothing merged yet). Without
@@ -3766,11 +3753,7 @@ def merge_branch(
         meta["base_version"] = new_base
         meta["feed_base"] = head
         meta["ff_ok"] = mode == "ff"
-        mpath = _branch_meta_path(root, name)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, mpath)
+        store_state.write(_branch_meta_path(root, name), meta)
 
     bhist = history(broot)
     mhist = history(root)

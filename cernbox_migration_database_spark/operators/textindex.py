@@ -49,12 +49,12 @@ exactly-once streaming sink's txn markers), not the index.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from . import table_format as TF
 from . import text as TXT
 from ..util import ensure_parallelism, global_rank, topk_ranked
@@ -86,12 +86,11 @@ def build_text_index(
         .agg(F.countDistinct("doc_id"), F.sum("tfc"))
         .first()
     )
-    with open(os.path.join(base, _META), "w", encoding="utf-8") as fh:
-        json.dump(
-            {"n_buckets": n_buckets, "n_docs": int(n_docs),
-             "total_tokens": int(total)},
-            fh,
-        )
+    store_state.write(
+        os.path.join(base, _META),
+        {"n_buckets": n_buckets, "n_docs": int(n_docs),
+         "total_tokens": int(total)},
+    )
     return base
 
 
@@ -141,8 +140,7 @@ def bm25_probe(
     count-distinct over the already-pruned postings slice — probe cost is
     unchanged — and document frequencies stay corpus-wide (standard BM25
     idf is a term property, not a result-set property)."""
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     buckets = _term_buckets(spark, terms, meta["n_buckets"])
     # a term may hash to a bucket no corpus token ever claimed: intersect
     # with the manifest's partitions (driver-side metadata, no listing)
@@ -215,8 +213,7 @@ def phrase_probe(
     codegen."""
     if not phrase:
         raise ValueError("empty phrase")
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     terms = sorted(set(phrase))
     buckets = _term_buckets(spark, terms, meta["n_buckets"])
     have = {
@@ -284,8 +281,7 @@ def near_probe(
     then a row-local nested-HOF pair count over the positions arrays
     (per-doc term frequencies are small; the fold never leaves the
     row)."""
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     terms = sorted({first, second})
     buckets = _term_buckets(spark, terms, meta["n_buckets"])
     have = {
@@ -339,8 +335,7 @@ def refresh_text_index(
     the meta scalars, drifting idf/avgdl off the indexed==scan contract.
     The guard is one broadcast-semi pass over the postings (the batch's
     doc list is batch-sized) — refresh-time cost, never probe-time."""
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     toks = new_docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(TXT.tokens(text_col)).alias("pos", "tok"),
@@ -378,14 +373,7 @@ def refresh_text_index(
     ).first()
     meta["n_docs"] += int(add_docs)
     meta["total_tokens"] += int(add_tok or 0)
-    _write_meta(base, meta)
-
-
-def _write_meta(base: str, meta: dict) -> None:
-    tmp = os.path.join(base, _META + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(base, _META))
+    store_state.write(os.path.join(base, _META), meta)
 
 
 def _delete_posting_keys(
@@ -441,8 +429,7 @@ def fold_text_index_changes(
     Returns {"docs_removed", "tokens_removed", "docs_added",
     "tokens_added"} so callers can assert window accounting."""
     meta_path = os.path.join(base, _META)
-    with open(meta_path, encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(meta_path)
     removed = changes.where(
         F.col(change_col).isin("delete", "update_preimage")
     ).select(F.col(id_col).alias(id_col), text_col)
@@ -464,7 +451,7 @@ def fold_text_index_changes(
         meta["total_tokens"] -= nt
         # the meta decrement lands before the re-add so a crash between
         # the two commits leaves scalars consistent with the postings
-        _write_meta(base, meta)
+        store_state.write(meta_path, meta)
 
     na = ta = 0
     if not added.isEmpty():
@@ -476,8 +463,7 @@ def fold_text_index_changes(
         refresh_text_index(
             spark, base, added, text_col=text_col, id_col=id_col
         )
-        with open(meta_path, encoding="utf-8") as fh:
-            meta = json.load(fh)
+        meta = store_state.read(meta_path)
         ta = meta["total_tokens"] - before
     return {
         "docs_removed": nd,
@@ -501,8 +487,7 @@ def delete_docs_from_text_index(
             [(int(x),) for x in doc_ids], "doc_id bigint"
         )
     meta_path = os.path.join(base, _META)
-    with open(meta_path, encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(meta_path)
     victims = TF.read_table(spark, os.path.join(base, "postings")).join(
         F.broadcast(doc_ids.select("doc_id").distinct()),
         "doc_id",
@@ -512,7 +497,7 @@ def delete_docs_from_text_index(
     if nd:
         meta["n_docs"] -= nd
         meta["total_tokens"] -= nt
-        _write_meta(base, meta)
+        store_state.write(meta_path, meta)
     return nd
 
 
@@ -525,14 +510,13 @@ def bind_text_index(base: str, doc_root: str, version: int | None = None,
     correct when called right after ``build_text_index`` over the same
     snapshot. Records (corpus_root, corpus_version, key, text_col) in the
     meta sidecar; returns the bound version."""
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     v = TF.current_version(doc_root) if version is None else int(version)
     meta.update(
         {"corpus_root": doc_root, "corpus_version": v,
          "corpus_key": key, "corpus_text_col": text_col}
     )
-    _write_meta(base, meta)
+    store_state.write(os.path.join(base, _META), meta)
     return v
 
 
@@ -556,8 +540,7 @@ def sync_text_index(spark: SparkSession, base: str) -> int:
     the window's counts. Without this, a replayed delete window would
     silently double-decrement n_docs/total_tokens (the delete-merge
     no-ops on absent rows but the fold's counts come from the window)."""
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     root = meta.get("corpus_root")
     if root is None:
         raise ValueError(
@@ -566,8 +549,7 @@ def sync_text_index(spark: SparkSession, base: str) -> int:
         )
     if meta.get("pending"):
         _recover_window(spark, base, meta)
-        with open(os.path.join(base, _META), encoding="utf-8") as fh:
-            meta = json.load(fh)
+        meta = store_state.read(os.path.join(base, _META))
     last = int(meta["corpus_version"])
     cur = TF.current_version(root)
     if cur == last:
@@ -580,7 +562,7 @@ def sync_text_index(spark: SparkSession, base: str) -> int:
     meta["pending"] = [
         last, cur, TF.current_version(os.path.join(base, "postings"))
     ]
-    _write_meta(base, meta)
+    store_state.write(os.path.join(base, _META), meta)
     ch = TF.read_changes(
         spark, root, key=meta["corpus_key"],
         from_version=last, to_version=cur, include_preimage=True,
@@ -590,11 +572,10 @@ def sync_text_index(spark: SparkSession, base: str) -> int:
         text_col=meta["corpus_text_col"], id_col=meta["corpus_key"],
     )
     # fold rewrote the meta scalars — re-read before advancing the pointer
-    with open(os.path.join(base, _META), encoding="utf-8") as fh:
-        meta = json.load(fh)
+    meta = store_state.read(os.path.join(base, _META))
     meta["corpus_version"] = cur
     meta.pop("pending", None)
-    _write_meta(base, meta)
+    store_state.write(os.path.join(base, _META), meta)
     return cur
 
 
@@ -675,4 +656,4 @@ def _recover_window(spark: SparkSession, base: str, meta: dict) -> None:
     meta["total_tokens"] = int(row[1] or 0)
     meta["corpus_version"] = to
     meta.pop("pending", None)
-    _write_meta(base, meta)
+    store_state.write(os.path.join(base, _META), meta)

@@ -39,20 +39,13 @@ table, main.go:217-240); a training-data pipeline routinely needs
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import store_state
 from . import table_format as TF
-
-
-def _atomic_write_json(path: str, payload: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(payload, fh, indent=1)
-    os.replace(tmp, path)
 
 
 def _txn_dir(catalog_path: str) -> str:
@@ -69,13 +62,12 @@ def create_catalog(catalog_path: str, tables: dict[str, str]) -> dict:
             for name, root in tables.items()
         },
     }
-    _atomic_write_json(catalog_path, cat)
+    store_state.write(catalog_path, cat)
     return cat
 
 
 def read_catalog(catalog_path: str) -> dict:
-    with open(catalog_path, encoding="utf-8") as fh:
-        return json.load(fh)
+    return store_state.read(catalog_path)
 
 
 def catalog_table(
@@ -122,7 +114,7 @@ class MultiTableTxn:
 
     def _write_intent(self) -> None:
         cat = read_catalog(self.catalog_path)
-        _atomic_write_json(
+        store_state.write(
             self._intent_path,
             {
                 "txn_id": self.txn_id,
@@ -165,7 +157,7 @@ class MultiTableTxn:
             raise ValueError("nothing staged")
         self._state = "committing"
         self._write_intent()
-        _roll_forward(self.catalog_path, json.load(open(self._intent_path)))
+        _roll_forward(self.catalog_path, store_state.read(self._intent_path))
         self._state = "committed"
         self._write_intent()
         return dict(self.staged)
@@ -174,7 +166,7 @@ class MultiTableTxn:
         """Release every staged claim; nothing was ever visible."""
         if self._state != "staging":
             raise ValueError(f"txn {self.txn_id} is {self._state}")
-        _roll_back(json.load(open(self._intent_path))
+        _roll_back(store_state.read(self._intent_path)
                    if os.path.exists(self._intent_path)
                    else {"staged": {}})
         self._state = "aborted"
@@ -354,7 +346,7 @@ def _roll_forward(catalog_path: str, intent: dict) -> None:
                 changed = True
         if changed:
             cat["seq"] += 1
-            _atomic_write_json(catalog_path, cat)
+            store_state.write(catalog_path, cat)
 
 
 def _roll_back(intent: dict) -> None:
@@ -380,17 +372,16 @@ def recover(catalog_path: str) -> dict[str, str]:
         if not fn.endswith(".json") or fn.endswith(".tmp"):
             continue
         path = os.path.join(tdir, fn)
-        with open(path, encoding="utf-8") as fh:
-            intent = json.load(fh)
+        intent = store_state.read(path)
         state = intent.get("state")
         if state == "committing":
             _roll_forward(catalog_path, intent)
             intent["state"] = "committed"
-            _atomic_write_json(path, intent)
+            store_state.write(path, intent)
             actions[intent["txn_id"]] = "rolled_forward"
         elif state == "staging":
             _roll_back(intent)
             intent["state"] = "aborted"
-            _atomic_write_json(path, intent)
+            store_state.write(path, intent)
             actions[intent["txn_id"]] = "rolled_back"
     return actions

@@ -38,12 +38,10 @@ by a type check at build time.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_state
 from .table_format import current_version, partition_scheme, read_changes, read_table
 
 _SUPPORTED_PREFIXES = (
@@ -101,18 +99,6 @@ def _bounds(df: DataFrame, col: str, part_col: str) -> dict:
     }
 
 
-def _write_state(index_path: str, st: dict) -> None:
-    tmp = index_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(st, fh)
-    os.replace(tmp, index_path)
-
-
-def _read_state(index_path: str) -> dict:
-    with open(index_path, encoding="utf-8") as fh:
-        return json.load(fh)
-
-
 def create_zone_map(
     spark: SparkSession, base_root: str, index_path: str, col: str, key: str
 ) -> int:
@@ -140,7 +126,7 @@ def create_zone_map(
             for p, b in _bounds(base, col, part_col).items()
         },
     }
-    _write_state(index_path, st)
+    store_state.write(index_path, st)
     return base_v
 
 
@@ -148,7 +134,7 @@ def refresh_zone_map(spark: SparkSession, index_path: str) -> int:
     """Widen bounds from the base change feed: insert/update post-images
     fold in via min/max merge; deletes are no-ops by design (bounds stay
     wide — false-positive partition reads, never misses)."""
-    st = _read_state(index_path)
+    st = store_state.read(index_path)
     cur = current_version(st["base_root"])
     if cur == st["base_version"]:
         return cur
@@ -172,7 +158,7 @@ def refresh_zone_map(spark: SparkSession, index_path: str) -> int:
                 cur_b["hi"] = b["hi"]
             cur_b["has_null"] = cur_b["has_null"] or b["has_null"]
     st["base_version"] = cur
-    _write_state(index_path, st)
+    store_state.write(index_path, st)
     return cur
 
 
@@ -190,7 +176,7 @@ def range_prune_scan(
     widened a partition's true bounds (or created a partition with no
     zone at all), and pruning with the stale map would silently MISS
     those rows. Refresh first; the fold is O(changed rows)."""
-    st = _read_state(index_path)
+    st = store_state.read(index_path)
     cur = current_version(st["base_root"])
     if cur != st["base_version"]:
         raise ValueError(
@@ -244,7 +230,7 @@ def zone_debt_report(
     by ``maintenance.apply_maintenance``."""
     from .table_format import manifest
 
-    st = _read_state(index_path)
+    st = store_state.read(index_path)
     cur = current_version(st["base_root"])
     col, part_col = st["col"], st["part_col"]
     prefix = part_col + "="
@@ -310,7 +296,7 @@ def rebuild_zone_map(spark: SparkSession, index_path: str) -> int:
     """Re-tighten every bound from the base's CURRENT snapshot under the
     map's own recorded column/key — the repair :func:`zone_debt_report`
     prescribes. One aggregate scan; retired partitions drop out."""
-    st = _read_state(index_path)
+    st = store_state.read(index_path)
     return create_zone_map(
         spark, st["base_root"], index_path, col=st["col"], key=st["key"]
     )

@@ -1383,7 +1383,10 @@ def heavy_hitters_store(spark, sf_dir):
 
 def _freq_store_build(spark, sf_dir):
     """Build phase: 80% build, insert fold, RTBF delete fold."""
+    import os
+
     from ..operators import freqstore as FS
+    from ..operators import store_state
     from ..operators import table_format as TF
 
     root = _versioned_scratch("freqstore", sf_dir)
@@ -1400,7 +1403,7 @@ def _freq_store_build(spark, sf_dir):
     FS.refresh_freq_store(spark, store)
     TF.delete_where(spark, base, "doc_id % 100 = 17")
     FS.refresh_freq_store(spark, store)
-    st = FS._state(store)
+    st = store_state.read(os.path.join(store, FS._STATE))
     assert st["needs_rescan"] is False, st  # mild shrink: margin holds
     return store
 

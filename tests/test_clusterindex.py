@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import clusterindex as CI
 from cernbox_migration_database_spark.operators import lshindex as LX
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 
 _T1 = "alpha beta gamma delta epsilon zeta eta theta"
@@ -93,7 +94,7 @@ def test_ingest_bridging_batch_equals_rebuild(spark, tmp_path):
     _, _, cl2 = _mk(spark, tmp_path, corpus=final, tag="2")
     assert got == _cmap(spark, cl2)
     # the index advanced with the ingest: a later batch sees doc 10
-    assert LX._state(idx)["base_version"] == TF.current_version(base)
+    assert store_state.read(os.path.join(idx, LX._META))["base_version"] == TF.current_version(base)
 
 
 def test_ingest_no_edges_makes_singletons_and_chains(spark, tmp_path):

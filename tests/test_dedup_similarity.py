@@ -114,6 +114,43 @@ def test_simhash_packed_matches_per_bit_reference(spark):
         assert got[row["doc_id"]] == sig
 
 
+def test_simhash_refuses_documents_at_the_packed_counter_limit(spark):
+    """The 21-bit slices are exact only below 2^21 distinct tokens per
+    document: a document just below the limit keeps its per-bit
+    signature, and one at the limit fails the query instead of returning
+    bits a slice carry may have flipped."""
+    import hashlib
+
+    import numpy as np
+
+    limit = 1 << 21
+
+    def doc(n):
+        # the signature aggregates (doc, token) rows, so n single-token
+        # rows under one doc_id form the same group as one n-token text,
+        # without a 16 MB cell split into a 2M-element array on one task
+        return spark.range(n).select(
+            F.lit(0).cast("long").alias("doc_id"),
+            F.concat(F.lit("t"), F.col("id").cast("string")).alias("text"),
+        )
+
+    n = limit - 1
+    # bit j of a token = bit (63 - j) of the first 16 md5 hex digits
+    words = np.array(
+        [int(hashlib.md5(f"t{i}".encode()).hexdigest()[:16], 16)
+         for i in range(n)],
+        dtype=np.uint64,
+    )
+    sums = [
+        int(((words >> np.uint64(63 - j)) & np.uint64(1)).sum())
+        for j in range(64)
+    ]
+    want = "".join("1" if 2 * s - n >= 0 else "0" for s in sums)
+    assert simhash64(doc(n)).first()["simhash"] == want
+    with pytest.raises(Exception, match="exact only below 2\\^21"):
+        simhash64(doc(limit)).collect()
+
+
 def _vecs(spark):
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0], 0),

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import freqstore as FS
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as T
 
 
@@ -72,7 +73,7 @@ def test_folds_equal_rebuild_all_change_types(spark, tmp_path):
     FS.build_freq_store(spark, base, scratch, key="doc_id",
                         theta_num=1, theta_den=5)
     assert _sketch(spark, store) == _sketch(spark, scratch)
-    assert FS._state(store)["total"] == FS._state(scratch)["total"]
+    assert store_state.read(os.path.join(store, FS._STATE))["total"] == store_state.read(os.path.join(scratch, FS._STATE))["total"]
     # candidates: 'b' is now heavy (6 of 17), 'a' fell to 3 of 17
     got = _hh(spark, store)
     assert set(got) == {"b"}
@@ -87,7 +88,7 @@ def test_noop_refresh_and_double_apply_guard(spark, tmp_path):
     FS.refresh_freq_store(spark, store)
     # forge a replay: reset fold_seq + base_version as if the fold never
     # happened — the negative-counter guard must refuse the double apply
-    st = FS._state(store)
+    st = store_state.read(os.path.join(store, FS._STATE))
     st["fold_seq"] = 0
     st["base_version"] = 1
     with open(os.path.join(store, FS._STATE), "w", encoding="utf-8") as fh:
@@ -112,7 +113,7 @@ def test_deletion_drift_flags_and_rescan_repairs(spark, tmp_path):
     # 'z' (untouched) is now dominant but was never vetted
     T.delete_where(spark, base, "doc_id < 100")
     FS.refresh_freq_store(spark, store)
-    st = FS._state(store)
+    st = store_state.read(os.path.join(store, FS._STATE))
     assert st["needs_rescan"] is True
     with pytest.raises(ValueError, match="rescan"):
         FS.heavy_hitters(spark, store)
@@ -181,13 +182,13 @@ def test_grow_then_shrink_trips_rescan_via_vet_anchor(spark, tmp_path):
     ]
     T.merge_into(spark, base, _docs(spark, filler), on="doc_id")
     FS.refresh_freq_store(spark, store)
-    st = FS._state(store)
+    st = store_state.read(os.path.join(store, FS._STATE))
     assert st["total"] == 40 and st["vet_total"] == 40  # ratcheted up
     assert T.read_table(spark, store + "/cand").count() == 0
     # shrink back to 10: z (untouched by either window) is heavy again
     T.delete_where(spark, base, "doc_id >= 10")
     FS.refresh_freq_store(spark, store)
-    st = FS._state(store)
+    st = store_state.read(os.path.join(store, FS._STATE))
     assert st["total"] == 10
     assert st["needs_rescan"] is True  # 2·10 < 40, the ratcheted anchor
     with pytest.raises(ValueError, match="rescan"):
@@ -195,7 +196,7 @@ def test_grow_then_shrink_trips_rescan_via_vet_anchor(spark, tmp_path):
     FS.rescan_candidates(spark, store)
     got = _hh(spark, store)
     assert set(got) == {"z"} and got["z"] >= 3
-    assert FS._state(store)["vet_total"] == 10  # full vet re-anchors down
+    assert store_state.read(os.path.join(store, FS._STATE))["vet_total"] == 10  # full vet re-anchors down
 
 
 def test_crash_between_sketch_commit_and_vet_recovers_the_vet(
@@ -221,7 +222,7 @@ def test_crash_between_sketch_commit_and_vet_recovers_the_vet(
         FS.refresh_freq_store(spark, store)
     monkeypatch.setattr(FS, "_revet", real)
     # sketch committed, state + candidates stale — 'k' is not yet vetted
-    assert FS._state(store)["fold_seq"] == 0
+    assert store_state.read(os.path.join(store, FS._STATE))["fold_seq"] == 0
     assert "k" not in {
         r["token"]
         for r in T.read_table(spark, store + "/cand").collect()
@@ -229,7 +230,7 @@ def test_crash_between_sketch_commit_and_vet_recovers_the_vet(
     # the next refresh adopts the committed fold AND redoes the vet
     v = FS.refresh_freq_store(spark, store)
     assert v == T.current_version(base)
-    st = FS._state(store)
+    st = store_state.read(os.path.join(store, FS._STATE))
     assert st["fold_seq"] == 1
     got = _hh(spark, store)
     assert got.get("k", 0) >= 8  # served — the window's riser was vetted

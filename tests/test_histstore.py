@@ -9,10 +9,13 @@ bit-for-bit across ALL THREE change types — the KMV store can't do that
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import histstore as HS
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 
 NBINS = 8
@@ -70,14 +73,14 @@ def _scratch_hist(spark, base, st):
 
 def test_build_counts_match_scratch(spark, tmp_path):
     base, store = _mk(spark, tmp_path)
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     assert _hist_rows(spark, store) == _scratch_hist(spark, base, st)
     assert sum(n for _, _, n in _hist_rows(spark, store)) == len(_ROWS)
 
 
 def test_insert_delete_update_folds_equal_rebuild(spark, tmp_path):
     base, store = _mk(spark, tmp_path)
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     # insert window — includes values OUTSIDE the frozen [lo, hi] on both
     # sides, exercising edge-bin clamping
     TF.merge_into(
@@ -117,10 +120,9 @@ def test_double_applied_window_raises(spark, tmp_path):
     HS.refresh_hist_store(spark, store)
     # rewind the recorded base version to re-fold the same delete window:
     # the second application must be loud, not a silent corruption
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     st["base_version"] -= 1
     import json
-    import os
 
     with open(os.path.join(store, HS._STATE), "w", encoding="utf-8") as fh:
         json.dump(st, fh)
@@ -140,7 +142,7 @@ def test_noop_refresh_and_quantile_scopes(spark, tmp_path):
     assert set(got) == {
         ("all", "p50"), ("all", "p100"), ("ab", "p50"), ("ab", "p100")
     }
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     lo, span, nbins = st["lo"], st["span"], st["nbins"]
     # hand oracle: bin of the ceil-rank-th value, served as lower edge
     import math
@@ -175,7 +177,7 @@ def test_streaming_sink_maintains_store_through_post_batch(spark, tmp_path):
     )
 
     base, store = _mk(spark, tmp_path)
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     apply = exactly_once_batch_writer(
         base, app_id="hist", key="k",
         post_batch=lambda sp: HS.refresh_hist_store(sp, store),
@@ -202,10 +204,9 @@ def test_crash_between_fold_commit_and_state_write_is_recovered(
     commit log and folds only what came after, instead of double-applying
     the window into the counts."""
     import json
-    import os
 
     base, store = _mk(spark, tmp_path)
-    st0 = HS._state(store)
+    st0 = store_state.read(os.path.join(store, HS._STATE))
     pre_fold_state = json.dumps(st0)
     TF.delete_where(spark, base, "k = 4")  # alone in its bin
     HS.refresh_hist_store(spark, store)
@@ -219,7 +220,7 @@ def test_crash_between_fold_commit_and_state_write_is_recovered(
     )
     HS.refresh_hist_store(spark, store)
     assert _hist_rows(spark, store) == _scratch_hist(spark, base, st0)
-    assert HS._state(store)["base_version"] == TF.current_version(base)
+    assert store_state.read(os.path.join(store, HS._STATE))["base_version"] == TF.current_version(base)
 
 
 def test_drift_flag_and_rebuild_with_new_edges(spark, tmp_path):
@@ -251,7 +252,7 @@ def test_drift_flag_and_rebuild_with_new_edges(spark, tmp_path):
 
     # rebuild re-freezes edges from the current snapshot
     v = HS.rebuild_hist_store(spark, store)
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     assert st["lo"] == 1000 and st["span"] == 51900 - 1000 + 1
     assert st["n_added"] == 0 and st["n_clamped"] == 0
     # rebuilt state == a from-scratch build over the same snapshot
@@ -261,12 +262,12 @@ def test_drift_flag_and_rebuild_with_new_edges(spark, tmp_path):
         part_col="part", value_col="price", key="k", nbins=NBINS,
     )
     assert _hist_rows(spark, store) == _hist_rows(spark, scratch_store)
-    assert HS._state(scratch_store)["ref_dist"] == st["ref_dist"]
+    assert store_state.read(os.path.join(scratch_store, HS._STATE))["ref_dist"] == st["ref_dist"]
     assert HS.drift_report(spark, store)["drifted"] is False
     # the rebuilt store keeps folding incrementally
     TF.delete_where(spark, base, "k = 105")
     assert HS.refresh_hist_store(spark, store) > v - 1
-    st2 = HS._state(store)
+    st2 = store_state.read(os.path.join(store, HS._STATE))
     assert _hist_rows(spark, store) == _scratch_hist(spark, base, st2)
 
 
@@ -312,7 +313,7 @@ def test_crashed_rebuild_is_loud_and_repairable(spark, tmp_path, monkeypatch):
 
     # the store is mid-repair: state table emptied, sidecar still holds
     # the pre-rebuild edges — every consumer must refuse to touch it
-    assert HS._state(store)["rebuilding"] is True
+    assert store_state.read(os.path.join(store, HS._STATE))["rebuilding"] is True
     for fn in (
         lambda: HS.refresh_hist_store(spark, store),
         lambda: HS.estimate_quantiles(spark, store, {"all": None}).collect(),
@@ -323,7 +324,7 @@ def test_crashed_rebuild_is_loud_and_repairable(spark, tmp_path, monkeypatch):
 
     # re-running the rebuild completes the repair exactly
     HS.rebuild_hist_store(spark, store)
-    st = HS._state(store)
+    st = store_state.read(os.path.join(store, HS._STATE))
     assert st["rebuilding"] is False
     scratch_store = str(tmp_path / "scratch_crash")
     HS.build_hist_store(
@@ -336,5 +337,5 @@ def test_crashed_rebuild_is_loud_and_repairable(spark, tmp_path, monkeypatch):
     TF.delete_where(spark, base, "k = 101")
     HS.refresh_hist_store(spark, store)
     assert _hist_rows(spark, store) == _scratch_hist(
-        spark, base, HS._state(store)
+        spark, base, store_state.read(os.path.join(store, HS._STATE))
     )

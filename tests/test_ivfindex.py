@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import ivfindex as IX
 from cernbox_migration_database_spark.operators import similarity as S
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 
 
@@ -298,7 +299,7 @@ def test_crashed_rebuild_is_loud_and_resumable(spark, tmp_path, monkeypatch):
         IX.rebuild_ivf_index(spark, idx, new_cents)
     monkeypatch.setattr(TF, "merge_into", real)
 
-    assert IX._state(idx)["rebuilding"] is True
+    assert store_state.read(os.path.join(idx, IX._META))["rebuilding"] is True
     queries = _emb(spark, [0])
     for fn in (
         lambda: IX.refresh_ivf_index(spark, idx),
@@ -311,7 +312,7 @@ def test_crashed_rebuild_is_loud_and_resumable(spark, tmp_path, monkeypatch):
 
     # resume: centroids=None picks up the staged plan
     IX.rebuild_ivf_index(spark, idx)
-    st = IX._state(idx)
+    st = store_state.read(os.path.join(idx, IX._META))
     assert st["rebuilding"] is False and "pending_centroids" not in st
     assert len(st["centroids"]) == 4
     # equals a from-scratch build under the staged centroids

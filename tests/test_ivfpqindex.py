@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import ivfpqindex as PQ
 from cernbox_migration_database_spark.operators import similarity as S
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 
 
@@ -159,7 +160,7 @@ def test_ivfpq_rebuild_reassigns_cells_and_is_crash_safe(
     with pytest.raises(RuntimeError, match="crash mid-rebuild"):
         PQ.rebuild_ivfpq_index(spark, idx, new_cents)
     monkeypatch.setattr(TF, "merge_into", real)
-    assert PQ._state(idx)["rebuilding"] is True
+    assert store_state.read(os.path.join(idx, PQ._META))["rebuilding"] is True
     queries = _emb(spark, [0, 1])
     for fn in (
         lambda: PQ.refresh_ivfpq_index(spark, idx),
@@ -170,7 +171,7 @@ def test_ivfpq_rebuild_reassigns_cells_and_is_crash_safe(
             fn()
     # resume picks up the staged plan
     PQ.rebuild_ivfpq_index(spark, idx)
-    st = PQ._state(idx)
+    st = store_state.read(os.path.join(idx, PQ._META))
     assert st["rebuilding"] is False and "pending_centroids" not in st
     assert len(st["centroids"]) == 3
     # rebuilt == from-scratch build under the new coarse set (codes

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import dedup as D
 from cernbox_migration_database_spark.operators import lshindex as LX
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 
 _BASE = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -239,7 +240,7 @@ def test_base_compaction_is_a_content_noop_for_refresh(spark, tmp_path):
         for r in TF.read_table(spark, os.path.join(idx, "bands")).collect()
     )
     assert after == before
-    assert LX._state(idx)["base_version"] == TF.current_version(base)
+    assert store_state.read(os.path.join(idx, LX._META))["base_version"] == TF.current_version(base)
 
 
 def test_probe_filters_self_pairs_of_already_indexed_docs(spark, tmp_path):

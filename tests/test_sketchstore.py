@@ -19,6 +19,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators import sketchstore as KS
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 
 K = 8
@@ -255,7 +256,7 @@ def test_concurrent_base_commit_during_repair_is_not_skipped(
     monkeypatch.undo()
     assert rebuilt == ["en"]
     # the racy fr commit must remain unfolded: recorded base_version == cur
-    st = KS._state(store)
+    st = store_state.read(os.path.join(store, KS._STATE))
     assert st["base_version"] == cur == TF.current_version(base) - 1
     # ... and the NEXT refresh folds it, converging to from-scratch
     KS.refresh_or_repair(spark, store)

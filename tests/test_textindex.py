@@ -7,6 +7,7 @@ import os
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import textindex as TI
 
 
@@ -471,7 +472,7 @@ def test_sync_recovers_crashed_window_at_all_crash_points(spark, tmp_path):
         m = meta()
         m["pending"] = [v0, v1, p_start]
         m["corpus_version"] = v0
-        TI._write_meta(base, m)
+        store_state.write(os.path.join(base, TI._META), m)
 
     # shape 1: fold never ran
     set_pending(p0)
@@ -515,7 +516,7 @@ def test_sync_recovers_crashed_window_at_all_crash_points(spark, tmp_path):
     )
     m2 = json.load(open(os.path.join(base2, TI._META)))
     m2["pending"] = [v0, v1, p2]
-    TI._write_meta(base2, m2)
+    store_state.write(os.path.join(base2, TI._META), m2)
     TI.sync_text_index(spark, base2)
     m2 = json.load(open(os.path.join(base2, TI._META)))
     got2 = (

@@ -5,6 +5,7 @@ import os
 
 import pytest
 
+from cernbox_migration_database_spark.operators import store_state
 from cernbox_migration_database_spark.operators import table_format as TF
 from cernbox_migration_database_spark.operators import txn as TX
 
@@ -152,7 +153,7 @@ def test_catalog_lock_mutual_exclusion_and_stale_break(tmp_path):
     import time as _time
 
     cat = str(tmp_path / "c.json")
-    TX._atomic_write_json(cat, {"seq": 1, "tables": {}})
+    store_state.write(cat, {"seq": 1, "tables": {}})
     order = []
     lk = TX._CatalogLock(cat)
     lk.__enter__()
@@ -209,7 +210,7 @@ def test_stale_break_is_single_winner_and_spares_fresh_locks(tmp_path):
     import time as _time
 
     cat = str(tmp_path / "c.json")
-    TX._atomic_write_json(cat, {"seq": 1, "tables": {}})
+    store_state.write(cat, {"seq": 1, "tables": {}})
     lockdir = cat + ".lock"
 
     # 1) genuinely stale lock: broken, path freed
@@ -246,7 +247,7 @@ def test_stale_break_owner_token_guards(tmp_path):
     import time as _time
 
     cat = str(tmp_path / "c.json")
-    TX._atomic_write_json(cat, {"seq": 1, "tables": {}})
+    store_state.write(cat, {"seq": 1, "tables": {}})
     lockdir = cat + ".lock"
     old = _time.time() - 120
 
@@ -307,7 +308,7 @@ def test_release_rename_capture_spares_instant_reclaim(tmp_path, monkeypatch):
     import shutil
 
     cat = str(tmp_path / "c.json")
-    TX._atomic_write_json(cat, {"seq": 1, "tables": {}})
+    store_state.write(cat, {"seq": 1, "tables": {}})
     lockdir = cat + ".lock"
 
     holder = TX._CatalogLock(cat)
