@@ -63,6 +63,7 @@ IS the object-store answer (planning never lists directories):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -73,7 +74,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import store_state
-from .merge import assert_exactly_one
 
 # Actions whose commit materializes/records a FULL uniform snapshot state:
 # the schema-evolution window, active-rename chain, and evolved-mix flag all
@@ -778,35 +778,45 @@ def last_txn_entry(root: str, app_id: str) -> dict | None:
     return best
 
 
-# r13: per-process memo of INFERRED parquet schemas for snapshot reads.
-# A committed version directory is immutable (writers stage + rename, never
+# Per-process memo of INFERRED parquet schemas for snapshot reads. A
+# committed version directory is immutable (writers stage + rename, never
 # mutate), yet every spark.read.parquet() of it re-ran footer schema
 # inference as a 1-task driver job — one extra job per read_table /
-# scan_partitions execution, which the warm probe loops pay repeatedly
-# (guide §1.2 per-task work / §6 planning cost). The key pins the exact
-# read shape (dir or explicit file list) plus the directory mtime, so a
-# scratch-root recreate at the same path re-infers; a hit replays Spark's
-# own previously-inferred schema for byte-identical files — never a
-# hand-written one.
+# scan_partitions execution, which the warm probe loops pay repeatedly.
+# The key is the version dir, the read shape (whole dir or file list) and a
+# digest of the (path, size, mtime_ns) identity of every manifest entry the
+# read covers: a table recreated at the same root has new files, so it
+# re-infers even when the directory mtime repeats. A hit replays Spark's
+# own previously-inferred schema for the same files — never a hand-written
+# one. The oldest entry is evicted past _SCHEMA_MEMO_MAX keys.
+_SCHEMA_MEMO_MAX = 256
 _SNAPSHOT_SCHEMA_CACHE: dict[tuple, object] = {}
 
 
-def _memo_schema_parquet(reader, vdir: str, paths: list[str] | None):
-    """``reader.parquet(...)`` with schema inference memoized per
-    immutable (vdir, mtime, file-list) read shape."""
-    try:
-        mt = os.path.getmtime(vdir)
-    except OSError:
-        mt = 0.0
-    key = (vdir, mt, tuple(paths) if paths is not None else None)
+def _memo_schema_parquet(
+    reader, vdir: str, entries: list[dict] | None, whole_dir: bool
+):
+    """``reader.parquet(...)`` of the whole version dir (``whole_dir``) or of
+    the manifest ``entries``' files, with schema inference memoized on the
+    entries' identity (no memo when the manifest could not be read)."""
+    key = None
+    if entries is not None:
+        h = hashlib.blake2b(digest_size=16)
+        for e in entries:
+            h.update(f"{e['path']}\0{e['size']}\0{e.get('mtime_ns')}\n".encode())
+        key = (vdir, whole_dir, h.digest())
     sch = _SNAPSHOT_SCHEMA_CACHE.get(key)
     if sch is not None:
         reader = reader.schema(sch)
-    if paths is None:
+    if whole_dir:
         df = reader.parquet(vdir)
     else:
-        df = reader.option("basePath", vdir).parquet(*paths)
-    if sch is None:
+        df = reader.option("basePath", vdir).parquet(
+            *[os.path.join(vdir, e["path"]) for e in entries]
+        )
+    if key is not None and sch is None:
+        if len(_SNAPSHOT_SCHEMA_CACHE) >= _SCHEMA_MEMO_MAX:
+            _SNAPSHOT_SCHEMA_CACHE.pop(next(iter(_SNAPSHOT_SCHEMA_CACHE)), None)
         _SNAPSHOT_SCHEMA_CACHE[key] = df.schema
     return df
 
@@ -848,7 +858,7 @@ def read_table(
             return empty
     df = _apply_renames(
         _apply_dv(
-            spark, _memo_schema_parquet(reader, vdir, None), vdir, len(pcols)
+            spark, _memo_schema_parquet(reader, vdir, entries, True), vdir, len(pcols)
         ),
         renames,
     )
@@ -1367,8 +1377,14 @@ def merge_into(
     ``'delete'`` (matched target rows are dropped), or None (leave matched
     rows untouched). ``when_not_matched``: ``'insert'`` or None. Source
     must carry the full table schema when inserting/updating and must be
-    key-unique (A2 cardinality assertion, main.go:232-238 — checked BEFORE
-    any write).
+    key-unique (the A2 cardinality assertion, main.go:232-238;
+    ``check_cardinality=False`` skips it).
+
+    Before it claims a version, the merge runs ONE pre-write pass, a
+    single collect bounded by partition count: it raises on a duplicate
+    source key and finds the partitions the merge can change (each matched
+    row's partition, the destination of an update that moves a row, and
+    each insert's partition). Nothing is claimed or written when it raises.
 
     ``matched_condition`` is the ``WHEN MATCHED AND <cond>`` clause:
     a callable ``(target_cols, source_cols) -> Column`` over two
@@ -1389,12 +1405,13 @@ def merge_into(
     their target values on update and insert as null.
 
     Copy-on-write (``write_mode='cow'``, default): with a partitioned
-    table, only partitions containing a matched key or an insert are
-    rewritten; the rest hardlink forward. ``write_mode='mor'`` commits
-    MERGE-ON-READ instead: matched target rows are tombstoned via
-    ``_dv/`` position deletes and the merge output (updates + inserts)
-    lands in freshly APPENDED files — no existing file is rewritten, so a
-    small-source merge into huge partitions costs O(source rows), not
+    table, only the partitions that pass found are rewritten; the rest
+    hardlink forward. ``write_mode='mor'`` commits MERGE-ON-READ instead
+    and scans only those partitions of the target: matched target rows
+    are tombstoned via ``_dv/`` position deletes and the merge output
+    (updates + inserts) lands in freshly APPENDED files — no existing file
+    is rewritten, so a small-source merge into huge partitions costs
+    O(source rows), not
     O(rows of every touched partition). ``publish=False`` stages the
     merge WITHOUT moving the pointer (write-audit-publish): the returned
     version's directory is complete and auditable via
@@ -1412,12 +1429,6 @@ def merge_into(
     if write_mode not in ("cow", "mor"):
         raise ValueError(f"write_mode must be cow|mor, got {write_mode!r}")
     keys = [on] if isinstance(on, str) else list(on)
-    # The A2 cardinality assertion runs below: either fused into the
-    # touched-partition discovery job (partitioned COW fast path — one
-    # collect instead of three blocking driver jobs, r13 guide §5) or as
-    # the standalone pre-write check on every other path. Both raise the
-    # same ValueError BEFORE any version claim or write.
-    cardinality_checked = False
 
     base_v = current_version(root)
     if write_mode == "mor":
@@ -1458,189 +1469,97 @@ def merge_into(
             f"(must be table columns, not merge keys)"
         )
 
-    if pcols:
-        # Touched partitions = partitions of matched target rows ∪ the
-        # DESTINATION partitions matched updates move rows to ∪ partitions
-        # where inserts land. All are metadata-sized collects (bounded by
-        # partition count, never table rows).
-        matched_parts_df = (
-            target.join(source.select(*keys).distinct(), keys, "left_semi")
-            .select(*pcols)
-            .distinct()
-        )
-        matched_parts: set | None = None
-        if write_mode == "mor":
-            matched_parts = {tuple(r) for r in matched_parts_df.collect()}
-            # Merge-on-read rewrites nothing, so the target scan only needs
-            # the partitions holding a matched key (for the update/delete
-            # images and the insert anti-detection: a source key matching
-            # ANY target row makes that row's partition a matched
-            # partition, so anti-join against this subset equals anti-join
-            # against the full table). Insert/update destinations are
-            # derived from the files actually appended at commit.
-            keep = target.where(_part_in(pcols, matched_parts))
-            touched = None
-        # An update can move a row across partitions when the source
-        # PROVIDES a partition column (an omitted column keeps the target
-        # value, so the row stays put) or when update_set rewrites one.
-        # Destinations are the POST-update partition tuples of the matched
-        # pairs — raw source partition values are wrong whenever update_set
-        # overrides a partition column, or a hierarchical scheme takes some
-        # partition columns from the target (destination = provided source
-        # value + target-kept value, while the raw source tuple holds
-        # padded nulls); omitting the destination from the commit log would
-        # make read_changes' pruning report the moved row as a bare delete.
-        update_can_move = when_matched == "update" and (
-            any(c in src_cols for c in pcols) or any(c in update_set for c in pcols)
-        )
-        # Fast path for the common full-schema upsert: when the source
-        # provides EVERY partition column, no update_set rewrites one, and
-        # inserts are on, every source row lands at its own partition
-        # values (matched → update takes the source value; unmatched →
-        # insert takes it too), so ONE source-only distinct collect is
-        # exact — no pair join, no anti-join. Falls through to the precise
-        # joins only for the cases where raw source values are wrong
-        # (partial partition columns, update_set on a partition column) or
-        # over-approximate (insert off).
-        all_pcols_from_src = all(c in src_cols for c in pcols) and not any(
-            c in update_set for c in pcols
-        )
-        fast_path = write_mode == "mor" or (
-            when_not_matched == "insert"
-            and (all_pcols_from_src or not update_can_move)
-        )
-        if fast_path and write_mode != "mor":
-            # ONE blocking job for the whole pre-write protocol (r13,
-            # guide §5 — the driver protocol was three sequential jobs:
-            # A2 cardinality collect, matched-partition collect,
-            # source-partition collect). The source side groups by the
-            # merge key (each group is one row when the A2 invariant
-            # holds, so first(pcol) is exact), re-aggregates per
-            # partition tuple carrying the max group size and one sample
-            # duplicate key, and unions with the matched target
-            # partitions; everything is still bounded by partition
-            # count, never table rows.
-            if check_cardinality:
-                extra = [c for c in pcols if c not in keys]
-                by_key = (
-                    source.select(*keys, *extra)
-                    .groupBy(*keys)
-                    .agg(
-                        F.count(F.lit(1)).alias("__n"),
-                        *[F.first(c).alias(c) for c in extra],
-                    )
-                )
-                src_side = by_key.groupBy(*pcols).agg(
-                    F.max("__n").alias("__mx"),
-                    F.min(
-                        F.when(
-                            F.col("__n") > 1,
-                            F.struct(*[F.col(k) for k in keys]),
-                        )
-                    ).alias("__samp"),
-                )
-            else:
-                src_side = (
-                    source.select(*pcols)
-                    .distinct()
-                    .select(
-                        *pcols,
-                        F.lit(1).cast("long").alias("__mx"),
-                        F.lit(None)
-                        .cast(
-                            "struct<"
-                            + ", ".join(
-                                f"{k}: {source.schema[k].dataType.simpleString()}"
-                                for k in keys
-                            )
-                            + ">"
-                        )
-                        .alias("__samp"),
-                    )
-                )
-            samp_t = src_side.schema["__samp"].dataType
-            tgt_side = matched_parts_df.select(
-                *pcols,
-                F.lit(1).cast("long").alias("__mx"),
-                F.lit(None).cast(samp_t).alias("__samp"),
-            )
-            rows = src_side.unionByName(tgt_side).collect()
-            if check_cardinality:
-                dupes = [
-                    r["__samp"]
-                    for r in rows
-                    if r["__mx"] > 1 and r["__samp"] is not None
-                ][:5]
-                if dupes:
-                    shown = [
-                        d[keys[0]]
-                        if len(keys) == 1
-                        else tuple(d[k] for k in keys)
-                        for d in dupes
-                    ]
-                    raise ValueError(
-                        f"update set has duplicate keys: {shown}"
-                    )
-                cardinality_checked = True
-            touched = {tuple(r[c] for c in pcols) for r in rows}
-        elif write_mode != "mor":
-            touched = {tuple(r) for r in matched_parts_df.collect()}
-        if not fast_path and update_can_move:
-            pairs = target.join(
-                source.select(
-                    *keys,
-                    *[
-                        F.col(c).alias(f"__s_{c}")
-                        for c in target.columns
-                        if c not in keys
-                    ],
-                ),
-                keys,
-                "inner",
-            )
-            tgt_d = {c: F.col(c) for c in target.columns}
-            src_d = {k: F.col(k) for k in keys}
-            src_d.update(
-                {c: F.col(f"__s_{c}") for c in target.columns if c not in keys}
-            )
-            if matched_condition is not None:
-                # Rows failing the condition keep their target partition —
-                # already covered by matched_parts.
-                pairs = pairs.where(
-                    F.coalesce(matched_condition(tgt_d, src_d), F.lit(False))
-                )
-            dest_exprs = []
-            for c in pcols:
-                if c in update_set:
-                    dest_exprs.append(update_set[c](tgt_d, src_d).alias(c))
-                elif c in src_cols:
-                    dest_exprs.append(F.col(f"__s_{c}").alias(c))
-                else:
-                    dest_exprs.append(F.col(c).alias(c))
-            touched |= {
-                tuple(r) for r in pairs.select(*dest_exprs).distinct().collect()
-            }
-        if not fast_path and when_not_matched == "insert":
-            # Inserts land at the source row's own partition values (an
-            # omitted partition column inserts into the null partition).
-            # Only actual INSERT rows count — a matched source row's raw
-            # partition tuple is not a destination (its real destination,
-            # if any, came from the update pass above), so counting all
-            # source rows would phantom-touch partitions on mixed merges.
-            insert_rows = source.join(
-                target.select(*keys).distinct(), keys, "left_anti"
-            )
-            touched |= {
-                tuple(r) for r in insert_rows.select(*pcols).distinct().collect()
-            }
-        if write_mode != "mor":
-            keep = target.where(_part_in(pcols, touched))
+    # Both joins below (the pre-write pass and the merge itself) keep
+    # target columns under their own names and source non-key columns as
+    # ``__s_<col>``, so one set of column dicts serves both.
+    s_cols = [c for c in tcols if c not in keys]
+    tgt_cols = {c: F.col(c) for c in tcols}
+    srcd = {c: F.col(c if c in keys else f"__s_{c}") for c in tcols}
+    if matched_condition is not None:
+        # A NULL-evaluating condition must read as "condition not met", not
+        # poison the survives filter (WHERE NULL silently drops rows).
+        cond = F.coalesce(matched_condition(tgt_cols, srcd), F.lit(False))
     else:
-        touched = None
-        keep = target
+        cond = F.lit(True)
 
-    if check_cardinality and not cardinality_checked:
-        assert_exactly_one(source, keys[0] if len(keys) == 1 else keys)
+    # ONE pre-write pass answers both questions a merge must settle before
+    # it claims a version: is the source key-unique (the A2 assertion,
+    # main.go:232-238), and which partitions can the merge change. It runs
+    # as a single metadata-sized collect on every path (COW, MOR,
+    # unpartitioned), so a violation raises before anything is claimed.
+    #
+    # The source is grouped by the merge key with its row count ``__n``
+    # (a key-unique source makes first() exact; a duplicate raises below);
+    # with check_cardinality=False every raw row counts once instead. A
+    # partitioned table left-joins that to the target and emits, per row:
+    #   * the target partition of every matched row, whether or not
+    #     matched_condition passes;
+    #   * when the update can move rows, the POST-update destination of a
+    #     condition-passing matched row: the update_set value, else the
+    #     source's value when the source provides the column, else the
+    #     target's (an omitted column keeps its target value). Raw source
+    #     values would be wrong here, and a missed destination would make
+    #     read_changes' pruning report the moved row as a bare delete;
+    #   * when inserting, the source partition of an unmatched row (an
+    #     omitted partition column inserts into the null partition).
+    # Grouping by the emitted tuple (null: "emitted none") bounds the
+    # collect by partition count, never table rows, and every group keeps
+    # one duplicate-key sample.
+    touched = None
+    keep = target
+    if pcols or check_cardinality:
+        src = source.select(*keys, *[F.col(c).alias(f"__s_{c}") for c in s_cols])
+        if check_cardinality:
+            src = src.groupBy(*keys).agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[F.first(f"__s_{c}").alias(f"__s_{c}") for c in s_cols],
+            )
+        else:
+            src = src.withColumn("__n", F.lit(1))
+        pt = F.lit(None)
+        if pcols:
+            src = src.join(
+                target.select(*tcols, F.lit(True).alias("__tgt")), keys, "left"
+            )
+            matched = F.col("__tgt").isNotNull()
+
+            def part(vals):
+                return F.struct(*[v.alias(c) for c, v in zip(pcols, vals)])
+
+            emit = [F.when(matched, part([tgt_cols[c] for c in pcols]))]
+            if when_matched == "update" and any(
+                c in src_cols or c in update_set for c in pcols
+            ):
+                dest = [
+                    update_set[c](tgt_cols, srcd)
+                    if c in update_set
+                    else srcd[c] if c in src_cols else tgt_cols[c]
+                    for c in pcols
+                ]
+                emit.append(F.when(matched & cond, part(dest)))
+            if when_not_matched == "insert":
+                emit.append(F.when(~matched, part([srcd[c] for c in pcols])))
+            pt = F.explode(F.array(*emit))
+        rows = (
+            src.select(
+                pt.alias("__pt"),
+                F.when(F.col("__n") > 1, F.struct(*keys)).alias("__dup"),
+            )
+            .groupBy("__pt")
+            .agg(F.min("__dup").alias("__dup"))
+            .collect()
+        )
+        dupes = [r["__dup"] for r in rows if r["__dup"] is not None][:5]
+        if dupes:
+            shown = [d[0] if len(keys) == 1 else tuple(d) for d in dupes]
+            raise ValueError(f"update set has duplicate keys: {shown}")
+        if pcols:
+            # COW rewrites exactly these partitions. MOR rewrites nothing but
+            # scans the same set: it holds every matched row, so the
+            # tombstones, update images and insert detection (a key matching
+            # ANY target row is matched inside this set) are all exact.
+            touched = {tuple(r["__pt"]) for r in rows if r["__pt"] is not None}
+            keep = target.where(_part_in(pcols, touched))
 
     # Row disposition: target-only rows always survive; matched rows follow
     # when_matched; source-only rows follow when_not_matched. Distinguish
@@ -1651,20 +1570,11 @@ def merge_into(
         src_tag.select(
             *keys,
             F.col("__src"),
-            *[F.col(c).alias(f"__s_{c}") for c in tcols if c not in keys],
+            *[F.col(c).alias(f"__s_{c}") for c in s_cols],
         ),
         keys,
         "full_outer",
     )
-    tgt_cols = {c: F.col(c) for c in tcols}
-    srcd = {k: F.col(k) for k in keys}
-    srcd.update({c: F.col(f"__s_{c}") for c in tcols if c not in keys})
-    if matched_condition is not None:
-        # A NULL-evaluating condition must read as "condition not met", not
-        # poison the survives filter (WHERE NULL silently drops rows).
-        cond = F.coalesce(matched_condition(tgt_cols, srcd), F.lit(False))
-    else:
-        cond = F.lit(True)
     out_cols = []
     for c in tcols:
         if c in keys:
@@ -1999,17 +1909,12 @@ def _modify_where(spark, root, condition, set_exprs, action) -> int:
     if pcols:
         # Source partitions of matched rows; for an update, also the
         # post-update destination partitions (a SET on a partition column
-        # moves rows). Both collects are bounded by partition count.
+        # moves rows). One collect, bounded by partition count.
         matched_rows = target.where(matched)
-        touched = {tuple(r) for r in matched_rows.select(*pcols).distinct().collect()}
+        parts = matched_rows.select(*pcols)
         if updated_cols is not None and any(c in set_exprs for c in pcols):
-            touched |= {
-                tuple(r)
-                for r in matched_rows.select(*updated_cols)
-                .select(*pcols)
-                .distinct()
-                .collect()
-            }
+            parts = parts.union(matched_rows.select(*updated_cols).select(*pcols))
+        touched = {tuple(r) for r in parts.distinct().collect()}
         keep = target.where(_part_in(pcols, touched))
     else:
         touched = None
@@ -2736,32 +2641,26 @@ def scan_partitions(
     result is column-identical to ``read_table(...).where(partition in
     rels)``."""
     v = current_version(root) if version is None else version
-    vdir = _vdir(root, v)
     prefixes = tuple(r.rstrip("/") + "/" for r in rels)
-    paths = [
-        os.path.join(vdir, e["path"])
-        for e in manifest(root, v)
-        if e["path"].startswith(prefixes)
-    ]
-    return _read_file_list(spark, root, v, paths)
+    chosen = [e for e in manifest(root, v) if e["path"].startswith(prefixes)]
+    return _read_file_list(spark, root, v, chosen)
 
 
-def _read_file_list(spark, root: str, v: int, paths: list[str]) -> DataFrame:
-    """Read an explicit manifest-chosen file list as the snapshot schema
-    (basePath keeps hive partition columns; empty list → empty frame)."""
+def _read_file_list(spark, root: str, v: int, entries: list[dict]) -> DataFrame:
+    """Read the files of explicit manifest-chosen ``entries`` as the
+    snapshot schema (basePath keeps hive partition columns; no entries →
+    empty frame)."""
     vdir = _vdir(root, v)
     reader, cols, pcols, renames = _snapshot_reader(spark, root, v)
-    if not paths:
+    if not entries:
         return read_table(spark, root, v).where(F.lit(False))
     # tombstones prune WITH the scan: only the read partitions' vectors
     # load (dirname of each chosen file's vdir-relative path)
-    rels = sorted(
-        {os.path.dirname(os.path.relpath(p, vdir)) for p in paths}
-    )
+    rels = sorted({os.path.dirname(e["path"]) for e in entries})
     df = _apply_renames(
         _apply_dv(
             spark,
-            _memo_schema_parquet(reader, vdir, paths),
+            _memo_schema_parquet(reader, vdir, entries, False),
             vdir,
             len(pcols),
             rels=rels,
@@ -2812,8 +2711,7 @@ def scan_files_where(
     if lo is None and hi is None:
         raise ValueError("scan_files_where needs at least one of lo/hi")
     v = current_version(root) if version is None else version
-    vdir = _vdir(root, v)
-    paths = []
+    chosen = []
     for e in manifest(root, v):
         b = e.get("stats", {}).get(col)
         if b is not None:
@@ -2821,8 +2719,8 @@ def scan_files_where(
                 continue
             if hi is not None and b[0] > hi:
                 continue
-        paths.append(os.path.join(vdir, e["path"]))
-    df = _read_file_list(spark, root, v, paths)
+        chosen.append(e)
+    df = _read_file_list(spark, root, v, chosen)
     pred = None
     if lo is not None:
         pred = F.col(col) >= F.lit(lo)

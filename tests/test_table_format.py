@@ -99,13 +99,135 @@ def test_merge_delete_and_matched_none(spark, tmp_path):
     assert got == {1: 10.0, 2: 20.0, 3: 30.0, 4: 40.0, 9: 9.0}
 
 
-def test_duplicate_source_keys_raise_before_any_write(spark, tmp_path):
+# Merge shapes that reach the pre-write pass differently: name ->
+# (partition_by, source schema, source rows, merge_into kwargs).
+_FULL = "id long, grp string, val double"
+_MERGE_SHAPES = {
+    "cow_upsert": ("grp", _FULL, [(2, "a", 99.0), (5, "d", 50.0)], {}),
+    "cow_update_only_insert_off": (
+        "grp", "id long, val double", [(2, 99.0), (3, 98.0)],
+        {"when_not_matched": None},
+    ),
+    "cow_row_moving_insert_off": (
+        "grp", _FULL, [(2, "b", 99.0), (4, "a", 98.0)],
+        {"when_not_matched": None},
+    ),
+    "cow_update_set_partition": (
+        "grp", _FULL, [(2, "a", 99.0), (5, "d", 50.0)],
+        {"update_set": {"grp": lambda t, s: F.concat(t["grp"], F.lit("_x"))}},
+    ),
+    "mor_upsert": (
+        "grp", _FULL, [(2, "a", 99.0), (5, "d", 50.0)], {"write_mode": "mor"}
+    ),
+    "unpartitioned_upsert": (None, _FULL, [(2, "a", 99.0), (5, "d", 50.0)], {}),
+}
+
+
+def _run_shape(spark, tmp_path, shape, dup=False):
+    """Create the base table for ``shape``, then return its root and a
+    thunk running the shape's write (``dup`` repeats the first source key
+    with another value)."""
+    root = str(tmp_path / "t")
+    if shape == "cow_update_where_partition":
+        TF.create_table(_base(spark), root, partition_by="grp")
+        return root, lambda: TF.update_where(spark, root, "id = 2", {"grp": "'z'"})
+    part, schema, rows, kw = _MERGE_SHAPES[shape]
+    TF.create_table(_base(spark), root, partition_by=part)
+    if dup:
+        rows = [*rows, (*rows[0][:-1], -1.0)]
+    src = spark.createDataFrame(rows, schema)
+    return root, lambda: TF.merge_into(spark, root, src, on="id", **kw)
+
+
+@pytest.mark.parametrize("shape", sorted(_MERGE_SHAPES))
+def test_duplicate_source_keys_raise_before_any_write(spark, tmp_path, shape):
+    root, run = _run_shape(spark, tmp_path, shape, dup=True)
+    with pytest.raises(ValueError, match="duplicate keys"):
+        run()
+    assert TF.current_version(root) == 1  # nothing committed
+    # nothing claimed or staged either
+    assert os.listdir(os.path.join(root, "_versions")) == ["v00000001"]
+
+
+@pytest.mark.parametrize(
+    "shape", [*sorted(_MERGE_SHAPES), "cow_update_where_partition"]
+)
+def test_one_sql_execution_before_commit(spark, tmp_path, monkeypatch, shape):
+    """Every write shape settles A2 and its touched partitions in ONE
+    SQL execution before the commit starts."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        # The id of the latest SQL execution: ids are consecutive, while
+        # the store's count stops growing at spark.sql.ui.retainedExecutions.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        runs = store.executionsList()
+        return runs.last().executionId() if runs.nonEmpty() else -1
+
+    root, run = _run_shape(spark, tmp_path, shape)
+    at_commit = []
+    for name in ("_cow_commit", "_mor_commit"):
+        def hooked(*a, _orig=getattr(TF, name), **kw):
+            at_commit.append(executions())
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(TF, name, hooked)
+    before = executions()
+    assert run() == 2
+    assert [n - before for n in at_commit] == [1]
+
+
+def test_touched_partitions_skip_source_values_a_match_never_writes(spark, tmp_path):
+    """A matched row's source partition is only a destination when the row
+    is updated: a matched delete, or an update whose condition fails, leaves
+    the source value unwritten, so its partition is not rewritten."""
     root = str(tmp_path / "t")
     TF.create_table(_base(spark), root, partition_by="grp")
-    src = spark.createDataFrame([Row(id=2, grp="a", val=1.0), Row(id=2, grp="a", val=2.0)])
-    with pytest.raises(ValueError, match="duplicate keys"):
-        TF.merge_into(spark, root, src, on="id")
-    assert TF.current_version(root) == 1  # nothing committed
+    src = spark.createDataFrame([(3, "z", 0.0), (5, "d", 50.0)], _FULL)
+    TF.merge_into(spark, root, src, on="id", when_matched="delete")
+    assert TF.history(root)[-1]["touched_partitions"] == ["grp=b", "grp=d"]
+    src = spark.createDataFrame([(2, "y", 1.0)], _FULL)
+    TF.merge_into(
+        spark, root, src, on="id", matched_condition=lambda t, s: F.lit(False)
+    )
+    assert TF.history(root)[-1]["touched_partitions"] == ["grp=a"]
+    got = {r["id"]: (r["grp"], r["val"]) for r in TF.read_table(spark, root).collect()}
+    assert got == {
+        1: ("a", 10.0), 2: ("a", 20.0), 4: ("c", 40.0), 5: ("d", 50.0)
+    }
+
+
+def test_schema_memo_rereads_a_recreate_with_the_same_dir_mtime(spark, tmp_path):
+    """A table recreated at the same root whose version dir keeps the old
+    mtime (a recreate inside mtime granularity) must not replay the old
+    table's inferred schema."""
+    import shutil
+
+    root = str(tmp_path / "t")
+    TF.create_table(spark.createDataFrame([Row(id=1, a="x")]), root)
+    assert TF.read_table(spark, root).collect() == [Row(id=1, a="x")]
+    vdir = os.path.join(root, "_versions", "v00000001")
+    st = os.stat(vdir)
+    shutil.rmtree(root)
+    TF.create_table(spark.createDataFrame([Row(id=2, b="y")]), root)
+    os.utime(vdir, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert TF.read_table(spark, root).collect() == [Row(id=2, b="y")]
+
+
+def test_schema_memo_hits_on_reread_and_stays_bounded(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "t")
+    TF.create_table(_base(spark), root, partition_by="grp")
+    monkeypatch.setattr(TF, "_SNAPSHOT_SCHEMA_CACHE", {})
+    monkeypatch.setattr(TF, "_SCHEMA_MEMO_MAX", 2)
+    TF.read_table(spark, root)
+    (key,) = TF._SNAPSHOT_SCHEMA_CACHE
+    TF.read_table(spark, root)  # same files: a hit, no new key
+    assert list(TF._SNAPSHOT_SCHEMA_CACHE) == [key]
+    for rel, n in (("grp=a", 2), ("grp=b", 1), ("grp=c", 1)):
+        assert TF.scan_partitions(spark, root, [rel]).count() == n
+    assert len(TF._SNAPSHOT_SCHEMA_CACHE) == 2
+    assert key not in TF._SNAPSHOT_SCHEMA_CACHE  # the oldest went first
 
 
 def test_vacuum_keeps_current_and_recent(spark, tmp_path):
