@@ -13,9 +13,11 @@ the same session) and is what the orchestrator forks.
 
 Fields: ``value``/``queries`` are median COLD times (plan analysis +
 codegen compile + execution — comparable across rounds);
-``queries_warm``/``warm_total`` are median WARM times, where Spark's
-generated-class cache and JIT have warmed — on a long-lived cluster
-session the warm number is what repeats. Every query is forced to full
+``queries_warm``/``warm_total`` are median WARM times: the same passes
+re-run in the same session, so the JIT has warmed and each generated class
+still held by the session's codegen cache (1000 entries, ``session.py``)
+is reused rather than recompiled — on a long-lived cluster session the
+warm number is what repeats. Every query is forced to full
 execution with a noop write (no driver-side materialization).
 """
 

@@ -1099,22 +1099,31 @@ def _pipeline_pack(spark: SparkSession, survivors_path: str) -> DataFrame:
         )
     )
     packed = _pack_bins_two_level(base.select("doc_id", "lang", "n_tok"))
+    # (shard, lang, bin) units first, then shards: n_bins is a plain count
+    # and only n_langs stays distinct, so Spark plans no Expand (two
+    # distinct aggregates copy every row once per distinct group). lang is
+    # non-null after the langid filter and bin is a long, so the counts
+    # equal countDistinct(concat_ws(":", lang, bin)) and countDistinct(lang).
     return (
         packed.join(base.select("doc_id", "n_bytes"), "doc_id")
         .withColumn("shard", SH.shard_key(F.col("doc_id"), 16))
+        .groupBy("shard", "lang", "bin")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("n_tok").alias("tok"),
+            F.sum("n_bytes").alias("bytes"),
+            F.min("doc_id").alias("lo"),
+            F.max("doc_id").alias("hi"),
+        )
         .groupBy("shard")
         .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").cast("long").alias("tok_sum"),
-            F.sum("n_bytes").cast("long").alias("byte_sum"),
-            F.countDistinct(
-                F.concat_ws(":", "lang", F.col("bin").cast("string"))
-            )
-            .cast("long")
-            .alias("n_bins"),
+            F.sum("n").cast("long").alias("n_docs"),
+            F.sum("tok").cast("long").alias("tok_sum"),
+            F.sum("bytes").cast("long").alias("byte_sum"),
+            F.count(F.lit(1)).alias("n_bins"),
             F.countDistinct("lang").cast("long").alias("n_langs"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
+            F.min("lo").alias("min_id"),
+            F.max("hi").alias("max_id"),
         )
         .orderBy("shard")
     )
