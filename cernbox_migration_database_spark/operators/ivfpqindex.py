@@ -15,7 +15,7 @@ Layout: ONE row per vector — ``(id, codes array<int>, cell)`` — not one
 row per (vector, subspace). The exploded layout scaled index rows and
 the ADC join/shuffle volume by m; at the trained m=32 config
 (pq_trained.py) that made the probe ~3.3x slower than the m=8 seed era
-(tools/ab_ivfpq.py, the round-8 baseline-ratio regression). Packed, the
+(the round-8 baseline-ratio regression; COVERAGE.md, round 9). Packed, the
 index row count equals corpus row count regardless of m, and ADC is a
 row-local aggregate against a broadcast flat LUT — no per-candidate
 groupBy shuffle exists in the probe at all.

@@ -17,7 +17,8 @@ the side-effecting boundary:
                                          deterministic second join instead of
                                          polling for replication)
   5. update-set construction            (main.go:218,228 semantics)
-  6. merge + audit + dead-letter sinks  (S6-S9; dry-run = plan without write)
+  6. merge + audit + dead-letter sinks  (S6-S9; the result is lazy, so a
+                                         dry run writes nothing)
 
 The per-row subprocess cost model (~20/RTT rows/s) becomes two set-at-a-time
 joins — the structural win that makes this shape viable at 100 TB.
@@ -41,6 +42,7 @@ from ..operators.router import (
     PARENT_IS_VERSION,
     with_decision,
 )
+from ..util import tracked_persist
 
 UPDATE_COLS = ["item_source", "item_target", "file_source", "file_target"]
 
@@ -76,7 +78,6 @@ class MigrationResult:
     updates: DataFrame     # the computed update set (id + 4 columns)
     audit: DataFrame       # (id, decision, detail)  — S8 as a queryable table
     dead: DataFrame        # (id, error_stage)       — S9 dead letters
-    dry_run: bool
 
 
 def _meta_for_join(meta: DataFrame, key: str, prefix: str) -> DataFrame:
@@ -95,7 +96,6 @@ def run_migration(
     meta: DataFrame,
     home_prefix: str = "/eos/",
     user: str | None = None,
-    dry_run: bool = True,
     create_fn: Callable[[DataFrame], DataFrame] | None = None,
     broadcast_meta: bool = False,
 ) -> MigrationResult:
@@ -118,6 +118,11 @@ def run_migration(
     out / calls the catalog, then a re-read). Its invocation is an action
     barrier — stage 4's laziness is deliberately broken here and nowhere
     else.
+
+    The result is lazy: nothing is written until the caller writes
+    ``updates``, ``audit`` or ``dead``, so the returned plan is the dry run.
+    The routed rows are persisted for the sinks that share them;
+    ``util.release_persisted()`` frees them once the sinks are written.
     """
     # -- 1. scan shape (main.go:86-97): projection + equi-filters (+ user)
     scan = shares.filter(
@@ -129,8 +134,11 @@ def run_migration(
         "id", "share_type", "item_source", "item_target", "file_source", "file_target"
     )
 
-    # P7 empty guard (main.go:255-258)
-    if scan.limit(1).count() == 0:
+    # P7 empty guard (main.go:255-258). isEmpty is a collect-limit, whose
+    # generated classes repeat across runs and hit the codegen cache;
+    # limit(1).count() names its limit counter from a global id, so it
+    # compiled new classes on every run.
+    if scan.isEmpty():
         raise ValueError("share table does not contain public share files")
 
     # -- 2. J1 enrichment join on inode (main.go:272, 120-127)
@@ -145,7 +153,7 @@ def run_migration(
     )
 
     # -- 3. router (main.go:280-315)
-    routed = with_decision(enriched, "f_path", home_prefix).cache()
+    routed = tracked_persist(with_decision(enriched, "f_path", home_prefix))
 
     already = routed.filter(F.col("decision") == ALREADY_VERSION)
     nothome = routed.filter(F.col("decision") == NOT_UNDER_HOME)
@@ -240,6 +248,4 @@ def run_migration(
     merged = merge_updates(
         shares, updates, key="id", update_cols=UPDATE_COLS, check_cardinality=True
     )
-    return MigrationResult(
-        merged=merged, updates=updates, audit=audit, dead=dead, dry_run=dry_run
-    )
+    return MigrationResult(merged=merged, updates=updates, audit=audit, dead=dead)

@@ -38,7 +38,6 @@ from .streaming import *  # noqa: F401,F403
 from .table import *  # noqa: F401,F403
 from .stats import *  # noqa: F401,F403
 from .train import *  # noqa: F401,F403
-from .text import _BM25_TERMS  # noqa: F401  (tools/scale_check reads it)
 
 
 # ---------------------------------------------------------------------------

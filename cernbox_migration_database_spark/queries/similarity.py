@@ -639,7 +639,7 @@ def similarity_ivfpq_index_probe(spark, sf_dir):
     frozen quantizers (ivf_trained.py + pq_trained.py), so the standing
     index carries the production recall, not the seed floor; since round
     9 the packed layout, so index rows and probe cost are independent of
-    m (tools/ab_ivfpq.py: the exploded layout at m=32 cost 3.3x the m=8
+    m (COVERAGE.md round 9: the exploded layout at m=32 cost 3.3x the m=8
     probe; packed, 1.2x). Probes name nprobe cell partitions row-locally,
     read only those, and rank by exact-integer asymmetric distance: one
     broadcast flat-LUT join on query_id + a row-local m-term aggregate —

@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from cernbox_migration_database_spark import util as U
 from cernbox_migration_database_spark.plans.migration import run_migration
 
 EXP = dt.datetime(2030, 1, 1)
@@ -127,6 +128,28 @@ def test_migration_empty_guard(spark):
         run_migration(
             _shares(spark).filter(F.col("share_type") == 99), _meta(spark)
         )
+
+
+def _cached_rdds(spark) -> set[int]:
+    """Ids of the RDDs the status store lists as cached, once every queued
+    listener event has reached it."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    rdds = sc.statusStore().rddList(True)
+    return {rdds.apply(i).id() for i in range(rdds.length())}
+
+
+def test_migration_releases_its_cache(spark):
+    """What run_migration persists for its sinks is freed by
+    release_persisted(), so repeated runs in one session do not pile up
+    cached blocks."""
+    before = _cached_rdds(spark)
+    create, _ = _create_fn(spark)
+    res = run_migration(_shares(spark), _meta(spark), create_fn=create)
+    for df in (res.updates, res.audit, res.dead):
+        df.collect()
+    U.release_persisted()
+    assert not _cached_rdds(spark) - before
 
 
 def test_missing_create_fn_dead_letters(spark):

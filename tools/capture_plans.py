@@ -1,13 +1,18 @@
 """Regenerate PLANS.md: formatted physical plans for flagship queries.
 
-Usage: python tools/capture_plans.py [sf_dir]
+Usage: python tools/capture_plans.py [sf_dir]   (default $SPARK_GRAFT_SF_DIR)
+
+Everything from the NARRATIVE marker on in the existing PLANS.md is kept.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS = os.path.join(ROOT, "PLANS.md")
+sys.path.insert(0, ROOT)
 
 from cernbox_migration_database_spark import queries as Q
 from cernbox_migration_database_spark.session import get_spark
@@ -53,781 +58,9 @@ SHOW = {
     "table_branch_merge": "branch rebase: change-feed diffs pruned to touched partitions, key-projected conflict join, two keyed merges — fork and FF merge are pure metadata (no plan at all)",
 }
 
-# Narrative that survives regeneration (measured evidence lives here, the
-# plan dumps above are mechanical).
-EPILOGUE = """
-## Round-2 plan changes (measured on local[32], sf0.1; env variance ±25%)
-
-### dedup_simhash: 64-way explode -> 64 vote columns
-Before: `explode(sequence(0,63))` per token multiplied shuffle input 64x.
-After: one row per (doc, token) carrying 64 0/1 bit expressions, ONE
-groupBy(doc) with 64 partial sums + a count (sign = 2*sum(bit) -
-n_tokens). Partial-aggregation hash-map entries per partition drop 64x
-(5k vs 320k on this corpus — the number that decides spill at 10^9 docs),
-shuffle rows drop 64x. Measured trade-off: the 65-aggregate generated
-class pays ~1.4 s one-time codegen/JIT (2.37 s cold -> 0.91 s warm same
-session, vs the old shape's 1.36 s steady) — ~1.5x faster per repeated
-execution and strictly lighter on shuffle; a single cold run includes the
-compile. bench.py reports both (`queries` cold / `queries_warm`).
-
-### lsh_candidate_pairs: self-join -> bucket aggregate + in-array expansion
-Before: posexplode bands, self-join on (band, bv), distinct — three
-exchanges plus a join hash table (and the un-aliased `band` column had
-degenerated to a trivially-true join predicate, pairing values across band
-positions — fixed). After: groupBy(band, bv) -> collect_set(ids) ->
-pairwise expansion inside the sorted array -> distinct: two exchanges, no
-join build, quadratic fan-out confined to within-bucket arrays exactly as
-LSH intends. dedup_minhash_lsh: 2.39 s cold / 1.44 s warm (from ~2.6-3.0).
-
-### jaccard_pairs hot-shingle cap (skew guard)
-`max_df` drops shingles with document frequency > cap before the inverted-
-index join: the DF count itself is a map-side-combinable groupBy (skew-
-immune), the hot set broadcasts into a left-anti join, per-document sizes
-are recomputed so capped Jaccard stays exact over the surviving shingle
-space (mirrored in the DuckDB oracle; test asserts max per-key join input
-<= cap with a shingle 30 docs hot).
-
-### connected_components (dedup_clusters): bounded iterative plan
-Each round is one equi-join + one groupBy(min) over (id, label) pairs —
-text never enters the loop. Labels only decrease, so the driver loop stops
-when the global label sum is unchanged (one agg action per round, no extra
-join); `localCheckpoint` cuts lineage so round N's plan does not embed
-rounds 1..N-1. Convergence is bounded by component diameter — shallow for
-near-dup clusters; for billion-edge skewed graphs swap the inner step for
-large-star/small-star, same loop shape.
-
-### catalog DataFrame cache
-Every `spark.read.parquet` re-lists the path and re-reads footers (~85 ms
-per table per call). The catalog hands back the same resolved DataFrame
-per (applicationId, sf_dir, table) — fixed-overhead removal for an
-86-query session over 10 immutable tables.
-
-### Mechanical plan audit (tools/plan_audit.py)
-Every catalog query's physical plan is swept for row-at-a-time Python
-(BatchEvalPython) and non-broadcast cartesian products: 0 flagged across
-all 90 queries; the only Python boundary in any plan is the Arrow-batched
-MapInPandas of the multimodal decode. Exchange counts are printed per
-query so shuffle regressions show up in review.
-
-### Cold/warm decomposition of the headline number
-Cold sum 18.6 s vs warm sum 11.9 s (same session, same plans): the ~7 s
-delta is plan analysis + codegen compile + JIT, amortized away on any
-long-lived session. The remaining warm floor is compute-bound JVM
-expression work (simhash bit votes, minhash md5, LSH bucket dots) — no
-Python anywhere in those paths.
-
-## Round-3 plan changes (measured on local[32], sf0.1 unless noted)
-
-### text_winnowing: the inferred-filter tax and its persist barrier
-The winnowing hash pipeline is pure row-local HOF arithmetic built ONLY
-from shifted slices + whole-array zip_with (never element_at on an
-inlined array inside a lambda — that re-evaluates the array per element,
-the first version measured >5 min at sf0.001). Even in that
-substitution-proof form, `InferFiltersFromGenerate` adds size(_fps)>0
-above the explode and PushDownPredicates inlines the ENTIRE pipeline into
-a scan-level Filter evaluated interpreted per row: 48 s of filter
-overhead vs 0.8 s of real work at sf0.1. Persisting the per-doc
-fingerprint array before the explode is the barrier (filters do not push
-through InMemoryRelation): 54 s -> 7 s end-to-end, and dropping the
-redundant final distinct (array_distinct already dedupes per doc)
-removed the query's only exchange.
-
-### similarity_pq_encode / _adc: plan-build cost is real cost
-Composing the m*k=128 codebook-distance expressions through the Python
-Column API cost ~5 s of py4j round trips per query BEFORE any execution;
-generating the same expressions as SQL text and parsing once with F.expr
-is milliseconds. A/B'd a third form — fully unrolled element_at
-arithmetic (1024 scalar terms/row) — and it ran ~2.5x SLOWER than the
-aggregate/zip_with HOF form (expression tree bloats past codegen limits
-and falls back to interpreted eval); kept the zip_with form with the
-measurement in the docstring. The encoded codes array is persisted
-pre-explode for the same inferred-filter reason as winnowing.
-
-
-### train_shuffle: unpartitioned row_number -> partition-offset ranking
-Before (r2 verdict "What's wrong" #1): `row_number().over(W.orderBy(...))`
-— Spark plans an empty-partition-spec WindowExec behind an `Exchange
-SinglePartition`: EVERY row through ONE task. After: range-repartition on
-the hash key (the exchange a global sort pays anyway), sort within
-partitions, `monotonically_increasing_id` = (pid << 33) | localRow
-assigned map-side, one #partitions-row count job prefix-summed on the
-driver, rank = broadcast-literal offset[pid] + localRow + 1. Every pass
-runs at full parallelism; the only extra cost is a metadata-sized count
-job against the persisted midpoint.
-
-### train_token_packing: per-lang window -> two-level (lang, chunk) sum
-Before (#2): running sum partitioned by `lang` — a real corpus has ~5
-languages, so each language's token stream serialized through one reducer.
-After: chunk = FIRST HEX CHAR of the same md5 ordering key, so sorting by
-(chunk, md5) IS sorting by md5 — within-chunk running sums at |langs|x16
-parallelism + a broadcast per-chunk offset table (|langs|x16 rows) prefix-
-summed by a window over the tiny aggregate. Bit-identical bins to the
-per-lang oracle window; widen the prefix to 2 hex chars for 256x.
-
-### plan_audit: UnpartitionedWindow rule
-The class of bug above can no longer land silently: the audit flags any
-`Window` node whose simple-string lacks a partition spec. Subtlety that
-made arity-counting insufficient: WindowExec omits EMPTY specs, so a
-partitioned-unordered window (q20's whole-partition SUM) also prints two
-bracket groups — disambiguated because an order spec always carries
-ASC/DESC and a partition spec never does. `--selftest` proves the rule
-flags a known-bad plan and passes q20; pytest pins the fixed plans.
-Full-catalog sweep: 0 flagged of 115.
-
-### parse_kv_map: structural last-wins dedup, fold form (measured trap)
-Making last-wins independent of `mapKeyDedupPolicy` first shipped as
-reverse + `array_position` filter referencing the entries array INSIDE the
-lambda — no CSE across HOF lambdas, so the whole split pipeline
-re-evaluated per element: kv_parse_map 0.67 -> 1.37 s cold on the bench.
-Final form is a fold (`aggregate`) whose lambdas touch only their own
-arguments (drop key from accumulator, append entry): entries evaluates
-once, 0.73 s cold / 0.62 s warm — conf-independence at zero plan cost.
-
-### text_langid / text_fluency: model-as-literal scoring
-Char-bigram Naive Bayes (and an English-bigram LM for fluency): weights
-fitted offline at import, quantized to fixed-point integers, embedded as
-a LITERAL map — scoring is a row-local Catalyst `aggregate` over the
-bigram array inside codegen. No UDF, no shuffle, no broadcast; exchanges=0
-at any corpus size, and integer sums make both engines' results
-bit-identical (the oracle SQL is GENERATED from the same fitted dict).
-1.1 s warm over sf0.1. This is the pattern for any small-model scoring
-pass at 100 TB: fold the model into the plan.
-
-### connected_components_star (dedup_clusters_star)
-Large-star/small-star alternation as pure join+agg rounds — O(log d)
-rounds vs min-label's O(d), no neighbor-list materialization (each
-half-round: per-node min aggregate + equi-join + distinct). Fixpoint
-tested EXACTLY (edge count + left-anti emptiness; a hash-sum signature
-would be probabilistic and overflows under ANSI). A 30-node chain
-converges in <=10 star rounds where min-label correctly refuses at its
-15-round budget; both produce identical clusters vs the recursive-CTE
-oracle (three-way differential).
-
-### bucketed_join_priority_revenue
-`bucketBy(8, key).sortBy(key)` writes for both sides, then a merge-hint
-join: ZERO exchanges below the SortMergeJoin (plan-asserted) — the
-pay-shuffle-once-at-write-time lever for every repeated join key. The
-`merge` hint (not a broadcast-threshold conf flip) keeps the demo free of
-session-conf mutation.
-
-### kmv_distinct_estimate
-Deterministic approximate-distinct: per-partition TakeOrdered of the k=256
-smallest 52-bit md5 prefixes (no global sort), integer-only estimator
-(k-1)*2^52 div kth-min — unlike HLL the ESTIMATE itself hash-matches the
-DuckDB oracle. Sketches merge by keeping the k smallest of a union.
-
-### pipeline_end_to_end
-Quality gate -> fingerprint exact-dedup (partitioned window) -> two-level
-token packing, one declarative plan: the corpus shuffles exactly twice
-(fingerprint window, pack window); remaining exchanges move the
-|langs|x16-row offset table. The composed chain is what a training-data
-pipeline actually ships — and it is oracle-paired end-to-end.
-
-### Bench variance protocol (tools/bench_protocol.py)
-VERDICT r2 asked for median-of-3 ISOLATED cold runs. Two protocol batches
-on the SAME code, ~30 min apart:
-  batch A: cold [27.7, 23.9, 23.7] median 23.9, warm median 14.3
-  batch B: cold [24.4, 25.5, 26.2] median 25.5, warm median 13.7
-Within-batch spread ~8-17%; BETWEEN batches the same commit moves 10-25%
-per query in BOTH directions (q1 2.0 -> 2.5 while scan fell r2->r3) —
-and the queries that "regressed" most vs r2 (simhash 2.1 -> 3.4, knn
-1.2 -> 1.8) are byte-identical plans since r1 (similarity.py untouched).
-Conclusion, now with data: cold totals on this box are environment-
-dominated beyond ±25%; only same-session relative comparisons and warm
-floors are actionable. The r2->r3 "regression" is noise, not plans —
-the only real regression found (kv filter form, above) was caught by
-same-session A/B and fixed.
-
-Batch C (after the driver REGENERATED the sf fixtures — events.ts
-ns->us, order/ship dates ms->us; same code plus the unit-adaptive
-events readers): cold [19.62, 19.66, 20.50] median 19.66, warm median
-11.56 — tightest spread observed (~4%), under the r2 single-run 20.57
-and within the ±25% band of the 18.5 s target named in the r2 verdict.
-Batch D (later the same day, identical headline plans): cold
-[23.73, 23.80, 49.20], the outlier 2x slower even WARM — and `uptime`
-showed load average 3-4 with zero of our processes running: the box is
-SHARED, and cold-total comparisons across rounds measure co-tenant
-load as much as plans. The warm medians (11.5-13.9 across batches
-A-D) remain the stable signal. Batch E (end of round 3, after the
-winnowing/PQ additions — none of which touch a headline query): cold
-[22.2, 24.0, 24.2] median 23.98, warm median 15.57, spread tight but
-load average climbed to ~7 during the run; the inflation vs batch C is
-UNIFORM across all 16 queries (scan 0.82->1.0, q1 2.06->2.32, simhash
-2.48->3.41) — the signature of co-tenant contention, not of any plan
-change.
-
-### Late round-3 additions (plan notes)
-`dedup_simhash_pairs`: 4x16-bit band bucket join — pigeonhole-EXACT
-candidates for Hamming<=3 (no recall loss), bucket-aggregate pair
-expansion, 64-position row-local verify on candidates only; equality with
-brute-force all-pairs is test-asserted. `dedup_incremental_ingest`: daily
-batch deduped by a fingerprint anti-join against the corpus index + a
-batch-only window — incremental cost, corpus text never rescanned.
-`streaming_dedup`: dropDuplicatesWithinWatermark with keys-only output
-(survivor choice is arrival-dependent; the key set is not).
-`train_chunking`: overlapping token windows via sequence/posexplode/slice,
-exchanges=0. Measured non-change: a conv()-based 2x32-bit simhash digit
-decode was A/B'd against the 64 substring/instr expressions and came out
-SLOWER warm (2.76 vs 2.51 s) — codegen subexpression elimination already
-dedupes the string work; kept the portable form.
-
-## Round-4 plan changes (measured on local[32], sf0.1 unless noted)
-
-### minhash_lsh_dedup: broadcast hint dropped from the verify join
-The r3 verdict's one scale-killer: `F.broadcast(cands)` on the LSH
-candidate-pair set (dedup.py verify join). Candidate pairs are NOT
-driver-sized at scale — a near-dup-heavy crawl yields billions — so the
-hint is a driver OOM waiting to happen. The hint is gone; AQE still picks
-broadcast at test scale (candidate set measures under the threshold), so
-local plans are unchanged in practice while the 100 TB plan degrades
-gracefully to shuffle join. r10 INVERTED the audit rule: broadcast hints
-are now default-deny for EVERY query — any `ResolvedHint
-(strategy=broadcast)` in an analyzed plan fails the audit unless the
-query is in `BROADCAST_HINT_ALLOWED` with a bounded-size justification
-(AQE-chosen broadcasts don't appear there; only the unconditional hint
-does). The same sweep stripped the corpus-proportional hints the old
-one-query deny-list let through: decontaminate evalg (~12.5% of corpus),
-dedup_keep_canonical clusters (linear on a dup-heavy crawl), TPC-H
-part/supplier (SF-linear), the migration meta catalog
-(broadcast_meta now defaults False). Driver row: `dedup_minhash_lsh`
-stays in the r4 sentinel core.
-
-### parse_kv_map: split each token once (r3 regression recovered)
-The r3 structural last-wins fold was kept (conf-independence intact), but
-the surrounding pipeline re-ran the regex `split(t, '=')` THREE times per
-token: once inside the size filter, twice for the struct fields. Fix:
-`transform(toks, t -> split(t, '='))` binds the split ARRAY as the next
-lambda's variable — lambda variables are materialized values, so
-`a[0]`/`a[1]` are free lookups. A/B at sf0.1 (noop write, same session,
-5 runs): current 0.98 s median -> split-once 0.67 s median. A third
-variant (distinct-keys fast path skipping the fold via `when`) measured
-WORSE (0.75 s) — the `array_distinct` predicate costs more than the fold
-saves on ~5-token rows — and was rejected. Edge-case parity (dup keys
-last-wins, `a=b=c` dropped, `=v` kept, null/empty rows) verified
-row-identical against the old form.
-
-### approx_sketches: engine-specific sketches reduced to contract bits
-Previously the one registered query with no oracle (rows-only driver
-check). A raw HLL estimate or KLL median can never hash-match DuckDB —
-but the sketch CONTRACT can: the query now returns the exact distinct
-count (hash-checked cross-engine) plus booleans computed in-Spark
-asserting each sketch sits inside its published error bound (HLL within
-5x rsd of exact; approx-median between the exact 49th/51st percentiles).
-The oracle asserts the booleans TRUE. Both Spark sketches are
-deterministic, so the booleans are stable, and the differential now
-checks real content for this query instead of a row count. Every one of
-the 147 registered queries is now oracle-paired.
-
-### bench.py: warm-median headline + load-average evidence
-The r3 cold total "regression" was co-tenant contention (byte-identical
-plans moved ±25%). bench.py now runs THREE warm passes and reports the
-per-query MEDIAN (`queries_warm`, `warm_median`), and records the
-1-minute load average before/after the run — so a future inflated batch
-carries its own explanation. Cold first-run times stay for cross-round
-comparability; bench_protocol.py propagates `load_avg` per run.
-
-### Dedup/ANN scale measurements (tools/scale_check.py --dedup)
-Replication-safe protocol (VERDICT r3 item 5): k=5 shards of
-documents/embeddings with per-shard disjoint token vocabularies and offset
-ids — pair OUTPUT stays ~linear (shards don't near-match each other) while
-candidate generation processes 5x the rows; probes/codebook seeds stay in
-shard 0 so ANN probe count is fixed. Measured sf0.1, local[32], 3-run
-medians after warmup (load_avg 15.2 — self-inflicted, the run itself):
-
-| query | t_1x | t_5x | ratio | efficiency t_5x/(5*t_1x) |
-|---|---|---|---|---|
-| dedup_minhash_lsh    | 1.63 s | 2.27 s  | 1.39 | 0.278 |
-| dedup_simhash_pairs  | 12.99 s | 29.80 s | 2.29 | 0.459 |
-| similarity_pq_adc    | 1.77 s | 2.20 s  | 1.25 | 0.25  |
-| dedup_prefix_filter  | 3.14 s | 4.84 s  | 1.54 | 0.308 |
-
-All four sub-linear (efficiency < 1): the banded/bucketed plans fan out
-with volume instead of degrading — the 100 TB claims for this family now
-rest on measurement, not plan reading alone. dedup_simhash_pairs is the
-steepest (2.29x at 5x data): its 16-bit band buckets collide across
-shards by pigeonhole (65k distinct values), so candidate verification
-grows faster than corpus size — at real scale the 4x16-bit banding would
-widen (e.g. 64-bit simhash -> 6x11-bit bands for Hamming<=5) to keep
-bucket occupancy flat; the verify step itself stays row-local either way.
-
-### Versioned table (operators/table_format.py): COW merge measured
-New this round: the transactional MERGE sink in table-format form
-(VERDICT r3 "missing #4") on plain parquet — snapshot dirs + one atomic
-`os.replace` pointer commit, optimistic mkdir version claim,
-staging-dir rename publish (competing committers cannot interleave
-files). Scale design points:
-
-* **Write amplification tracks TOUCHED data, not table size.** Measured
-  (orders sf0.1 partitioned 5-way by priority; merge updating keys in ONE
-  partition): rewritten bytes 299,496 of 1,491,804 = **20.1%**, remaining
-  79.9% carried forward as hardlinks (inode-verified in
-  test_untouched_partitions_are_hardlinked_not_rewritten). At 100 TB with
-  daily-partitioned facts, a late-data merge rewrites only the affected
-  days — the hardlink carry is O(#files) driver-side metadata, no data IO,
-  exactly the manifest-reuse trick real table formats play.
-* **Driver state is metadata-sized.** The only collects are distinct
-  partition VALUES of matched/inserted rows (bounded by partition count)
-  — never data rows; the merge itself is one full-outer join on the key,
-  partition-pruned to touched partitions.
-* **Snapshot isolation without a race.** Readers resolve `_latest` once
-  (one atomic os.replace publishes a commit) then read an immutable dir —
-  the missing-dir window the two-rename streaming upsert swap concedes
-  (streaming/events.py) cannot occur. `stream_merge_into` therefore
-  supersedes that sink: same foreachBatch idempotence, plus
-  `WHEN MATCHED AND struct(src order) > struct(tgt order)` gating so
-  out-of-order micro-batches and replays are provable no-ops
-  (test_stream_merge_into_equals_batch_latest_and_is_idempotent).
-* **Small-files debt is a first-class op.** Each COW merge writes >=1 file
-  per touched partition; `compact()` commits a layout-only version (1
-  file/partition via hash-repartition on the partition column, or Z-order
-  for unpartitioned tables) behind the same pointer — at 100 TB, scan cost
-  is governed by file count long before volume, so OPTIMIZE is part of the
-  table contract, not hygiene.
-
-Wall-clock at sf0.1 is fixed-overhead-dominated (1-of-5-partition merge
-1.73 s vs all-5 1.72 s — commit/plan overhead, not IO); the byte
-measurement above is the signal that scales.
-
-### parse_kv_map: positional dedup replaces the concat-fold (r3 target met)
-The conf-independent last-wins dedup is now "reverse, keep first
-occurrence by position" — the reversed entries array is bound as a
-materialized lambda variable via a one-element transform wrapper, so
-inner lambdas never re-evaluate the split pipeline (the Catalyst no-CSE
-trap documented in kv.py). Interleaved A/B at sf0.1 (7 rounds each, same
-session, load_avg 13.9): fold 0.716 s median -> positional 0.454 s.
-Edge-case parity (dup keys last-wins, a=b=c dropped, =v kept) verified on
-the tricky literal across all variants and by test_kv.py. A
-str_to_map+LAST_WIN variant (conf set per-query) was erratic under load
-(0.32-3.7 s) and conf-dependent — rejected.
-
-### Round-4 end-of-round protocol batch (tools/bench_protocol.py, 3 runs)
-cold [22.475, 24.909, 22.732] median 22.73; warm median 12.55
-(spread 11.53-13.63); load_avg 5-10.7 from co-tenant processes during the
-run. vs r3's recorded 21.58 cold / 11.23 warm: within the documented
-±25% between-batch variance, with the r4 additions (versioned-table
-family, positional kv dedup) changing only kv_parse_map among headline
-plans — its cold median 0.907 s (includes plan build; interleaved warm
-A/B earlier this round measured 0.454 s vs the fold's 0.716 s, the only
-plan-level headline change this round).
-
-### matview refresh is delta-bound (measured)
-Fixed ~1.8k-row update delta against a per-status aggregate view, base
-orders at 1x (150k rows) vs 5x (750k): refresh 2.90 s vs 2.43 s — ratio
-0.84, flat within noise, i.e. the refresh pays for the CHANGE FEED, not
-the base (both snapshot scans in read_changes prune to the log-recorded
-touched partitions, and the delta aggregation + arithmetic merge see
-only changed groups). A recomputation-based refresh would scale with the
-base instead.
-
-### scale_check --table: lakehouse claims as a repeatable protocol
-The one-off round-4 measurements are now `tools/scale_check.py --table
-[k]`: k-fold orders replica (disjoint key ranges), one-partition COW
-merge, fixed-size-delta view refresh. Re-run this session (k=5, sf0.1,
-load 4.2): rewritten 20.1% / hardlinked 79.9% at BOTH 1x and 5x (write
-amplification tracks the touched fraction, invariant to table size);
-mv refresh 2.29 s -> 2.68 s at 5x base (ratio 1.17 — delta-bound, vs 5.0
-for a recompute that scaled with the base).
-
-### Round-4 continuation: table DML verbs (delete_where / update_where / restore)
-The versioned table's remaining DML surface, all through the shared
-`_cow_commit` protocol (claim → staging write → hardlink carry → rename →
-pointer publish):
-
-* **delete_where** — touched set = distinct partition values of rows
-  matching the predicate (one metadata-sized collect); only those
-  partitions rewrite, NULL-evaluating rows survive (SQL three-valued
-  DELETE). The RTBF/retention shape: a day-partition purge against a
-  years-deep table costs one partition rewrite.
-* **update_where** — SET expressions all evaluate against PRE-update
-  values (single projection); a SET on a partition column moves rows, so
-  the touched set is source ∪ post-update destination partitions (second
-  metadata-sized collect, only when a partition column is SET). CHECK
-  constraints gate the rewritten rows before any claim.
-* **restore** — rollback as a NEW commit whose data dir is hardlinked
-  from the restored version: O(#files) driver metadata, zero data IO,
-  history preserved (bad versions stay readable until vacuum). The commit
-  records the restored snapshot's schema/partition/evolved state;
-  read_table treats 'restore' as a uniformity reset point so mixed-footer
-  snapshots keep mergeSchema and compacted ones don't pay it.
-* **vacuum(remove_orphans=True)** — collects crashed writers' claim dirs
-  (no _log entry) and `.staging` leftovers behind an mtime grace guard
-  (default 1 h) so an in-flight committer is never raced.
-* **read_changes_since / commit_cursor** — durable-cursor CDF consumption
-  for downstream pipelines: bootstrap load, combined multi-commit deltas,
-  crash-replay before commit ⇒ at-least-once, idempotent keyed apply ⇒
-  exactly-once (integration-proven against a dedup fingerprint index in
-  test_cdf_cursor_feeds_incremental_dedup_index).
-
-### bloom_build / bloom_contains: encoding A/B (the O(1)-probe requirement)
-Bloom bitset of the eval set's n-grams, probed row-locally by the corpus
-scan — ZERO joins until the exact verification of bloom survivors. The
-bitset encoding was measured three ways (65k x 4-hash probes, warm):
-
-| encoding | probe cost | why |
-|---|---|---|
-| literal long array + element_at | 15.7 s | inline CreateArray literal re-materialized per evaluation |
-| hex string + substring(col pos) | 5.3 s | STRING substring walks bytes to count UTF-8 codepoints — O(m) per probe |
-| BINARY + substring(col pos) | 0.5 s | binary slice is a byte offset — O(1) |
-
-The binary literal is one codegen object reference; probe = md5 + byte
-slice + hex/conv + shift/AND, all whole-stage-codegen. bloom_decontaminate
-sf0.01 warm: 1.6 s Spark-side. The driver-side build collect is bounded
-by the BITSET size (distinct set positions <= m), never the corpus.
-
-### similarity_ivf_pq: composed index, scan fraction = nprobe / n_cells
-IVF cells restrict PQ-ADC to the probed quarter of the code table
-(nprobe=4 of 16): candidate admission is one broadcast probe join on the
-cell id, distance is the broadcast LUT join + map-side-combinable SUM —
-corpus touched only through (cell, 8 codes) rows; full vectors never load
-at search time. Correctness anchor: nprobe=16 (all cells) is pinned
-row-identical to full-corpus pq_adc_topk in pytest; the oracle replays
-the ENTIRE composite (cell ranking → encode → LUT → ADC) with exact
-integer distances and hash-matches.
-
-### dedup_semantic_keep: SemDeDup with a differential-able quantizer
-Embedding-space keep-one-per-cluster: IVF cell assignment (row-local
-against literal seed centroids — the oracle-expressible stand-in for
-k-means; kmeans_train is the data-adaptive drop-in), cell-blocked exact
-cosine pairs (never an unblocked cross join), min-label connected
-components vs the oracle's recursive CTE. Pytest pins the SemDeDup
-guarantee: the kept corpus contains no within-cell pair above the
-threshold.
-
-### Round-4 continuation scale measurements (scale_check --dedup, k=5, sf0.1)
-The replication-safe sharded replica extended to the new family
-(load_avg 6.6 during the run; ratio = t_5x / t_1x, 5.0 would be linear):
-
-| query | 1x | 5x | ratio |
-|---|---|---|---|
-| bloom_decontaminate | 2.60 s | 3.66 s | **1.41** |
-| similarity_ivf_pq | 12.66 s | 7.33 s | **0.58** |
-| dedup_repeated_spans | 0.49 s | 0.56 s | **1.15** |
-| (prior family, same run) minhash_lsh 1.10 / simhash_pairs 2.05 / pq_adc 1.23 / prefix_filter 3.62 | | | |
-
-All deeply sub-linear: the 5x corpus costs far less than 5x the time —
-fixed overheads (plan build, codegen, the per-query LUT/bitset
-construction) dominate at this sf, and the data-dependent stages fan out.
-The ivf_pq ratio < 1 is co-tenant noise on the 1x batch (12.7 s vs the
-7.3 s 5x median on a shared box), not a plan property — the signal is
-that 5x data did NOT scale the wall-clock, consistent with its
-probe-restricted scan. dedup_semantic_keep is excluded from the replica
-by design: embedding vectors replicate verbatim across shards, so
-identical copies would pair quadratically (workload change, not plan).
-
-## Round 5
-
-### Commit critical section: distributed stat collection + reuse-key hardening
-`_write_manifest` footer stats for files NEW in a commit no longer run as
-a serial driver loop (VERDICT r4 "What's wrong" #1). Measured first:
-threads do NOT help — pyarrow footer parsing is GIL-bound CPU work, and a
-16-thread pool convoyed to ~10x SLOWER than serial (0.36 s vs 0.04 s for
-640 hot-cache files). A fork-based PROCESS pool parses in true parallel:
-2,000-file commit 0.30 s serial → 0.11 s pooled hot-cache (2.1-2.6x), and
-in the latency-bound regime the design targets (object-store/network
-footer reads, 2 ms simulated per read) the pooled path is bounded by
-n_workers (16x asymptotic; a thread pool measured only 3.6x under the
-same latency because parsing still serializes on the GIL). Fork children
-inherit the loaded module — no import/pickling fragility, no Spark
-python-worker dependency; batches under 64 files keep the serial loop
-(pool startup dominates); platforms without fork fall back serially.
-Equivalence is test-pinned (pool output byte-identical to serial, in
-order). The stats-reuse key for carried files is now
-`(path, size, mtime_ns)` — hardlinks share the inode so carry still
-reuses for free, while a same-size rewrite can never inherit stale
-bounds (poisoned-manifest test proves both the re-read and the reuse
-path); legacy entries without mtime_ns are conservatively re-read.
-
-### Round-5 rotation and the 19 new queries
-`_PRIORITY` now packs the 50-slot driver window entirely with
-never-verified entries: the 13-query sentinel core, the 17 round-4
-queries (all judge-selfcheck green in the r4 verdict), `approx_sketches`
-(oracle-paired since r4, never windowed), and 19 round-5 additions —
-events analytics (OHLC bars, transition mining, last-touch attribution,
-EWMA), market-basket pairs, token entropy, curriculum staging, URL
-functions, BM25, exact fixed-point k-means, cosine range search,
-MaxSim, containment pairs, cross-field blocking, grouped OLS, triangle
-counting, and three lakehouse queries (schema evolution, OPTIMIZE,
-partition evolution). After a green r5, all 183 registered queries have
-a driver row on record except nothing — the window covers the entire
-remaining debt. All 19 were verified pre-commit with selfcheck (exact
-DuckDB differential) AND driver_sim (vanilla session + pandas hashing),
-and plan-audited (0 flags; global ranks use the new util.global_rank
-two-pass offset scheme — extracted from train_shuffle — instead of
-single-task unpartitioned windows).
-
-### Two real bugs the new differentials caught
-1. **Partition-directory escaping (whole-table duplication).** The
-   schema-evolution differential on `part` (values like `Brand#9`)
-   returned 2x rows: COW touched_rels recorded `p_brand=Brand#9` while
-   Spark writes `p_brand=Brand%239`, so the carry loop matched nothing
-   and hardlinked every base partition ON TOP of the rewrite. All
-   partition-directory strings now go through Spark's escapePathName
-   charset; expression-side comparisons (CDF pruning, OPTIMIZE WHERE)
-   unescape driver-side and compare raw values with an unambiguous
-   separator. This also makes timestamp partition values (':' escaped)
-   work. Pinned by test with '#', ':', '%' values across merge, CDF,
-   and compact_partitions.
-2. **Fully-emptied snapshots unreadable.** The model-based property
-   test (hypothesis) generated a DELETE matching every row; the
-   resulting version has zero data files and the parquet read failed
-   schema inference. Every data-bearing commit now records schema JSON
-   in the log (restore/clone inherit nearest-at-or-before) and
-   zero-file snapshots synthesize the empty frame — merges and the
-   change feed work across the empty epoch.
-
-### Numeric-determinism lessons re-learned (pinned in code comments)
-* `CAST(round(x, n) * 10^n AS BIGINT)` is NOT cross-engine stable —
-  Spark truncates the long cast, DuckDB rounds; route through
-  `CAST(x AS DECIMAL(p, n))` like dsum (caught live by
-  text_ngram_entropy's first run).
-* A final `round(x, 9)` on top of a quantized sum can flip at half-way
-  boundaries the quantization itself lands on (4.0882208355…); when the
-  value is already an exact-long divided by a power of ten, emit it
-  un-rounded — the division is one correctly-rounded op on both engines.
-* DECIMAL(18,9) overflows at ratio exactly 1.0 scaled by 10^9 — size
-  the precision for the scaled maximum, not the typical value.
-
-### Merge-on-read deletion vectors + CDC replication (round-5 flagship)
-The COW-only write path paid table-fraction rewrite cost for SPARSE
-mutations — the exact workload (RTBF purge, late corrections at 0.01 %
-selectivity) a 100 TB fact table sees daily. DELETE/UPDATE/MERGE now
-take `mode='mor'` / `write_mode='mor'`: the commit hardlink-carries
-every data file and adds (relative-file, `_metadata.row_index`)
-tombstones under a per-version `_dv/` sidecar (appends for update/merge
-images); readers subtract them with ONE anti-join (AQE broadcasts the
-tombstone side — no hint, plan-audit rule holds). Tombstones mirror the
-hive layout, so a later COW rewrite or partition-scoped OPTIMIZE retires
-exactly the rewritten partitions' vectors — the rewrite reads the
-DV-applied snapshot, so survivors materialize and the vectors die with
-the files they reference. `_dv_counts.json` keeps `table_stats` exact
-without file opens. Row identity is positional (Spark's stable
-`_metadata.row_index`), so tombstoning needs no table key. Measured
-(`scale_check --table 5`, sf0.1, load 7.7): the same scattered 0.1 %
-delete wrote 7.45 MB under COW (whole table: the predicate touches every
-partition) vs 36.9 KB of tombstones under MOR — **202x less write IO at
-5x scale, and the ratio GROWS with table size** (tombstone bytes track
-deleted rows, rewrite bytes track the table). Post-delete read tax: DV
-read 1.28 s vs 0.31 s plain at 5x — sub-linear in k (1.9x for 5x data)
-and retired at the next OPTIMIZE; that is the MOR bargain, stated and
-measured. Correctness: MOR ops joined the model-based hypothesis test
-(random COW/MOR/restore/OPTIMIZE interleavings vs a dict oracle,
-time-travel checked at every historical version), a COW-equals-MOR
-merge differential, and driver-facing oracle queries
-`table_delete_vectors` / `table_merge_mor`.
-
-The change-feed story is now closed end-to-end: `replicate_changes`
-applies `read_changes_since` deltas to a DOWNSTREAM versioned table
-(bootstrap snapshot → per-call keyed delete/upsert merges, optionally
-MOR-applied) with the cursor committed only after the replica publish.
-Crash replay re-applies the same delta; both merges are idempotent, so
-the replica converges exactly-once — pinned by a test that rewinds the
-cursor mid-pipeline, and by oracle query `table_cdc_replication` which
-aggregates the REPLICA after a COW update + MOR delete upstream.
-
-### Round-5 window + differential status
-`_PRIORITY` now: 5-query sentinel core (the rotated-out sentinels are
-driver-green in r1-r4 and sit in the backstop), the 17 r4 queries,
-approx_sketches, 19 early-r5 additions, 3 lakehouse (MOR/CDC) and 5
-analytics (sequence match, MAD outliers, covariance matrix, chi-square
-cells, linear interpolation) late-r5 additions = exactly 50 slots, all
-never-driver-verified except the sentinels. Builder-run
-`tools/selfcheck.py` over the full 50-slot window at sf0.01: **50/50
-exact-value pass** (log: /tmp/window_selfcheck.log of this session).
-One cross-engine determinism lesson re-learned: DECIMAL product RESCALE
-(scale 14 → 8) hits half-way ties that Spark and DuckDB break
-differently — stats_covariance_matrix now quantizes each VALUE once to
-a scale-4 integer and keeps every sum in exact int64, no rescale
-anywhere (caught by its first selfcheck, fixed same-session).
-
-### RTBF physical purge + the tombstone-visibility trap
-`purge_where` = COW delete + vacuum with BYTE-SCAN proof — and its test
-immediately caught a real compliance trap: a row tombstoned by an
-earlier MOR delete is invisible to any LOGICAL delete predicate, so a
-naive delete_where-based purge hardlinks that row's partition forward
-with the bytes intact. Purge therefore plans touched partitions against
-the PHYSICAL (pre-DV) scan and rewrites every partition holding a
-physical match from the DV-applied read — materializing tombstones on
-the way — then vacuums history. The test greps every surviving parquet
-file for the purged payloads (with delimiter-terminated needles; the
-first version of the needle was a byte-prefix of other payloads and
-false-positived). Returns residual_versions so an auditor can see when
-erasure is incomplete (keep_last > 1, racing commits).
-
-### Round-5 bench (builder protocol run, 3 isolated cold runs, sf0.1)
-Medians: cold 25.52 / warm 17.38 with the NEW headline entry
-merge_into_versioned (4.06 cold / 2.80 warm — it creates a table, runs
-a COW merge, and reads back, so it prices the full lakehouse write
-path). The r4-comparable 16-query cold subtotal is 21.46 vs the r4
-protocol median 22.73 (0.94x); per-run loads rose 1.0→6.2 across the
-three runs and per-run cold spread was [23.3, 31.8] — the variance
-protocol is what keeps that from reading as a regression. BFS/pagerank
-family note: iterative queries cost ~10 s at sf0.01 in this
-environment regardless of data size — per-round job overhead, not plan
-cost (pinned by comparing graph_bfs_levels 10.4 s warm vs
-graph_pagerank 10.5 s; the BFS loop also demonstrated the quadratic-
-lineage trap — unpersisted, its 36-join union plan measured 55 s of
-mostly codegen, vs 11-17 s with per-round persist).
-
-### Full-catalog differential + hybrid retrieval (late round 5)
-Builder-run `tools/selfcheck.py` over the ENTIRE registry at sf0.01:
-**192/192 exact-value pass** (log /tmp/full_selfcheck_r5.log) — not just
-the 50-slot driver window; every registered query matches its DuckDB
-oracle on row count, schema, and values. Additions since:
-`search_hybrid_rrf` (reciprocal-rank fusion of the bm25_search pipeline
-reused verbatim and a cosine top-50 — the sparse+dense RAG combiner;
-rank-only fusion keeps it scale-robust and the two single-op divisions
-keep it bit-deterministic) and `graph_bfs_levels` — both selfcheck +
-vanilla-session driver_sim green and queued first for the round-6
-window (the round-5 window is at its 50-slot capacity). New
-table-format surface this block: set_checks (validated, version-
-resolved ALTER constraints), tombstone_heavy_partitions (sidecar-
-planned MOR maintenance trigger, wired into the streaming sink),
-DV-pruned scans, purge_where, and the MOR-vs-COW optimistic-
-concurrency race test.
-
-### Live database scan/sink against a REAL server (VERDICT r4 missing #2)
-The container ships no MySQL/JDBC jar — but it ships a complete
-PostgreSQL install. sources/pgsql.py now implements the reference's live
-connect/scan/update-sink contract (main.go:78-97, 217-240) over `psql`
-subprocesses: pg_scan splits the key range into JDBC-style stride
-predicates and EACH SPARK TASK streams its slice via server-side
-`COPY (SELECT…) TO STDOUT CSV` (N concurrent range scans, no driver
-funnel; explicit NULL sentinel so NULL ≠ empty string); pg_upsert_sink
-writes batched `INSERT … ON CONFLICT DO UPDATE` per partition —
-set-based, idempotent under task retries. tests/test_pgsql_live.py
-boots a PRIVATE postgres per session (initdb + pg_ctl as the
-unprivileged nobody uid over a unix socket — postgres refuses root;
-pytest tmp dirs are untraversable by nobody, so the server lives in a
-0755 mkdtemp) and proves: 4-slice parallel scan row/aggregate/quoting/
-NULL parity, and upsert → re-scan snapshots with exact idempotent
-replay. The DBAPI twins (io.py dbapi_parallel_scan, merge.py
-dbapi_upsert_writer) remain for generic drivers; the live contract
-itself is no longer a stub.
-
-## Round 5 — closing summary (builder-run evidence)
-* **Catalog: 195 registered queries, 195 oracle-paired, 195/195
-  exact-value selfcheck green at sf0.01** (final sweep this session,
-  /tmp/full_selfcheck_r5_final.log) — zero rows-only entries remain.
-* **Driver window: 50/50 selfcheck green AND 50/50 vanilla-session
-  driver_sim green** (exact harness replica incl. pandas hashing).
-  Queued first for round 6 (all individually selfcheck + driver_sim
-  verified): graph_bfs_levels, search_hybrid_rrf,
-  multimodal_phash_dedup, table_insert_append.
-* **pytest: 234 passed, 1 env-skip at close** (transformWithState execution —
-  needs protobuf; plan-construction asserted everywhere).
-* **Plan audit: 0 flagged across the catalog** (judge-rule sweep re-run
-  this session pre-additions; each addition audited individually).
-* Round-5 build: merge-on-read deletion vectors (delete/update/merge/
-  streaming; 202x write-IO win measured), CDC replication, RTBF
-  physical purge (byte-scan-proven; caught the tombstone-visibility
-  trap), INSERT INTO, ALTER TABLE set (DROP/RENAME/constraints),
-  tombstone-ratio OPTIMIZE trigger, DV-pruned scans, commit-history
-  Python Data Source (batch + streaming), transformWithState operator,
-  perceptual-hash image dedup (oracle-paired end-to-end), hybrid RRF
-  retrieval, recursive-CTE BFS, five exact-analytics queries, and a
-  LIVE PostgreSQL scan/sink integration-tested against a real server.
-* Bugs found by this round's own harnesses: MOR-after-full-wipe schema
-  inference (model-based test), covariance decimal-rescale tie
-  divergence (selfcheck), purge-vs-tombstone visibility (byte-scan
-  test), BFS quadratic-lineage/seed-fanout plan pathologies (bench
-  timing).
-
-### Flagship pipeline against the live database
-test_pgsql_live.py now also runs the ENTIRE reference main() against the
-real server: oc_share seeded IN PostgreSQL, scanned live through 3
-parallel psql slices, the full enrich→route→versions-lookup→create→
-update plan computes the updates, and they flow back through the upsert
-sink; the final DB state matches the parquet-fixture differential row
-for row (spaces-in-path share included), and a REPLAY over the migrated
-table computes zero updates (router sends migrated shares down the
-audit-only branch) leaving the database byte-identical — the
-idempotence property the reference's row-loop cannot cheaply offer.
-
-### Late round 5: full ALTER surface, live-DB pipeline, real-concurrency fix
-INSERT INTO (append-only, O(inserted rows), type-aligned), logical DROP
-COLUMN (subset-select reads; physical retirement at the next full
-rewrite) and logical RENAME COLUMN (coalesce(new, old) over mixed-name
-snapshots; restore/clone record the active rename chain; CDF maps the
-old side forward) complete the ALTER TABLE surface at zero data IO. The
-model-based property test gained insert + rename ops — the dict oracle
-now tracks the value column's logical name per version, so
-rename→restore→rename chains over carried old-name files are fuzzed;
-5 consecutive randomized runs green. A REAL two-thread concurrency
-stress (one COW writer, one MOR writer, merge_with_retry) exposed a
-protocol bug the monkeypatched race test could not: an in-flight
-writer's claim (pointer not yet swapped) was misdiagnosed as a crashed
-orphan. commit_with_retry now polls claim/staging filesystem activity
-(vacuum's liveness signal) and only raises the orphan error on a claim
-stagnant past the in-flight grace; the stress lands all 10 commits with
-a gapless version chain. The flagship migration pipeline also now runs
-END-TO-END against the live PostgreSQL server (scan → plan → upsert
-back → replay no-op), and capture_plans.py carries two new flagship
-dumps: the MOR tombstone anti-join read and the single-Arrow-boundary
-perceptual-hash plan.
-
-### DB→lakehouse bridge (closing the live-source loop)
-pg_incremental_ingest completes the live-database story in the other
-direction: watermark-cursor slices (server-side `cursor_col > watermark`
-predicate — the backlog is never re-read; the slice's own min/max bound
-the parallel stride scan), applied to a versioned table as a keyed merge
-(an updated-at watermark then captures UPDATES, not just inserts) or an
-append, cursor committed only after the versioned publish. Live-tested
-including a rewound-cursor crash replay that must converge without
-duplicating. Together with replicate_changes (lakehouse→lakehouse) and
-pg_upsert_sink (lakehouse→DB) the engine now covers all three legs of
-the reference's data-movement triangle against real storage.
-
-### Round-5 final bench (3-run protocol, sf0.1, low-contention window)
-Medians: cold 21.19 / warm 13.37 (spread cold [20.83, 22.59], run-start
-loads 0.7–4.5) with merge_into_versioned in the headline at 3.46 cold /
-2.44 warm. The r4-comparable 16-query subtotal: **17.73 cold vs the r4
-protocol median 22.73 (0.78x) and 10.93 warm vs 12.55 (0.87x)** — at
-comparable load the engine is measurably faster than last round on
-byte-identical plans plus the round's fixes; the earlier same-session
-run at loads 1.0–6.2 had read 25.5/17.4, which is precisely the
-co-tenant variance the protocol exists to expose.
-
-### Write-audit-publish
-merge_into(publish=False) completes the lakehouse write-governance set:
-the staged version directory and manifest are fully materialized and a
-`.staged.json` log entry keeps the commit invisible to history/readers/
-CDF (auditors read it explicitly by version); publish_staged promotes
-the entry and swaps the pointer in one atomic step, refusing when a
-competitor published first; abandon_staged releases the claim so the
-version number is reusable. A staged commit deliberately holds the
-version claim — the activity-aware retry loop added earlier makes
-competing writers wait rather than misfire the orphan error.
-
-### Round-5 final additions after the closing summary
-Write-audit-publish staging (merge_into publish=False →
-publish_staged/abandon_staged, vacuumed-stage publish guard), AS OF
-TIMESTAMP reads, hash-sliced live scans for non-numeric keys (NULL keys
-coalesced into a bucket — a NULL hash silently dropped rows, caught by
-the live fixture), pg_incremental_ingest (DB→lakehouse watermark
-bridge), staged commits hidden from the history source, and the
-in-flight-writer orphan-misdiagnosis fix with a two-thread COW-vs-MOR
-stress. Final gates after ALL of it: pytest 234 passed / 1 env-skip,
-driver window selfcheck 50/50 (third sweep), window driver_sim 50/50,
-full-catalog selfcheck 195/195, plan audit 0 flagged.
-
-### Round-5 definitive close: 200 queries, 200/200 exact
-Five more idiom queries landed after the earlier close (gaps-and-
-islands, Welch t from exact sufficient statistics, exact weighted
-median, rolling distinct actives via dedup-then-range-join, and the
-one-row bit-reproducible dataset card), each triple-verified
-(selfcheck + vanilla driver_sim + plan audit; driver_sim's dtype hash
-caught a DuckDB HUGEINT sum leaking into the weighted-median oracle).
-The definitive full-catalog sweep after everything: **200 registered
-queries, 200 oracle-paired, 200/200 exact-value green at sf0.01**
-(/tmp/full_selfcheck_200.log). Round-6 window queue (all pre-verified):
-graph_bfs_levels, search_hybrid_rrf, multimodal_phash_dedup,
-table_insert_append, window_gap_islands, stats_ttest_groups,
-agg_weighted_median, events_rolling_distinct_users, train_dataset_card.
-"""
-
 
 def main() -> None:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    sf = sys.argv[1] if len(sys.argv) > 1 else os.environ["SPARK_GRAFT_SF_DIR"]
     spark = get_spark(app_name="plans")
     out = [
         "# PLANS — physical-plan evidence for flagship queries",
@@ -850,8 +83,6 @@ def main() -> None:
             out += [x.strip()[:160] for x in interesting[:4]]
             out += ["```"]
         out.append("")
-    out.append(EPILOGUE.strip())
-    out.append("")
     # preserve the per-round narrative: everything at/after the marker in
     # the existing file survives regeneration (the plan dumps above are
     # the only regenerated part)
@@ -860,14 +91,14 @@ def main() -> None:
         "capture_plans.py preserves everything below this line -->"
     )
     try:
-        existing = open("/root/repo/PLANS.md").read()
+        existing = open(PLANS).read()
         i = existing.find(marker)
         if i >= 0:
             out.append(existing[i:].rstrip())
             out.append("")
     except OSError:
         pass
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(PLANS, "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(out)} lines)")
 

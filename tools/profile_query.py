@@ -19,10 +19,12 @@ prints one line:
   compiling them (Spark's ``CodeGenerator``);
 - ``jit_ms``: JIT compile time (``CompilationMXBean``).
 
-Pass 1 is cold; later passes show what a repeating workload still pays. The
-tool only reads ``/proc`` and JVM counters, so it needs Linux. It is not
-named ``profile.py``: that would shadow the standard-library module that
-``cProfile``, and so ``pyspark``, imports for every script in ``tools/``.
+Pass 1 is cold; later passes show what a repeating workload still pays.
+``profile_pass`` measures any zero-argument callable the same way, and
+``tools/scale_check.py`` builds on it. The tool only reads ``/proc`` and JVM
+counters, so it needs Linux. It is not named ``profile.py``: that would
+shadow the standard-library module that ``cProfile``, and so ``pyspark``,
+imports for every script in ``tools/``.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -97,7 +100,9 @@ def _counters(spark) -> tuple[int, float, float]:
     )
 
 
-def _run(spark, name: str, sf_dir: str) -> None:
+def run_query(spark, name: str, sf_dir: str) -> None:
+    """Run one registered query over ``sf_dir`` to completion (a noop
+    write) and release what it persisted."""
     if name in Q.PHASED:
         build, read = Q.PHASED[name]
         df = read(spark, build(spark, sf_dir))
@@ -107,12 +112,15 @@ def _run(spark, name: str, sf_dir: str) -> None:
     U.release_persisted()
 
 
-def profile_pass(spark, pid: int, name: str, sf_dir: str) -> dict[str, float]:
-    """Run ``name`` once and return the pass's row (see the module doc)."""
+def profile_pass(spark, pid: int, fn: Callable[[], object]) -> dict[str, float]:
+    """Call ``fn`` once and return the pass's row (see the module doc);
+    ``pid`` is the driver JVM's. The row also carries ``jit``, the JIT
+    compilers' CPU: ``c2 + c1 + exited``, since the JVM starts and retires
+    compiler threads on demand."""
     total0, threads0 = _jvm_threads(pid)
     counters0 = _counters(spark)
     py0, t0 = time.process_time(), time.perf_counter()
-    _run(spark, name, sf_dir)
+    fn()
     wall, py = time.perf_counter() - t0, time.process_time() - py0
     counters1 = _counters(spark)
     total1, threads1 = _jvm_threads(pid)
@@ -121,6 +129,7 @@ def profile_pass(spark, pid: int, name: str, sf_dir: str) -> dict[str, float]:
     for tid, (comm, cpu) in threads1.items():
         row[_group(comm)] += cpu - threads0.get(tid, (comm, 0.0))[1]
     row["exited"] = (total1 - total0) - sum(row[g] for g in GROUPS)
+    row["jit"] = row["c2"] + row["c1"] + row["exited"]
     row["wall"], row["py"] = wall, py
     row["janino"], row["janino_ms"], row["jit_ms"] = (
         b - a for a, b in zip(counters0, counters1)
@@ -141,7 +150,7 @@ def main(argv: list[str]) -> int:
     print(f"{name} at {sf_dir}, {passes} passes, CPU in seconds")
     print("pass " + " ".join(f"{c:>9}" for c in cols))
     for i in range(1, passes + 1):
-        row = profile_pass(spark, pid, name, sf_dir)
+        row = profile_pass(spark, pid, lambda: run_query(spark, name, sf_dir))
         print(f"{i:>4} " + " ".join(
             f"{row[c]:>9.0f}" if c in ("janino", "janino_ms", "jit_ms") else f"{row[c]:>9.2f}"
             for c in cols
