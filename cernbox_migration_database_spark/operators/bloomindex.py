@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from . import store_state
 from .sketches import bloom_pos
-from .table_format import current_version, partition_scheme, read_changes, read_table
+from .table_format import current_version, partition_scheme, read_table
 
 _STATE_SUFFIX = ".bloomindex.json"
 
@@ -193,43 +193,35 @@ def refresh_bloom_index(spark: SparkSession, index_path: str) -> int:
     their positions into the post-image partition. Deletes are a NO-OP by
     design (add-only; stale bits are false-positive reads, never misses).
     O(changed rows) cluster work, zero shuffle beyond the CDF diff."""
-    st = store_state.read(index_path)
-    cur = current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
-    ch = read_changes(
-        spark,
-        st["base_root"],
-        key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
-    )
-    # debt counters (bloom_debt_report): one KiB-result aggregate over
-    # the feed the fold already reads — deletes leave stale bits the
-    # report prices, inserts grow the live-key denominator
-    by_type = {
-        r["_change_type"]: int(r["n"])
-        for r in ch.groupBy("_change_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    st["adds_since_build"] = (
-        st.get("adds_since_build", 0) + by_type.get("insert", 0)
-    )
-    st["deletes_since_build"] = (
-        st.get("deletes_since_build", 0) + by_type.get("delete", 0)
-    )
-    adds = ch.where(F.col("_change_type").isin("insert", "update"))
-    bitsets = _blooms_from_json(st)
-    _fold(
-        bitsets,
-        _part_positions(adds, st["key"], st["part_col"], st["m_bits"], st["k"]),
-        st["m_bits"],
-    )
-    st["base_version"] = cur
-    st["blooms"] = _blooms_to_json(bitsets)
-    store_state.write(index_path, st)
-    return cur
+
+    def fold(st, ch, cur):
+        # debt counters (bloom_debt_report): one KiB-result aggregate over
+        # the feed the fold already reads — deletes leave stale bits the
+        # report prices, inserts grow the live-key denominator
+        by_type = {
+            r["_change_type"]: int(r["n"])
+            for r in ch.groupBy("_change_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        st["adds_since_build"] = (
+            st.get("adds_since_build", 0) + by_type.get("insert", 0)
+        )
+        st["deletes_since_build"] = (
+            st.get("deletes_since_build", 0) + by_type.get("delete", 0)
+        )
+        adds = ch.where(F.col("_change_type").isin("insert", "update"))
+        bitsets = _blooms_from_json(st)
+        _fold(
+            bitsets,
+            _part_positions(
+                adds, st["key"], st["part_col"], st["m_bits"], st["k"]
+            ),
+            st["m_bits"],
+        )
+        st["blooms"] = _blooms_to_json(bitsets)
+
+    return store_state.fold_window(spark, index_path, fold)
 
 
 def _may_contain(bitset: bytes, positions: list[int]) -> bool:
@@ -251,13 +243,7 @@ def bloom_prune_lookup(
     MISS rows (the false negative the contract forbids). Refresh first;
     the fold is O(changed rows)."""
     st = store_state.read(index_path)
-    cur = current_version(st["base_root"])
-    if cur != st["base_version"]:
-        raise ValueError(
-            f"bloom index at version {st['base_version']} but base is at "
-            f"{cur} — unfolded inserts would be silently missed; run "
-            "refresh_bloom_index() first"
-        )
+    store_state.check_current(st, "refresh_bloom_index")
     k, m = st["k"], st["m_bits"]
     base = read_table(spark, st["base_root"])
     key_type = dict(base.dtypes)[st["key"]]

@@ -204,18 +204,24 @@ def ingest_clusters(spark: SparkSession, cluster_root: str) -> int:
     re-insert (post-image re-probes with the batch); the decomposition
     is complete because the edge predicate depends only on final
     content."""
-    st = store_state.read(os.path.join(cluster_root, _STATE))
-    idx = st["index_root"]
-    st_idx = store_state.read(os.path.join(idx, LX._META))
-    base_root, id_col = st_idx["base_root"], st_idx["id_col"]
-    cur = TF.current_version(base_root)
-    if cur == st["base_version"]:
-        return cur
-    ch = TF.read_changes(
-        spark, base_root, key=id_col,
-        from_version=st["base_version"], to_version=cur,
-        include_preimage=True,
+    return store_state.fold_window(
+        spark, os.path.join(cluster_root, _STATE),
+        lambda st, ch, cur: _ingest(spark, cluster_root, st, ch),
+        key="id_col", preimage=True, source=_index_state,
     )
+
+
+def _index_state(st: dict) -> dict:
+    """The LSH index's sidecar: it names the base table and its key."""
+    return store_state.read(os.path.join(st["index_root"], LX._META))
+
+
+def _ingest(
+    spark: SparkSession, cluster_root: str, st: dict, ch: DataFrame
+) -> None:
+    idx = st["index_root"]
+    st_idx = _index_state(st)
+    id_col = st_idx["id_col"]
     removed = (
         ch.where(F.col("_change_type").isin("delete", "update_preimage"))
         .select(id_col)
@@ -229,9 +235,7 @@ def ingest_clusters(spark: SparkSession, cluster_root: str) -> int:
         # layout-only window (compaction/Z-order commits): nothing to
         # cluster, but the index + state still advance to the new version
         LX.refresh_lsh_index(spark, idx)
-        st["base_version"] = cur
-        store_state.write(os.path.join(cluster_root, _STATE), st)
-        return cur
+        return
     e1 = e2 = None
     if has_batch:
         # edges incident to the batch: against the settled corpus via the
@@ -316,9 +320,6 @@ def ingest_clusters(spark: SparkSession, cluster_root: str) -> int:
                 on=["doc_a", "doc_b"], when_matched=None,
                 check_cardinality=False,
             )
-    st["base_version"] = cur
-    store_state.write(os.path.join(cluster_root, _STATE), st)
-    return cur
 
 
 def read_clusters(spark: SparkSession, cluster_root: str) -> DataFrame:

@@ -253,47 +253,52 @@ def refresh_freq_store(spark: SparkSession, store_root: str) -> int:
     and ``heavy_hitters`` would serve an incomplete set without raising.
     Deletion-heavy drift (total below half of any vet-time total) flags
     ``needs_rescan`` instead of serving silently-incomplete candidates."""
-    st = store_state.read(os.path.join(store_root, _STATE))
+    return store_state.fold_window(
+        spark, os.path.join(store_root, _STATE),
+        lambda st, ch, cur: _fold(spark, store_root, st, ch, cur),
+        preimage=True, recover=lambda st: _recover(spark, store_root, st),
+    )
+
+
+def _recover(spark: SparkSession, store_root: str, st: dict) -> None:
+    """Finish and adopt a fold the sketch committed but whose sidecar
+    write the crashed refresh never made."""
     sroot = os.path.join(store_root, "sketch")
     committed = TF.last_txn_entry(sroot, _TXN_APP)
-    seq0 = int(st.get("fold_seq", 0))
-    if committed is not None and committed["txn_ver"] > seq0:
-        # crash landed between the sketch commit and the state write —
-        # the post-commit phases (zero-prune, candidate re-vet) may not
-        # have run; redo them from the committed window before adopting
-        w_from = int(committed["fs_window"][0])
-        w_to = int(committed["fs_window"][1])
-        st["base_version"] = w_to
-        st["total"] = int(committed["fs_total"])
-        st["fold_seq"] = seq0 = int(committed["txn_ver"])
-        _prune_zero_counters(spark, sroot)
-        wch = TF.read_changes(
-            spark,
-            st["base_root"],
-            key=st["key"],
-            from_version=w_from,
-            to_version=w_to,
-            include_preimage=True,
-        )
-        _revet(
-            spark, store_root, st,
-            _tokens_signed(wch, st["text_col"]).select("token").distinct(),
-            int(st["total"]),
-        )
-        store_state.write(os.path.join(store_root, _STATE), st)
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
-    ch = TF.read_changes(
+    if committed is None or committed["txn_ver"] <= int(st.get("fold_seq", 0)):
+        return
+    # crash landed between the sketch commit and the state write —
+    # the post-commit phases (zero-prune, candidate re-vet) may not
+    # have run; redo them from the committed window before adopting
+    w_from = int(committed["fs_window"][0])
+    w_to = int(committed["fs_window"][1])
+    st["base_version"] = w_to
+    st["total"] = int(committed["fs_total"])
+    st["fold_seq"] = int(committed["txn_ver"])
+    _prune_zero_counters(spark, sroot)
+    wch = TF.read_changes(
         spark,
         st["base_root"],
         key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
+        from_version=w_from,
+        to_version=w_to,
         include_preimage=True,
     )
+    _revet(
+        spark, store_root, st,
+        _tokens_signed(wch, st["text_col"]).select("token").distinct(),
+        int(st["total"]),
+    )
+    store_state.write(os.path.join(store_root, _STATE), st)
+
+
+def _fold(
+    spark: SparkSession, store_root: str, st: dict, ch: DataFrame, cur: int
+) -> None:
     from ..util import tracked_persist
 
+    sroot = os.path.join(store_root, "sketch")
+    seq0 = int(st.get("fold_seq", 0))
     toks = tracked_persist(_tokens_signed(ch, st["text_col"]))
     d_total = toks.agg(
         F.coalesce(F.sum("__s"), F.lit(0)).cast("long")
@@ -324,9 +329,6 @@ def refresh_freq_store(spark: SparkSession, store_root: str) -> int:
         spark, store_root, st, toks.select("token").distinct(), new_total
     )
     st["total"] = new_total
-    st["base_version"] = cur
-    store_state.write(os.path.join(store_root, _STATE), st)
-    return cur
 
 
 def rescan_candidates(spark: SparkSession, store_root: str) -> int:

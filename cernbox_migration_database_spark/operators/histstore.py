@@ -152,34 +152,38 @@ def refresh_hist_store(spark: SparkSession, store_root: str) -> int:
     changes AFTER it instead of double-applying (which would silently
     corrupt counts). Zero-prune needs no recovery scoping: the state
     table is KiB-sized, so every refresh checks/prunes it in full."""
-    st = store_state.read(os.path.join(store_root, _STATE))
+    return store_state.fold_window(
+        spark, os.path.join(store_root, _STATE),
+        lambda st, ch, cur: _fold(spark, store_root, st, ch, cur),
+        preimage=True, recover=lambda st: _recover(store_root, st),
+    )
+
+
+def _recover(store_root: str, st: dict) -> None:
+    """Re-adopt a fold the store committed but whose sidecar write the
+    crashed refresh never made."""
     store_state.check_not_rebuilding(st, "rebuild_hist_store")
     committed = TF.last_txn_entry(store_root, _TXN_APP)
+    if committed is None or committed["txn_ver"] <= int(st.get("fold_seq", 0)):
+        return
+    st["base_version"] = int(committed["hs_window"][1])
+    st["fold_seq"] = int(committed["txn_ver"])
+    # the crashed refresh's clamp counters rode the commit itself —
+    # re-adopt them with the window so drift accounting stays exact
+    if committed.get("hs_clamp"):
+        st["n_clamped"] = int(st.get("n_clamped", 0)) + int(
+            committed["hs_clamp"][0]
+        )
+        st["n_added"] = int(st.get("n_added", 0)) + int(
+            committed["hs_clamp"][1]
+        )
+    store_state.write(os.path.join(store_root, _STATE), st)
+
+
+def _fold(
+    spark: SparkSession, store_root: str, st: dict, ch: DataFrame, cur: int
+) -> None:
     seq0 = int(st.get("fold_seq", 0))
-    if committed is not None and committed["txn_ver"] > seq0:
-        st["base_version"] = int(committed["hs_window"][1])
-        st["fold_seq"] = seq0 = int(committed["txn_ver"])
-        # the crashed refresh's clamp counters rode the commit itself —
-        # re-adopt them with the window so drift accounting stays exact
-        if committed.get("hs_clamp"):
-            st["n_clamped"] = int(st.get("n_clamped", 0)) + int(
-                committed["hs_clamp"][0]
-            )
-            st["n_added"] = int(st.get("n_added", 0)) + int(
-                committed["hs_clamp"][1]
-            )
-        store_state.write(os.path.join(store_root, _STATE), st)
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
-    ch = TF.read_changes(
-        spark,
-        st["base_root"],
-        key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
-        include_preimage=True,
-    )
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
@@ -242,11 +246,8 @@ def refresh_hist_store(spark: SparkSession, store_root: str) -> int:
                 when_not_matched=None,
                 check_cardinality=False,
             )
-    st["base_version"] = cur
     st["n_added"] = int(st.get("n_added", 0)) + n_add
     st["n_clamped"] = int(st.get("n_clamped", 0)) + n_out
-    store_state.write(os.path.join(store_root, _STATE), st)
-    return cur
 
 
 def estimate_quantiles(

@@ -428,39 +428,33 @@ def refresh_ivf_index(spark: SparkSession, index_root: str) -> int:
     writes bounded by the cells the changes land in. Keyed by the vector
     id (one index row per vector), so inserts/deletes/updates all fold
     exactly — the index stays a pure function of (snapshot, centroids)."""
-    st = store_state.read(os.path.join(index_root, _META))
-    store_state.check_not_rebuilding(st, "rebuild_ivf_index")
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
     cells_root = os.path.join(index_root, "cells")
-    ch = TF.read_changes(
-        spark,
-        st["base_root"],
-        key=st["id_col"],
-        from_version=st["base_version"],
-        to_version=cur,
+
+    def fold(st, ch, cur):
+        # one row per vector id: deletes drop it, inserts add it, updates
+        # re-assign it — a single keyed merge handles all three
+        removed = ch.where(F.col("_change_type") == "delete")
+        if not removed.isEmpty():
+            TF.merge_into(
+                spark, cells_root,
+                _assigned(removed.drop("_change_type"), st),
+                on=st["id_col"], when_matched="delete", when_not_matched=None,
+                check_cardinality=False,
+            )
+        upserts = ch.where(F.col("_change_type").isin("insert", "update"))
+        if not upserts.isEmpty():
+            TF.merge_into(
+                spark, cells_root,
+                _assigned(upserts.drop("_change_type"), st),
+                on=st["id_col"], check_cardinality=False,
+            )
+
+    return store_state.fold_window(
+        spark, os.path.join(index_root, _META), fold, key="id_col",
+        recover=lambda st: store_state.check_not_rebuilding(
+            st, "rebuild_ivf_index"
+        ),
     )
-    # one row per vector id: deletes drop it, inserts add it, updates
-    # re-assign it — a single keyed merge handles all three
-    removed = ch.where(F.col("_change_type") == "delete")
-    if not removed.isEmpty():
-        TF.merge_into(
-            spark, cells_root,
-            _assigned(removed.drop("_change_type"), st),
-            on=st["id_col"], when_matched="delete", when_not_matched=None,
-            check_cardinality=False,
-        )
-    upserts = ch.where(F.col("_change_type").isin("insert", "update"))
-    if not upserts.isEmpty():
-        TF.merge_into(
-            spark, cells_root,
-            _assigned(upserts.drop("_change_type"), st),
-            on=st["id_col"], check_cardinality=False,
-        )
-    st["base_version"] = cur
-    store_state.write(os.path.join(index_root, _META), st)
-    return cur
 
 
 def probe_ivf_index(

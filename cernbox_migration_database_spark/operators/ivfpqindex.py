@@ -211,35 +211,32 @@ def refresh_ivfpq_index(spark: SparkSession, index_root: str) -> int:
     keyed merges on the vector id — deletes merge their single index row
     out; updates re-encode and re-assign in place (cross-cell moves
     included, the merge rewrites the row under its new cell partition)."""
-    st = store_state.read(os.path.join(index_root, _META))
-    store_state.check_not_rebuilding(st, "rebuild_ivfpq_index")
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
     codes_root = os.path.join(index_root, "codes")
-    key = [st["id_col"]]
-    ch = TF.read_changes(
-        spark, st["base_root"], key=st["id_col"],
-        from_version=st["base_version"], to_version=cur,
+
+    def fold(st, ch, cur):
+        key = [st["id_col"]]
+        removed = ch.where(F.col("_change_type") == "delete")
+        if not removed.isEmpty():
+            TF.merge_into(
+                spark, codes_root,
+                _index_rows(removed.drop("_change_type"), st),
+                on=key, when_matched="delete", when_not_matched=None,
+                check_cardinality=False,
+            )
+        upserts = ch.where(F.col("_change_type").isin("insert", "update"))
+        if not upserts.isEmpty():
+            TF.merge_into(
+                spark, codes_root,
+                _index_rows(upserts.drop("_change_type"), st),
+                on=key, check_cardinality=False,
+            )
+
+    return store_state.fold_window(
+        spark, os.path.join(index_root, _META), fold, key="id_col",
+        recover=lambda st: store_state.check_not_rebuilding(
+            st, "rebuild_ivfpq_index"
+        ),
     )
-    removed = ch.where(F.col("_change_type") == "delete")
-    if not removed.isEmpty():
-        TF.merge_into(
-            spark, codes_root,
-            _index_rows(removed.drop("_change_type"), st),
-            on=key, when_matched="delete", when_not_matched=None,
-            check_cardinality=False,
-        )
-    upserts = ch.where(F.col("_change_type").isin("insert", "update"))
-    if not upserts.isEmpty():
-        TF.merge_into(
-            spark, codes_root,
-            _index_rows(upserts.drop("_change_type"), st),
-            on=key, check_cardinality=False,
-        )
-    st["base_version"] = cur
-    store_state.write(os.path.join(index_root, _META), st)
-    return cur
 
 
 def probe_ivfpq_index(

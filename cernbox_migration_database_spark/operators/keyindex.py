@@ -35,9 +35,7 @@ from . import store_state
 from .table_format import (
     create_table,
     current_version,
-    history,
     merge_into,
-    read_changes,
     read_table,
 )
 
@@ -82,42 +80,35 @@ def refresh_key_index(spark: SparkSession, index_root: str) -> int:
     """Advance the index to the base's current version from its change
     feed — upsert insert/update entries (post-image partition), delete
     removed keys. Never rescans the base."""
-    st = store_state.read(os.path.join(index_root, _STATE))
-    cur = current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
-    ch = read_changes(
-        spark,
-        st["base_root"],
-        key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
-    )
-    upserts = _index_frame(
-        ch.where(F.col("_change_type").isin("insert", "update")),
-        st["key"],
-        st["part_col"],
-    )
-    if not upserts.isEmpty():
-        merge_into(
-            spark, index_root, upserts, on=st["key"], check_cardinality=False
+
+    def fold(st, ch, cur):
+        upserts = _index_frame(
+            ch.where(F.col("_change_type").isin("insert", "update")),
+            st["key"],
+            st["part_col"],
         )
-    deletes = ch.where(F.col("_change_type") == "delete").select(
-        st["key"], F.lit(None).cast("string").alias("__part")
-    )
-    if not deletes.isEmpty():
-        merge_into(
-            spark,
-            index_root,
-            deletes,
-            on=st["key"],
-            when_matched="delete",
-            when_not_matched=None,
-            check_cardinality=False,
+        if not upserts.isEmpty():
+            merge_into(
+                spark, index_root, upserts, on=st["key"],
+                check_cardinality=False,
+            )
+        deletes = ch.where(F.col("_change_type") == "delete").select(
+            st["key"], F.lit(None).cast("string").alias("__part")
         )
-    st["base_version"] = cur
-    store_state.write(os.path.join(index_root, _STATE), st)
-    return cur
+        if not deletes.isEmpty():
+            merge_into(
+                spark,
+                index_root,
+                deletes,
+                on=st["key"],
+                when_matched="delete",
+                when_not_matched=None,
+                check_cardinality=False,
+            )
+
+    return store_state.fold_window(
+        spark, os.path.join(index_root, _STATE), fold
+    )
 
 
 def point_lookup(
@@ -126,8 +117,13 @@ def point_lookup(
     """Index-pruned point lookup: resolve the partitions holding ``values``
     from the index (2-column scan, key filter pushed down), then read the
     base with partition + key filters so the scan touches only those
-    partition directories. Returns the matching base rows."""
+    partition directories. Returns the matching base rows.
+
+    Raises if the base has commits the index has not folded: a moved or
+    inserted key's entry would point at the wrong partition or be
+    missing, and the lookup would silently return nothing for it."""
     st = store_state.read(os.path.join(index_root, _STATE))
+    store_state.check_current(st, "refresh_key_index")
     idx = read_table(spark, index_root)
     parts = [
         r["__part"]

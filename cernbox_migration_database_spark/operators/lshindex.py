@@ -137,40 +137,32 @@ def refresh_lsh_index(
     (state-version → current) window (clusterindex ingest) hand it over
     instead of paying the two snapshot scans again; it must carry
     ``_change_type`` with pre-images included."""
-    st = store_state.read(os.path.join(index_root, _META))
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
     bands_root = os.path.join(index_root, "bands")
-    ch = _changes if _changes is not None else TF.read_changes(
-        spark,
-        st["base_root"],
-        key=st["id_col"],
-        from_version=st["base_version"],
-        to_version=cur,
-        include_preimage=True,
-    )
     key = ["band", "bv", "doc_id"]
-    removed = ch.where(
-        F.col("_change_type").isin("delete", "update_preimage")
-    ).drop("_change_type", "_commit_version")
-    if not removed.isEmpty():
-        TF.merge_into(
-            spark, bands_root, _doc_bands(removed, st),
-            on=key, when_matched="delete", when_not_matched=None,
-            check_cardinality=False,
-        )
-    added = ch.where(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).drop("_change_type", "_commit_version")
-    if not added.isEmpty():
-        TF.merge_into(
-            spark, bands_root, _doc_bands(added, st),
-            on=key, when_matched=None, check_cardinality=False,
-        )
-    st["base_version"] = cur
-    store_state.write(os.path.join(index_root, _META), st)
-    return cur
+
+    def fold(st, ch, cur):
+        removed = ch.where(
+            F.col("_change_type").isin("delete", "update_preimage")
+        ).drop("_change_type", "_commit_version")
+        if not removed.isEmpty():
+            TF.merge_into(
+                spark, bands_root, _doc_bands(removed, st),
+                on=key, when_matched="delete", when_not_matched=None,
+                check_cardinality=False,
+            )
+        added = ch.where(
+            F.col("_change_type").isin("insert", "update_postimage")
+        ).drop("_change_type", "_commit_version")
+        if not added.isEmpty():
+            TF.merge_into(
+                spark, bands_root, _doc_bands(added, st),
+                on=key, when_matched=None, check_cardinality=False,
+            )
+
+    return store_state.fold_window(
+        spark, os.path.join(index_root, _META), fold, key="id_col",
+        preimage=True, changes=_changes,
+    )
 
 
 def probe_lsh_index(

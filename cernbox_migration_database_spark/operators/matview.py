@@ -36,7 +36,6 @@ from .table_format import (
     current_version,
     last_txn_entry,
     merge_into,
-    read_changes,
     read_table,
 )
 
@@ -143,29 +142,29 @@ def refresh_aggregate_view(spark: SparkSession, mv_root: str) -> int:
     recovered refresh also runs the zero-group prune over the FULL view
     (the crashed run's delta is gone, so its emptied groups are not
     covered by the new delta's scope)."""
-    st = store_state.read(os.path.join(mv_root, _STATE))
-    committed = last_txn_entry(mv_root, _TXN_APP)
-    seq0 = int(st.get("fold_seq", 0))
-    recovered = committed is not None and committed["txn_ver"] > seq0
-    if recovered:
-        st["base_version"] = int(committed["mv_window"][1])
-        st["fold_seq"] = seq0 = int(committed["txn_ver"])
-        store_state.write(os.path.join(mv_root, _STATE), st)
-    base_root, from_v = st["base_root"], st["base_version"]
-    group_cols, sum_cols, scale = st["group_cols"], st["sum_cols"], st["scale"]
-    cur = current_version(base_root)
-    if cur == from_v:
-        if recovered:
-            _prune_zero_groups(spark, mv_root, scope=None)
-        return cur
-    ch = read_changes(
-        spark,
-        base_root,
-        key=st["key"],
-        from_version=from_v,
-        to_version=cur,
-        include_preimage=True,
+    return store_state.fold_window(
+        spark, os.path.join(mv_root, _STATE),
+        lambda st, ch, cur: _fold(spark, mv_root, st, ch, cur),
+        preimage=True, recover=lambda st: _recover(spark, mv_root, st),
     )
+
+
+def _recover(spark: SparkSession, mv_root: str, st: dict) -> None:
+    """Adopt a fold the view committed but whose sidecar write the crashed
+    refresh never made, pruning the groups its delta emptied first."""
+    committed = last_txn_entry(mv_root, _TXN_APP)
+    if committed is None or committed["txn_ver"] <= int(st.get("fold_seq", 0)):
+        return
+    _prune_zero_groups(spark, mv_root, scope=None)
+    st["base_version"] = int(committed["mv_window"][1])
+    st["fold_seq"] = int(committed["txn_ver"])
+    store_state.write(os.path.join(mv_root, _STATE), st)
+
+
+def _fold(
+    spark: SparkSession, mv_root: str, st: dict, ch: DataFrame, cur: int
+) -> None:
+    group_cols, sum_cols, scale = st["group_cols"], st["sum_cols"], st["scale"]
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
@@ -184,7 +183,7 @@ def refresh_aggregate_view(spark: SparkSession, mv_root: str) -> int:
     for c in sum_cols:
         name = f"sum_{c}"
         adders[name] = lambda t, s, n=name: t[n] + s[n]
-    seq = seq0 + 1
+    seq = int(st.get("fold_seq", 0)) + 1
     merge_into(
         spark,
         mv_root,
@@ -193,18 +192,13 @@ def refresh_aggregate_view(spark: SparkSession, mv_root: str) -> int:
         update_set=adders,
         check_cardinality=False,  # delta is one row per group by construction
         txn=(_TXN_APP, seq),
-        commit_meta={"mv_window": [from_v, cur]},
+        commit_meta={"mv_window": [st["base_version"], cur]},
     )
-    # Prune groups whose membership dropped to zero (scoped to the delta's
-    # keys — the view is never scanned beyond the touched groups — except
-    # on crash recovery, where the crashed delta's scope is unknowable).
-    _prune_zero_groups(
-        spark, mv_root, scope=None if recovered else delta.select("__group")
-    )
-    st["base_version"] = cur
+    # Prune groups whose membership dropped to zero, scoped to the delta's
+    # keys — the view is never scanned beyond the touched groups (crash
+    # recovery pruned the whole view: the crashed delta's scope is gone).
+    _prune_zero_groups(spark, mv_root, scope=delta.select("__group"))
     st["fold_seq"] = seq
-    store_state.write(os.path.join(mv_root, _STATE), st)
-    return cur
 
 
 def _prune_zero_groups(spark, mv_root: str, scope: DataFrame | None) -> None:

@@ -102,33 +102,24 @@ def refresh_kmv_store(spark: SparkSession, store_root: str) -> int:
     + a merge over the k·#partitions-row state table. Raises on deletes /
     update pre-images in the window (see module doc) — rebuild those
     partitions instead."""
-    st = store_state.read(os.path.join(store_root, _STATE))
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
-    ch = TF.read_changes(
-        spark,
-        st["base_root"],
-        key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
-        include_preimage=True,
-    )
-    removed = ch.where(
-        F.col("_change_type").isin("delete", "update_preimage")
-    )
-    if not removed.isEmpty():
-        raise ValueError(
-            "change window contains deletes/updates — KMV minima cannot be "
-            "subtracted; rebuild_partitions() the affected partitions"
+
+    def fold(st, ch, cur):
+        removed = ch.where(
+            F.col("_change_type").isin("delete", "update_preimage")
         )
-    _fold_inserts(
-        spark, store_root, st,
-        ch.where(F.col("_change_type").isin("insert", "update_postimage")),
+        if not removed.isEmpty():
+            raise ValueError(
+                "change window contains deletes/updates — KMV minima cannot "
+                "be subtracted; rebuild_partitions() the affected partitions"
+            )
+        _fold_inserts(
+            spark, store_root, st,
+            ch.where(F.col("_change_type").isin("insert", "update_postimage")),
+        )
+
+    return store_state.fold_window(
+        spark, os.path.join(store_root, _STATE), fold, preimage=True
     )
-    st["base_version"] = cur
-    store_state.write(os.path.join(store_root, _STATE), st)
-    return cur
 
 
 def _fold_inserts(
@@ -171,40 +162,34 @@ def refresh_or_repair(
     sink's post_batch hook wants: RTBF deletes flow through and the
     estimates converge without intervention, and the repair stays loud in
     the return value — (new base version, partitions rebuilt)."""
-    st = store_state.read(os.path.join(store_root, _STATE))
-    cur = TF.current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur, []
-    ch = TF.read_changes(
-        spark,
-        st["base_root"],
-        key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
-        include_preimage=True,
+    parts: list = []
+
+    def fold(st, ch, cur):
+        removed = ch.where(
+            F.col("_change_type").isin("delete", "update_preimage")
+        ).select(F.col(st["part_col"]).alias("part"))
+        parts.extend(
+            sorted(r["part"] for r in removed.distinct().collect())
+        )
+        ins = ch.where(
+            F.col("_change_type").isin("insert", "update_postimage")
+        )
+        if not parts:
+            _fold_inserts(spark, store_root, st, ins)
+            return
+        ins = ins.where(~F.col(st["part_col"]).isin(parts))
+        if not ins.isEmpty():
+            _fold_inserts(spark, store_root, st, ins)
+        # the targeted repair is pinned to the `cur` this refresh DIFFED,
+        # not re-read: a base commit landing between the diff and the
+        # rebuild must stay in the next window (re-reading would rebuild
+        # `parts` past the folded inserts and silently skip that commit's
+        # rows outside them). It records `cur` itself, as does the window.
+        rebuild_partitions(spark, store_root, parts, version=cur)
+
+    cur = store_state.fold_window(
+        spark, os.path.join(store_root, _STATE), fold, preimage=True
     )
-    removed = ch.where(
-        F.col("_change_type").isin("delete", "update_preimage")
-    )
-    parts = sorted(
-        r["part"]
-        for r in removed.select(
-            F.col(st["part_col"]).alias("part")
-        ).distinct().collect()
-    )
-    if not parts:
-        return refresh_kmv_store(spark, store_root), []
-    ins = ch.where(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).where(~F.col(st["part_col"]).isin(parts))
-    if not ins.isEmpty():
-        _fold_inserts(spark, store_root, st, ins)
-    # the targeted repair also advances the recorded base version — pinned
-    # to the `cur` this refresh DIFFED, not re-read: a base commit landing
-    # between the diff above and the rebuild must stay in the next window
-    # (re-reading here would record a base_version past the folded inserts
-    # and silently skip that commit's rows outside `parts`)
-    rebuild_partitions(spark, store_root, parts, version=cur)
     return cur, parts
 
 

@@ -77,7 +77,7 @@ from . import store_state
 
 # Actions whose commit materializes/records a FULL uniform snapshot state:
 # the schema-evolution window, active-rename chain, and evolved-mix flag all
-# reset at the latest such entry (see _snapshot_reader / _active_renames).
+# reset at the latest such entry (see _since_reset).
 _RESET_ACTIONS = (
     "create", "compact", "repartition", "restore", "overwrite", "clone",
     "merge_branch",
@@ -897,59 +897,41 @@ def _snapshot_reader(spark: SparkSession, root: str, v: int):
     apply identical schema-evolution and column-order policy, from ONE
     commit-log read."""
     entries = [e for e in history(root) if e["version"] <= v]
-    # Hardlink-carried partitions keep their ORIGINAL files, so after a
-    # schema-evolving merge a version directory legitimately mixes footer
-    # schemas; mergeSchema reconciles them (absent columns read as null).
-    # The flag is sticky from the first evolving commit — but only back to
-    # the last FULL REWRITE (create or compact), which materializes every
-    # row under one schema; past that point the per-file footer merge is
-    # pure cost (real at 100k-file scale, where mergeSchema reads every
-    # footer instead of one).
-    last_uniform = max(
-        (
-            i
-            for i, e in enumerate(entries)
-            if e["action"] in _RESET_ACTIONS
-        ),
-        default=0,
-    )
-    # 'restore' resets to the restored snapshot's recorded state: its own
-    # commit carries the evolved flag of what it hardlinked back in.
-    evolved = any(e.get("evolved") for e in entries[last_uniform:])
+    evolved, renames = _since_reset(entries)
     reader = spark.read.option("mergeSchema", "true") if evolved else spark.read
     # Logical column order of THIS version's commit — a partitioned parquet
     # read surfaces the partition column last, which would leak the
     # physical layout into the table's schema contract.
     cols = entries[-1].get("columns") or entries[0].get("columns")
-    # ACTIVE renames: files written before a rename_column commit carry
-    # the old field name until the next full rewrite; reads map them to
-    # the logical name. restore/clone record the renames that were active
-    # in the snapshot they hardlinked back in (same contract as the
-    # evolved flag).
-    renames = list(entries[last_uniform].get("renames_active") or [])
-    renames += [
-        e["renamed"] for e in entries[last_uniform:] if e.get("renamed")
-    ]
     return reader, cols, _part_cols(entries[-1].get("partition_by")), renames
 
 
-def _active_renames(entries: list[dict]) -> list[list[str]]:
-    """The rename chain in effect at the LAST entry (same windowing as
-    :func:`_snapshot_reader`) — what restore/clone must record so carried
-    old-name files stay readable after the reset point."""
+def _since_reset(entries: list[dict]) -> tuple[bool, list[list[str]]]:
+    """(evolved, active renames) at the LAST entry, both windowed from the
+    last FULL REWRITE (a ``_RESET_ACTIONS`` commit), which materializes
+    every row under one schema.
+
+    * evolved: hardlink-carried partitions keep their ORIGINAL files, so
+      after a schema-evolving merge a version directory legitimately mixes
+      footer schemas and reads need mergeSchema (absent columns read as
+      null). The flag is sticky from the first evolving commit back to the
+      reset point; past it the per-file footer merge is pure cost (real at
+      100k-file scale, where mergeSchema reads every footer instead of
+      one). A 'restore' reset carries the evolved flag of what it
+      hardlinked back in.
+    * renames: files written before a rename_column commit carry the old
+      field name until the next full rewrite; reads map them to the
+      logical name. restore/clone/merge_branch record the chain active in
+      the snapshot they hardlinked in, so carried old-name files stay
+      readable after the reset point."""
     last_uniform = max(
-        (
-            i
-            for i, e in enumerate(entries)
-            if e["action"] in _RESET_ACTIONS
-        ),
+        (i for i, e in enumerate(entries) if e["action"] in _RESET_ACTIONS),
         default=0,
     )
-    renames = list(entries[last_uniform].get("renames_active") or [])
-    renames += [
-        e["renamed"] for e in entries[last_uniform:] if e.get("renamed")
-    ]
-    return renames
+    tail = entries[last_uniform:]
+    renames = list(tail[0].get("renames_active") or [])
+    renames += [e["renamed"] for e in tail if e.get("renamed")]
+    return any(e.get("evolved") for e in tail), renames
 
 
 def _apply_renames(df: DataFrame, renames) -> DataFrame:
@@ -2136,15 +2118,7 @@ def restore(root: str, version: int) -> int:
     # layout, and whether its files mix footer schemas (evolved since its
     # last full rewrite) — read_table treats 'restore' as a reset point
     # carrying exactly this flag.
-    last_uniform = max(
-        (
-            i
-            for i, e in enumerate(entries)
-            if e["action"] in _RESET_ACTIONS
-        ),
-        default=0,
-    )
-    evolved = any(e.get("evolved") for e in entries[last_uniform:])
+    evolved, renames = _since_reset(entries)
     new_v = base_v + 1
     vdir = _claim_version(root, new_v)
     staging = vdir + ".staging"
@@ -2179,7 +2153,7 @@ def restore(root: str, version: int) -> int:
             "columns": entries[-1].get("columns") or entries[0].get("columns"),
             "evolved": evolved,
             # carried old-name files stay mapped after the reset point
-            "renames_active": _active_renames(entries),
+            "renames_active": renames,
         },
     )
     return new_v
@@ -2211,15 +2185,7 @@ def clone_table(
     if os.path.exists(os.path.join(dst_root, _POINTER)):
         raise FileExistsError(f"versioned table already exists at {dst_root}")
     entries = [e for e in history(src_root) if e["version"] <= v]
-    last_uniform = max(
-        (
-            i
-            for i, e in enumerate(entries)
-            if e["action"] in _RESET_ACTIONS
-        ),
-        default=0,
-    )
-    evolved = any(e.get("evolved") for e in entries[last_uniform:])
+    evolved, renames = _since_reset(entries)
     os.makedirs(dst_root, exist_ok=True)
     vdir = _claim_version(dst_root, 1)
     staging = vdir + ".staging"
@@ -2253,7 +2219,7 @@ def clone_table(
             "partition_by": entries[-1].get("partition_by"),
             "columns": entries[-1].get("columns") or entries[0].get("columns"),
             "evolved": evolved,
-            "renames_active": _active_renames(entries),
+            "renames_active": renames,
             # constraints in effect AT the cloned version (alterable via
             # set_checks — the first commit is not authoritative)
             "checks": next(
@@ -3758,11 +3724,7 @@ def merge_branch(
     if cur == base and meta.get("ff_ok", True):
         # fast-forward: hardlink the branch head in as main's next version
         src = _vdir(broot, head)
-        last_uniform = max(
-            (i for i, e in enumerate(bhist) if e["action"] in _RESET_ACTIONS),
-            default=0,
-        )
-        evolved = any(e.get("evolved") for e in bhist[last_uniform:])
+        evolved, renames = _since_reset(bhist)
         new_v = cur + 1
         vdir = _claim_version(root, new_v)
         staging = vdir + ".staging"
@@ -3797,7 +3759,7 @@ def merge_branch(
                 "partition_by": bhist[-1].get("partition_by"),
                 "columns": _cols_at(bhist, head),
                 "evolved": evolved,
-                "renames_active": _active_renames(bhist),
+                "renames_active": renames,
                 "checks": next(
                     (e["checks"] for e in reversed(bhist) if "checks" in e), {}
                 )

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import store_state
-from .table_format import current_version, partition_scheme, read_changes, read_table
+from .table_format import current_version, partition_scheme, read_table
 
 _SUPPORTED_PREFIXES = (
     "int",
@@ -134,32 +134,22 @@ def refresh_zone_map(spark: SparkSession, index_path: str) -> int:
     """Widen bounds from the base change feed: insert/update post-images
     fold in via min/max merge; deletes are no-ops by design (bounds stay
     wide — false-positive partition reads, never misses)."""
-    st = store_state.read(index_path)
-    cur = current_version(st["base_root"])
-    if cur == st["base_version"]:
-        return cur
-    ch = read_changes(
-        spark,
-        st["base_root"],
-        key=st["key"],
-        from_version=st["base_version"],
-        to_version=cur,
-    )
-    adds = ch.where(F.col("_change_type").isin("insert", "update"))
-    for p, b in _bounds(adds, st["col"], st["part_col"]).items():
-        key = "\x00null" if p is None else p
-        cur_b = st["zones"].get(key)
-        if cur_b is None:
-            st["zones"][key] = b
-        else:
+
+    def fold(st, ch, cur):
+        adds = ch.where(F.col("_change_type").isin("insert", "update"))
+        for p, b in _bounds(adds, st["col"], st["part_col"]).items():
+            key = "\x00null" if p is None else p
+            cur_b = st["zones"].get(key)
+            if cur_b is None:
+                st["zones"][key] = b
+                continue
             if b["lo"] is not None and (cur_b["lo"] is None or b["lo"] < cur_b["lo"]):
                 cur_b["lo"] = b["lo"]
             if b["hi"] is not None and (cur_b["hi"] is None or b["hi"] > cur_b["hi"]):
                 cur_b["hi"] = b["hi"]
             cur_b["has_null"] = cur_b["has_null"] or b["has_null"]
-    st["base_version"] = cur
-    store_state.write(index_path, st)
-    return cur
+
+    return store_state.fold_window(spark, index_path, fold)
 
 
 def range_prune_scan(
@@ -177,13 +167,7 @@ def range_prune_scan(
     zone at all), and pruning with the stale map would silently MISS
     those rows. Refresh first; the fold is O(changed rows)."""
     st = store_state.read(index_path)
-    cur = current_version(st["base_root"])
-    if cur != st["base_version"]:
-        raise ValueError(
-            f"zone map at version {st['base_version']} but base is at "
-            f"{cur} — unfolded inserts would be silently missed; run "
-            "refresh_zone_map() first"
-        )
+    store_state.check_current(st, "refresh_zone_map")
     nlo, nhi = _norm(lo), _norm(hi)
     parts = [
         p

@@ -91,7 +91,7 @@ def _snapshot_meta(root: str, v: int):
         raise FileNotFoundError(f"no committed version <= {v} at {root}")
     cols = entries[-1].get("columns") or entries[0].get("columns")
     pcols = TF._part_cols(entries[-1].get("partition_by"))
-    renames = TF._active_renames(entries)
+    _, renames = TF._since_reset(entries)
     sj = next(
         (e["schema_json"] for e in reversed(entries) if e.get("schema_json")),
         None,
@@ -785,7 +785,7 @@ class CbxTableStreamReader(DataSourceStreamReader):
                 f"(vacuumed past the stream's offset?)"
             )
         pcols = TF._part_cols(entries[-1].get("partition_by"))
-        renames = [list(r) for r in TF._active_renames(entries)]
+        renames = [list(r) for r in TF._since_reset(entries)[1]]
         cur = {
             (e["path"], e.get("mtime_ns")): e for e in TF.manifest(self._root, v)
         }

@@ -73,6 +73,34 @@ def test_refresh_tracks_updates_moves_and_deletes(spark, tmp_path):
     assert got == full
 
 
+def test_lookup_raises_when_index_lags_base(spark, tmp_path):
+    """An unfolded merge leaves a moved key's entry on its old partition
+    and a new key with none: a lookup through that index would silently
+    return no rows, so it must refuse until the index is refreshed."""
+    root, idx = str(tmp_path / "t"), str(tmp_path / "idx")
+    TF.create_table(
+        spark.createDataFrame(
+            [Row(id=1, grp="a", val=1.0), Row(id=2, grp="b", val=2.0)]
+        ),
+        root, partition_by="grp",
+    )
+    KI.create_key_index(spark, root, idx, key="id")
+    TF.merge_into(
+        spark, root,
+        spark.createDataFrame(
+            [Row(id=1, grp="c", val=1.0), Row(id=3, grp="c", val=3.0)]
+        ),
+        on="id",
+    )
+    with pytest.raises(ValueError, match="refresh_key_index"):
+        KI.point_lookup(spark, idx, [1, 3])
+    KI.refresh_key_index(spark, idx)
+    got = sorted(
+        (r["id"], r["grp"]) for r in KI.point_lookup(spark, idx, [1, 3]).collect()
+    )
+    assert got == [(1, "c"), (3, "c")]
+
+
 def test_unpartitioned_base_rejected(spark, tmp_path):
     root = str(tmp_path / "t")
     TF.create_table(_base(spark), root)

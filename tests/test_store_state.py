@@ -428,7 +428,9 @@ def test_torn_sidecar_write_keeps_previous_state(
 ):
     """Crash the refresh's first sidecar write half-way through its
     payload: the sidecar on disk must still parse to its pre-crash value,
-    and the next refresh must land on the from-scratch result."""
+    and the next refresh must land on the from-scratch result. A refresh
+    after that, with no base commit in between, is a no-op: same version,
+    no sidecar write, no Spark job."""
     sidecar, refresh, served, scratch = _FAMILIES[family](spark, str(tmp_path))
     with open(sidecar, encoding="utf-8") as fh:
         before = json.load(fh)
@@ -449,8 +451,20 @@ def test_torn_sidecar_write_keeps_previous_state(
             refresh()
     with open(sidecar, encoding="utf-8") as fh:
         assert json.load(fh) == before
-    refresh()
+    version = refresh()
+    writes, jobs = [], _job_ids(spark)
+    with monkeypatch.context() as m:
+        m.setattr(store_state, "write", lambda *a: writes.append(a))
+        assert refresh() == version
+    assert writes == []
+    assert _job_ids(spark) == jobs
     assert served() == scratch()
+
+
+def _job_ids(spark) -> set:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
 
 
 _PKG = os.path.join(
