@@ -24,19 +24,19 @@ def _migration_pass(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "one_pass, allowed",
+    "one_pass",
     [
-        # The shingle-set filter (operators/dedup.py) recompiles 4 classes in
-        # some warm passes.
-        pytest.param(_pipeline_pass, 5, id="pipeline"),
-        pytest.param(_migration_pass, 0, id="migration"),
+        pytest.param(_pipeline_pass, id="pipeline"),
+        pytest.param(_migration_pass, id="migration"),
     ],
 )
-def test_warm_pipeline_passes_reuse_compiled_classes(spark, sf_dir, one_pass, allowed):
-    """A repeated pass compiles (almost) nothing new: the pretraining
-    pipeline's ~150 generated classes fit the session's codegen cache (with
-    Spark's default 100-entry cache every warm pass recompiles ~129 of
-    them), and the migration's generated source repeats from run to run."""
+def test_warm_pipeline_passes_reuse_compiled_classes(spark, sf_dir, one_pass):
+    """A repeated pass compiles nothing new: the pretraining pipeline's ~150
+    generated classes fit the session's codegen cache (with Spark's default
+    100-entry cache every warm pass recompiles ~129 of them), and the
+    generated source repeats from run to run (with codegen stage ids in the
+    class names, adaptive execution's run-to-run stage numbering recompiled
+    the near-dedup stages in some warm pipeline passes)."""
     one_pass(spark, sf_dir)
     U.release_persisted()
     compiled = []
@@ -45,4 +45,4 @@ def test_warm_pipeline_passes_reuse_compiled_classes(spark, sf_dir, one_pass, al
         one_pass(spark, sf_dir)
         U.release_persisted()
         compiled.append(_classes_compiled(spark) - before)
-    assert max(compiled) <= allowed, compiled
+    assert compiled == [0, 0]
