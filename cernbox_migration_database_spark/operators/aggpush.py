@@ -50,30 +50,11 @@ from __future__ import annotations
 
 import math
 import os
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from . import table_format as TF
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _partition_values(rel: str, pcols: list[str]) -> dict:
-    """Decode one hive-layout relative dir (``a=1/b=x%20y``) into
-    {col: str | None} — the same unescape+default-token rules Spark's
-    partition discovery applies."""
-    out: dict = {}
-    if rel in ("", "."):
-        return out
-    for seg in rel.split("/"):
-        k, _, v = seg.partition("=")
-        out[k] = None if v == _HIVE_NULL else unquote(v)
-    if list(out) != pcols:
-        raise ValueError(f"partition dir {rel!r} != layout {pcols}")
-    return out
-
 
 def _exact_bounds(e: dict, col: str):
     """A file's [min, max] for ``col`` as EXACT attained values, or the
@@ -139,7 +120,7 @@ def partition_agg(
     scan_rels: list[str] = []
     for rel, files in sorted(by_rel.items()):
         deleted = dv.get(rel, 0)
-        out = dict(_partition_values(rel, pcols))
+        out = TF._rel_values(rel, pcols)
         ok = all("rows" in e for e in files)
         n = sum(e.get("rows", 0) for e in files) - deleted
         out["n_rows"] = n

@@ -135,13 +135,18 @@ def _commit(root: str, version: int, meta: dict, publish: bool = True) -> None:
     name = f"v{version:08d}.json" if publish else f"v{version:08d}.staged.json"
     with open(os.path.join(logdir, name), "w", encoding="utf-8") as fh:
         json.dump(meta, fh)
-    if not publish:
-        return
+    if publish:
+        _swap_pointer(root, version)
+
+
+def _swap_pointer(root: str, version: int) -> None:
+    """Point ``_latest`` at ``version``: write-new, then ``os.replace`` —
+    the one atomic publish point of every commit."""
     ptr = os.path.join(root, _POINTER)
     tmp = ptr + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:
         fh.write(str(version))
-    os.replace(tmp, ptr)  # the one atomic publish point
+    os.replace(tmp, ptr)
 
 
 def publish_staged(root: str, version: int) -> int:
@@ -175,11 +180,7 @@ def publish_staged(root: str, version: int) -> int:
             f"elapsed before publish); re-stage"
         )
     os.replace(staged, os.path.join(logdir, f"v{version:08d}.json"))
-    ptr = os.path.join(root, _POINTER)
-    tmp = ptr + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(version))
-    os.replace(tmp, ptr)
+    _swap_pointer(root, version)
     return version
 
 
@@ -553,6 +554,79 @@ def _unclaim(vdir: str) -> None:
         pass
 
 
+def _commit_version(
+    root: str, version: int, fill, meta: dict, publish: bool = True
+) -> int:
+    """The one commit path of every writer: claim → stage → publish → log.
+
+    1. claim ``version`` with an atomic mkdir (a lost race raises
+       FileExistsError, which :func:`commit_with_retry` turns into a re-run
+       against the winner's snapshot);
+    2. ``fill(staging)`` materializes the snapshot in the claim's
+       ``.staging`` sibling — the claim itself stays EMPTY meanwhile;
+    3. one ``os.rename`` publishes the data onto the still-empty claim. A
+       rename onto a claim another writer has already filled fails
+       (ENOTEMPTY), so the loser's files never interleave with the winner's;
+    4. on any failure the staging dir is removed and the claim released
+       with the empty-only :func:`_unclaim`, so the next writer can claim
+       the same number and a competitor's renamed data is never deleted;
+    5. :func:`_commit` writes the manifest and the log entry and, unless
+       ``publish=False`` (write-audit-publish staging), swaps the pointer.
+
+    ``fill`` returns how many carried files it had to byte-copy instead of
+    hardlink (or None); a nonzero count is logged as
+    ``carry_copied_files``, so an operator can see a deployment whose carry
+    degraded from free hardlinks to data IO. ``meta`` is read after
+    ``fill`` returns, so a fill may record what it learned while staging.
+    Returns ``version``."""
+    vdir = _claim_version(root, version)
+    staging = vdir + ".staging"
+    try:
+        copied = fill(staging)
+        os.rename(staging, vdir)
+    except Exception:
+        shutil.rmtree(staging, ignore_errors=True)
+        _unclaim(vdir)
+        raise
+    if copied:
+        meta["carry_copied_files"] = copied
+    _commit(root, version, meta, publish=publish)
+    return version
+
+
+def _write_parquet(df: DataFrame, pcols: list[str], path: str) -> None:
+    """Write ``df`` as a (hive-partitioned, when ``pcols``) parquet tree."""
+    writer = df.write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
+    writer.parquet(path)
+
+
+def _part_scheme(pcols: list[str]):
+    """The commit-log form of a partition column list (inverse of
+    :func:`_part_cols`): str when single, list when hierarchical, None when
+    unpartitioned — one representation, so cross-commit scheme comparisons
+    (read_changes pruning) stay stable."""
+    return pcols[0] if len(pcols) == 1 else (pcols or None)
+
+
+def _carried_state(entries: list[dict]) -> dict:
+    """The snapshot state a commit carries from the log prefix ``entries``
+    (oldest first, ending at the snapshot it carries): the last entry's
+    ``partition_by`` and ``columns`` (the first entry's columns when the
+    last records none) and the newest recorded ``schema_json`` (absent
+    when no entry has one)."""
+    sj = next(
+        (e["schema_json"] for e in reversed(entries) if e.get("schema_json")),
+        None,
+    )
+    return {
+        "partition_by": entries[-1].get("partition_by"),
+        "columns": entries[-1].get("columns") or entries[0].get("columns"),
+        **({"schema_json": sj} if sj else {}),
+    }
+
+
 def with_bucket(
     df: DataFrame, key: str, n_buckets: int, bucket_col: str = "bucket"
 ) -> DataFrame:
@@ -608,38 +682,19 @@ def create_table(
     _enforce_checks(df, checks or {}, "create")
     if distribute and pcols:
         df = df.hint("rebalance", *pcols)
-    vdir = _claim_version(root, 1)
-    # Stage-then-rename like every other commit path: the claim dir stays
-    # EMPTY until the atomic publish, so a failed create can release it
-    # with the empty-only _unclaim guard instead of an rmtree that could
-    # destroy a competing writer's renamed data.
-    staging = vdir + ".staging"
-    try:
-        writer = df.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    _commit(
+    return _commit_version(
         root,
         1,
+        lambda staging: _write_parquet(df, pcols, staging),
         {
             "action": "create",
             "schema_json": df.schema.json(),
-            # normalized like merge/compact commits: str when single, list
-            # when hierarchical — keeps cross-commit scheme comparisons
-            # (read_changes pruning) representation-stable
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
+            "partition_by": _part_scheme(pcols),
             "columns": df.columns,
             "checks": checks or {},
             **_txn_meta(txn),
         },
     )
-    return 1
 
 
 def convert_to_table(
@@ -706,9 +761,8 @@ def convert_to_table(
         reader = reader.option("basePath", src)
     df = reader.parquet(src)
     _enforce_checks(df, checks or {}, "convert")
-    vdir = _claim_version(root, 1)
-    staging = vdir + ".staging"
-    try:
+
+    def fill(staging: str) -> None:
         for rel, ab in files:
             dst = os.path.join(staging, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -716,24 +770,20 @@ def convert_to_table(
                 os.link(ab, dst)
             except OSError:
                 shutil.copy2(ab, dst)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    _commit(
+
+    return _commit_version(
         root,
         1,
+        fill,
         {
             "action": "convert",
             "source": src,
             "schema_json": df.schema.json(),
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
+            "partition_by": _part_scheme(pcols),
             "columns": df.columns,
             "checks": checks or {},
         },
     )
-    return 1
 
 
 def _txn_meta(txn: tuple[str, int] | None) -> dict:
@@ -878,12 +928,12 @@ def _empty_snapshot_df(spark, root: str, v: int, cols):
     tables keep the old failure mode)."""
     from pyspark.sql.types import StructType
 
-    es = [
-        e for e in history(root) if e["version"] <= v and e.get("schema_json")
-    ]
-    if not es:
+    sj = _carried_state(
+        [e for e in history(root) if e["version"] <= v]
+    ).get("schema_json")
+    if sj is None:
         return None
-    schema = StructType.fromJson(json.loads(es[-1]["schema_json"]))
+    schema = StructType.fromJson(json.loads(sj))
     df = spark.createDataFrame([], schema)
     if cols and set(cols) == set(df.columns):
         df = df.select(*cols)
@@ -902,8 +952,8 @@ def _snapshot_reader(spark: SparkSession, root: str, v: int):
     # Logical column order of THIS version's commit — a partitioned parquet
     # read surfaces the partition column last, which would leak the
     # physical layout into the table's schema contract.
-    cols = entries[-1].get("columns") or entries[0].get("columns")
-    return reader, cols, _part_cols(entries[-1].get("partition_by")), renames
+    state = _carried_state(entries)
+    return reader, state["columns"], _part_cols(state["partition_by"]), renames
 
 
 def _since_reset(entries: list[dict]) -> tuple[bool, list[list[str]]]:
@@ -984,51 +1034,29 @@ def drop_column(spark: SparkSession, root: str, col: str) -> int:
     be dropped (they ARE the layout). Time travel sees the pre-drop
     schema at pre-drop versions."""
     base_v = current_version(root)
-    entries = [e for e in history(root) if e["version"] <= base_v]
-    cols = entries[-1].get("columns") or entries[0].get("columns") or []
+    state = _carried_state([e for e in history(root) if e["version"] <= base_v])
+    cols = state["columns"] or []
     if col not in cols:
         raise ValueError(f"column {col!r} not in table columns {cols}")
-    pcols = _part_cols(entries[-1].get("partition_by"))
-    if col in pcols:
+    if col in _part_cols(state["partition_by"]):
         raise ValueError(f"cannot drop partition column {col!r}")
-    new_cols = [c for c in cols if c != col]
+    state["columns"] = [c for c in cols if c != col]
     # post-drop schema for empty-snapshot synthesis: the nearest recorded
     # schema minus the dropped field (computed BEFORE the commit — a
     # published log entry is immutable)
-    from pyspark.sql.types import StructType
+    if "schema_json" in state:
+        from pyspark.sql.types import StructType
 
-    sj = next(
-        (e.get("schema_json") for e in reversed(entries) if e.get("schema_json")),
-        None,
-    )
-    new_sj = None
-    if sj is not None:
-        st = StructType.fromJson(json.loads(sj))
-        new_sj = StructType([f for f in st.fields if f.name != col]).json()
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    try:
-        _linked, carry_copied = _link_tree(_vdir(root, base_v), staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    _commit(
+        st = StructType.fromJson(json.loads(state["schema_json"]))
+        state["schema_json"] = StructType(
+            [f for f in st.fields if f.name != col]
+        ).json()
+    return _commit_version(
         root,
-        new_v,
-        {
-            "action": "drop_column",
-            "parent": base_v,
-            "dropped": col,
-            "columns": new_cols,
-            "partition_by": entries[-1].get("partition_by"),
-            **({"schema_json": new_sj} if new_sj else {}),
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
-        },
+        base_v + 1,
+        lambda staging: _link_tree(_vdir(root, base_v), staging),
+        {"action": "drop_column", "parent": base_v, "dropped": col, **state},
     )
-    return new_v
 
 
 def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
@@ -1045,26 +1073,20 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
     any existing column, and partition columns can't be renamed (the
     directory layout IS the name)."""
     base_v = current_version(root)
-    entries = [e for e in history(root) if e["version"] <= base_v]
-    cols = entries[-1].get("columns") or entries[0].get("columns") or []
+    state = _carried_state([e for e in history(root) if e["version"] <= base_v])
+    cols = state["columns"] or []
     if old not in cols:
         raise ValueError(f"column {old!r} not in table columns {cols}")
     if new in cols:
         raise ValueError(f"column {new!r} already exists in {cols}")
-    pcols = _part_cols(entries[-1].get("partition_by"))
-    if old in pcols:
+    if old in _part_cols(state["partition_by"]):
         raise ValueError(f"cannot rename partition column {old!r}")
-    new_cols = [new if c == old else c for c in cols]
-    from pyspark.sql.types import StructField, StructType
+    state["columns"] = [new if c == old else c for c in cols]
+    if "schema_json" in state:
+        from pyspark.sql.types import StructField, StructType
 
-    sj = next(
-        (e.get("schema_json") for e in reversed(entries) if e.get("schema_json")),
-        None,
-    )
-    new_sj = None
-    if sj is not None:
-        st = StructType.fromJson(json.loads(sj))
-        new_sj = StructType(
+        st = StructType.fromJson(json.loads(state["schema_json"]))
+        state["schema_json"] = StructType(
             [
                 StructField(new, f.dataType, f.nullable, f.metadata)
                 if f.name == old
@@ -1072,33 +1094,20 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
                 for f in st.fields
             ]
         ).json()
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    try:
-        _linked, carry_copied = _link_tree(_vdir(root, base_v), staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    _commit(
+    return _commit_version(
         root,
-        new_v,
+        base_v + 1,
+        lambda staging: _link_tree(_vdir(root, base_v), staging),
         {
             "action": "rename_column",
             "parent": base_v,
             "renamed": [old, new],
-            "columns": new_cols,
-            "partition_by": entries[-1].get("partition_by"),
             # carried files keep the OLD footer name → later reads must
             # footer-merge until the next full rewrite
             "evolved": True,
-            **({"schema_json": new_sj} if new_sj else {}),
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
+            **state,
         },
     )
-    return new_v
 
 
 def table_checks(root: str, version: int | None = None) -> dict[str, str]:
@@ -1126,42 +1135,19 @@ def set_checks(spark: SparkSession, root: str, checks: dict[str, str]) -> int:
     added = {n: s for n, s in new.items() if table_checks(root).get(n) != s}
     if added:
         _enforce_checks(read_table(spark, root, base_v), added, "alter")
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    try:
-        _linked, carry_copied = _link_tree(_vdir(root, base_v), staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    entries = [e for e in history(root) if e["version"] <= base_v]
-    _commit(
+    return _commit_version(
         root,
-        new_v,
+        base_v + 1,
+        lambda staging: _link_tree(_vdir(root, base_v), staging),
         {
             "action": "set_checks",
             "parent": base_v,
             "checks": new,
-            "partition_by": entries[-1].get("partition_by"),
-            "columns": entries[-1].get("columns") or entries[0].get("columns"),
-            **(
-                {"schema_json": sj}
-                if (sj := next(
-                    (
-                        e.get("schema_json")
-                        for e in reversed(entries)
-                        if e.get("schema_json")
-                    ),
-                    None,
-                ))
-                else {}
+            **_carried_state(
+                [e for e in history(root) if e["version"] <= base_v]
             ),
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
         },
     )
-    return new_v
 
 
 def version_at(root: str, ts: float) -> int:
@@ -1197,16 +1183,16 @@ def _enforce_checks(df: DataFrame, checks: dict[str, str], action: str) -> None:
         )
 
 
-def _link_tree(src: str, dst: str) -> tuple[int, int]:
+def _link_tree(src: str, dst: str) -> int:
     """Recursively hardlink src into dst. Hardlink carry is an O(#files)
     driver-side metadata op — no data bytes move. When ``os.link`` is
     unavailable (cross-device staging, filesystems without hardlinks —
     the degraded stand-in for an object store, which has no links at
     all), the file is COPIED instead: byte-identical and correct, just
     paid in data IO; callers surface the copied count in the commit log
-    so an operator can see a deployment is paying copy-carry. Returns
-    ``(n_linked, n_copied)``."""
-    linked = copied = 0
+    so an operator can see a deployment is paying copy-carry. Returns the
+    number of files copied."""
+    copied = 0
     for dirpath, _dirnames, filenames in os.walk(src):
         rel = os.path.relpath(dirpath, src)
         tgt = os.path.join(dst, rel) if rel != "." else dst
@@ -1215,14 +1201,10 @@ def _link_tree(src: str, dst: str) -> tuple[int, int]:
             s, d = os.path.join(dirpath, fn), os.path.join(tgt, fn)
             try:
                 os.link(s, d)
-                linked += 1
             except OSError:
                 shutil.copy2(s, d)
                 copied += 1
-    return linked, copied
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+    return copied
 
 
 def _part_cols(scheme) -> list[str]:
@@ -1231,6 +1213,14 @@ def _part_cols(scheme) -> list[str]:
         return []
     return [scheme] if isinstance(scheme, str) else list(scheme)
 
+
+# ---------------------------------------------------------------------------
+# The hive partition-directory codec — the one copy every module uses
+# (the cbxtable writer and reader, aggregate pushdown, zone maps): the null
+# marker, Spark's escape set, escape/unescape, value → directory string, and
+# relative dir → raw values.
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 # The character set Spark/Hive escape in partition directory names
 # (ExternalCatalogUtils.escapePathName): ASCII control chars plus the
@@ -1263,11 +1253,32 @@ def _unescape_path_name(s: str) -> str:
 
 
 def _part_dir_value(v) -> str:
-    """A partition VALUE as its partition-DIRECTORY string — null becomes
-    the hive default marker, everything else Spark's escaped directory
-    form (so the representation always matches what the writer puts on
-    disk, '#', ':', '%' and friends included)."""
-    return _HIVE_NULL if v is None else _escape_path_name(str(v))
+    """A Python partition VALUE as its directory string, spelled the way
+    Spark's writer spells it: null as the hive default marker, booleans
+    lower-case, dates and timestamps ISO, everything escaped.
+    Floats are refused: Spark writes Java's ``Double.toString`` (1e20 is
+    ``1.0E20``, 1e7 is ``1.0E7``), which Python's str()/repr() do not
+    reproduce, and a misspelled directory is a second partition."""
+    import datetime
+    import decimal
+
+    if v is None:
+        return _HIVE_NULL
+    if isinstance(v, bool):
+        s = "true" if v else "false"
+    elif isinstance(v, datetime.datetime):
+        s = v.isoformat(sep=" ")
+    elif isinstance(v, (str, int, decimal.Decimal, datetime.date)):
+        s = str(v)
+    elif isinstance(v, float):
+        raise ValueError(
+            f"float partition value {v!r} has no exact directory spelling "
+            f"outside Spark (Spark writes Java's Double.toString); name the "
+            f"partition by its directory instead"
+        )
+    else:
+        raise ValueError(f"unsupported partition value type {type(v)}")
+    return _escape_path_name(s)
 
 
 def _part_rel(cols: list[str], vals: tuple) -> str:
@@ -1277,17 +1288,95 @@ def _part_rel(cols: list[str], vals: tuple) -> str:
     return "/".join(f"{c}={_part_dir_value(v)}" for c, v in zip(cols, vals))
 
 
-def _rel_cmp(rel: str) -> str:
-    """An escaped relative partition path as the RAW-value comparison
-    string `_part_dir_expr` computes per row (\\x01-separated so a value
-    containing '/' cannot alias a different tuple). Splitting happens on
-    the ESCAPED form — '/' and '=' inside values are still %XX there — so
-    the decomposition is unambiguous."""
-    comps = []
-    for comp in rel.split("/"):
-        c, _, v = comp.partition("=")
-        comps.append(f"{c}={v if v == _HIVE_NULL else _unescape_path_name(v)}")
-    return "\x01".join(comps)
+def _rel_values(rel: str, cols: list[str]) -> dict:
+    """A relative partition dir — or a file path under one — as ``{col:
+    raw value string}`` (None for the null marker), unescaped the way
+    Spark's partition discovery unescapes. The first ``len(cols)``
+    segments must be ``col=value`` in layout order; splitting on the
+    ESCAPED form is unambiguous, because '/' and '=' inside values are
+    still %XX there."""
+    out: dict = {}
+    segs = rel.split("/")[: len(cols)] if cols else []
+    for seg, col in zip(segs, cols):
+        k, eq, v = seg.partition("=")
+        if k != col or not eq:
+            break
+        out[col] = None if v == _HIVE_NULL else _unescape_path_name(v)
+    if len(out) != len(cols):
+        raise ValueError(f"partition dir {rel!r} != layout {cols}")
+    return out
+
+
+def _rel_cmp(rel: str, cols: list[str]) -> str:
+    """A relative partition path as the RAW-value comparison string
+    `_part_dir_expr` computes per row (\\x01-separated so a value
+    containing '/' cannot alias a different tuple)."""
+    return "\x01".join(
+        f"{c}={_HIVE_NULL if v is None else v}"
+        for c, v in _rel_values(rel, cols).items()
+    )
+
+
+_NO_VALUE = object()  # a directory string that is not of the column's type
+
+
+def _dir_reader(sample):
+    """How to read a decoded directory string back as a value comparable
+    to ``sample`` (a value Spark returned for the same column): numbers by
+    value, booleans by Spark's spelling, anything else as text."""
+    import decimal
+
+    def parsed(fn):
+        def read(raw):
+            try:
+                return fn(raw)
+            except (ValueError, ArithmeticError):
+                return _NO_VALUE
+
+        return read
+
+    if isinstance(sample, bool):
+        return lambda raw: {"true": True, "false": False}.get(raw, _NO_VALUE)
+    if isinstance(sample, float):
+        return parsed(float)
+    if isinstance(sample, (int, decimal.Decimal)):
+        return parsed(decimal.Decimal)
+    return lambda raw: raw
+
+
+def _dirs_holding(rels, cols: list[str], touched) -> set[str]:
+    """The relative dirs among ``rels`` that hold one of the ``touched``
+    partition-value tuples (as Spark returned them), compared by VALUE
+    rather than by spelling. Spark writes a double 1e20 as ``1.0E20`` and
+    reads a ``1.2345678E7`` directory back as a decimal; Python's str() of
+    a boolean is ``True`` where the directory says ``true``. A partition
+    the rewrite read but this missed would be carried forward next to its
+    own rewrite, duplicating its rows."""
+    import decimal
+
+    if not touched:
+        return set()
+
+    def key(v):
+        if v is None or isinstance(v, (int, float, decimal.Decimal)):
+            return v
+        return str(v)
+
+    want = {tuple(key(v) for v in t) for t in touched}
+    readers = [
+        _dir_reader(next((t[i] for t in touched if t[i] is not None), None))
+        for i in range(len(cols))
+    ]
+    out = set()
+    for rel in rels:
+        raw = _rel_values(rel, cols)
+        k = tuple(
+            None if raw[c] is None else read(raw[c])
+            for c, read in zip(cols, readers)
+        )
+        if k in want:
+            out.add(rel)
+    return out
 
 
 def _part_in(cols: list[str], touched: set):
@@ -1675,80 +1764,62 @@ def _cow_commit(
     touched_rels: set[str] | None = None,
     publish: bool = True,
 ) -> int:
-    """Shared copy-on-write commit protocol for merge/delete/update: claim
-    the version number (atomic mkdir), materialize the rewritten rows in a
-    staging dir, hardlink every UNTOUCHED leaf partition forward, then one
-    os.rename publishes the data — rename onto the still-EMPTY claimed dir
-    succeeds, onto a dir another writer filled it fails (ENOTEMPTY), so
-    files never interleave. ``touched`` is the set of partition-value
-    tuples being rewritten (None ⇒ unpartitioned full rewrite, unless
-    ``touched_rels`` names the rewritten partitions by relative path
-    directly)."""
-    if touched_rels is None and touched is not None:
-        touched_rels = {_part_rel(pcols, t) for t in touched}
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    carry_copied = 0
-    try:
-        writer = rewritten.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(staging)
-        if pcols:
-            # Carry untouched leaf partitions forward as hardlinks.
-            base_dir = _vdir(root, base_v)
-            for rel, full in _leaf_partition_dirs(base_dir, pcols):
-                if rel in touched_rels:
-                    continue
-                _linked, copied = _link_tree(full, os.path.join(staging, rel))
-                carry_copied += copied
-            # Deletion vectors ride with their partition: untouched
-            # partitions keep their tombstones (the carried data files still
-            # contain the deleted rows); REWRITTEN partitions drop them —
-            # the rewrite read the DV-applied snapshot, so its output
-            # already materializes the deletes.
-            base_dvdir = os.path.join(base_dir, _DV)
-            if os.path.isdir(base_dvdir):
-                for rel, full in _leaf_partition_dirs(base_dvdir, pcols):
-                    if rel in touched_rels:
-                        continue
-                    _linked, copied = _link_tree(
-                        full, os.path.join(staging, _DV, rel)
-                    )
-                    carry_copied += copied
-                counts = {
-                    r: n
-                    for r, n in _dv_counts(base_dir).items()
-                    if r not in touched_rels
-                }
-                _write_dv_counts(staging, counts)
-        os.rename(staging, vdir)
-    except Exception:
-        # Un-burn the claimed version: a failed write must not block the
-        # NEXT writer from claiming base_v+1 (the base pointer was never
-        # moved, so the table itself is untouched).
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    _commit(
-        root,
-        new_v,
-        {
-            "parent": base_v,
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
-            "touched_partitions": sorted(touched_rels)
-            if touched_rels is not None
-            else None,
-            "schema_json": rewritten.schema.json(),
-            # flagged so an operator can see a deployment whose carry
-            # degraded from free hardlinks to data-IO copies
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
-            **meta,
-        },
-        publish=publish,
-    )
-    return new_v
+    """Copy-on-write commit for merge/delete/update: write the rewritten
+    rows into the staging dir, then hardlink every UNTOUCHED leaf
+    partition forward (through :func:`_commit_version`). ``touched`` is the
+    set of partition-value tuples the rewrite read (None ⇒ unpartitioned
+    full rewrite, unless ``touched_rels`` names the rewritten partitions by
+    relative path directly). The base dirs holding those values are
+    matched by value (:func:`_dirs_holding`), so the carry skips exactly
+    what the rewrite read, however Spark spelled the directory; the log
+    records those dirs plus the ones the rewrite wrote."""
+    base_dir = _vdir(root, base_v)
+    meta = {
+        "parent": base_v,
+        "partition_by": _part_scheme(pcols),
+        "touched_partitions": None,
+        "schema_json": rewritten.schema.json(),
+        **meta,
+    }
+
+    def rewrites(rels) -> set[str]:
+        if touched_rels is not None:
+            return set(rels) & set(touched_rels)
+        return _dirs_holding(rels, pcols, touched)
+
+    def fill(staging: str) -> int:
+        _write_parquet(rewritten, pcols, staging)
+        if not pcols:
+            return 0
+        written = {rel for rel, _ in _leaf_partition_dirs(staging, pcols)}
+        copied = 0
+        leaves = _leaf_partition_dirs(base_dir, pcols)
+        read = rewrites([rel for rel, _ in leaves])
+        for rel, full in leaves:
+            if rel not in read:
+                copied += _link_tree(full, os.path.join(staging, rel))
+        # Deletion vectors ride with their partition: untouched
+        # partitions keep their tombstones (the carried data files still
+        # contain the deleted rows); REWRITTEN partitions drop them —
+        # the rewrite read the DV-applied snapshot, so its output
+        # already materializes the deletes.
+        base_dvdir = os.path.join(base_dir, _DV)
+        if os.path.isdir(base_dvdir):
+            dv_leaves = _leaf_partition_dirs(base_dvdir, pcols)
+            counts = _dv_counts(base_dir)
+            dv_read = rewrites([rel for rel, _ in dv_leaves] + list(counts))
+            for rel, full in dv_leaves:
+                if rel not in dv_read:
+                    copied += _link_tree(full, os.path.join(staging, _DV, rel))
+            _write_dv_counts(
+                staging, {r: n for r, n in counts.items() if r not in dv_read}
+            )
+        meta["touched_partitions"] = sorted(
+            set(touched_rels) if touched_rels is not None else read | written
+        )
+        return copied
+
+    return _commit_version(root, base_v + 1, fill, meta, publish=publish)
 
 
 def delete_where(
@@ -2040,60 +2111,39 @@ def _mor_commit(
     schema. The commit log records the DV'd partitions ∪ the appended
     partitions as ``touched_partitions``, so change-feed pruning stays
     exact."""
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
     base_dir = _vdir(root, base_v)
-    try:
+    meta = {
+        "parent": base_v,
+        "partition_by": _part_scheme(pcols),
+        "touched_partitions": None,
+        **meta,
+    }
+
+    def fill(staging: str) -> int:
         os.makedirs(staging)
         # Spark outputs stage INSIDE the claimed-version staging dir (dot
         # prefix: invisible to readers, activity keeps vacuum's
         # orphan-grace clock running for the whole write).
-        dv_tmp = None
+        dv_tmp = os.path.join(staging, ".dv_new")
+        app_tmp = os.path.join(staging, ".appended")
         if dv_new is not None:
-            dv_tmp = os.path.join(staging, ".dv_new")
-            dv_writer = dv_new.write.mode("overwrite")
-            if pcols:
-                dv_writer = dv_writer.partitionBy(*pcols)
-            dv_writer.parquet(dv_tmp)
-        app_tmp = None
+            _write_parquet(dv_new, pcols, dv_tmp)
         if appended is not None:
-            app_tmp = os.path.join(staging, ".appended")
-            app_writer = appended.write.mode("overwrite")
-            if pcols:
-                app_writer = app_writer.partitionBy(*pcols)
-            app_writer.parquet(app_tmp)
+            _write_parquet(appended, pcols, app_tmp)
         # Carry the whole base snapshot: data files, existing _dv tree,
         # manifest (reused stats for every carried file), counts sidecar.
-        _linked, carry_copied = _link_tree(base_dir, staging)
-        dv_moved: dict[str, int] = {}
-        if dv_tmp is not None:
-            dv_moved = _move_spark_output(dv_tmp, os.path.join(staging, _DV))
-            shutil.rmtree(dv_tmp, ignore_errors=True)
-        app_moved: dict[str, int] = {}
-        if app_tmp is not None:
-            app_moved = _move_spark_output(app_tmp, staging)
-            shutil.rmtree(app_tmp, ignore_errors=True)
+        copied = _link_tree(base_dir, staging)
+        moved: set[str] = set()
+        for tmp, dest in ((dv_tmp, os.path.join(staging, _DV)), (app_tmp, staging)):
+            if os.path.isdir(tmp):
+                moved |= set(_move_spark_output(tmp, dest))
+                shutil.rmtree(tmp, ignore_errors=True)
         _write_dv_counts(staging, _recount_dv(staging))
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    touched = sorted(set(dv_moved) | set(app_moved)) if pcols else None
-    _commit(
-        root,
-        new_v,
-        {
-            "parent": base_v,
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
-            "touched_partitions": touched,
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
-            **meta,
-        },
-        publish=publish,
-    )
-    return new_v
+        if pcols:
+            meta["touched_partitions"] = sorted(moved)
+        return copied
+
+    return _commit_version(root, base_v + 1, fill, meta, publish=publish)
 
 
 def restore(root: str, version: int) -> int:
@@ -2119,44 +2169,20 @@ def restore(root: str, version: int) -> int:
     # last full rewrite) — read_table treats 'restore' as a reset point
     # carrying exactly this flag.
     evolved, renames = _since_reset(entries)
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    try:
-        _linked, carry_copied = _link_tree(src, staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)  # un-burn the claim
-        raise
-    _commit(
+    return _commit_version(
         root,
-        new_v,
+        base_v + 1,
+        lambda staging: _link_tree(src, staging),
         {
             "action": "restore",
             "parent": base_v,
             "restored_version": version,
-            **(
-                {"schema_json": sj}
-                if (sj := next(
-                    (
-                        e.get("schema_json")
-                        for e in reversed(entries)
-                        if e["version"] <= version and e.get("schema_json")
-                    ),
-                    None,
-                ))
-                else {}
-            ),
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
-            "partition_by": entries[-1].get("partition_by"),
-            "columns": entries[-1].get("columns") or entries[0].get("columns"),
+            **_carried_state(entries),
             "evolved": evolved,
             # carried old-name files stay mapped after the reset point
             "renames_active": renames,
         },
     )
-    return new_v
 
 
 def clone_table(
@@ -2187,49 +2213,22 @@ def clone_table(
     entries = [e for e in history(src_root) if e["version"] <= v]
     evolved, renames = _since_reset(entries)
     os.makedirs(dst_root, exist_ok=True)
-    vdir = _claim_version(dst_root, 1)
-    staging = vdir + ".staging"
-    try:
-        _linked, carry_copied = _link_tree(src_vdir, staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)
-        raise
-    _commit(
+    return _commit_version(
         dst_root,
         1,
+        lambda staging: _link_tree(src_vdir, staging),
         {
             "action": "clone",
             "source_root": src_root,
             "source_version": v,
-            **(
-                {"schema_json": sj}
-                if (sj := next(
-                    (
-                        e.get("schema_json")
-                        for e in reversed(entries)
-                        if e["version"] <= v and e.get("schema_json")
-                    ),
-                    None,
-                ))
-                else {}
-            ),
-            **({"carry_copied_files": carry_copied} if carry_copied else {}),
-            "partition_by": entries[-1].get("partition_by"),
-            "columns": entries[-1].get("columns") or entries[0].get("columns"),
+            **_carried_state(entries),
             "evolved": evolved,
             "renames_active": renames,
             # constraints in effect AT the cloned version (alterable via
             # set_checks — the first commit is not authoritative)
-            "checks": next(
-                (e["checks"] for e in reversed(entries) if "checks" in e),
-                {},
-            )
-            or {},
+            "checks": table_checks(src_root, v),
         },
     )
-    return 1
 
 
 def table_stats(root: str, version: int | None = None) -> dict:
@@ -2314,30 +2313,21 @@ def compact(
     base_v = current_version(root)
     pcols = _part_cols(partition_scheme(root, base_v))
     df = read_table(spark, root, base_v)
-
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    try:
-        _compact_write(spark, df, pcols, zorder, staging, target_files)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)  # un-burn the claim
-        raise
-    _commit(
+    return _commit_version(
         root,
-        new_v,
+        base_v + 1,
+        lambda staging: _compact_write(
+            spark, df, pcols, zorder, staging, target_files
+        ),
         {
             "action": "compact",
             "schema_json": df.schema.json(),
             "parent": base_v,
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
+            "partition_by": _part_scheme(pcols),
             "zorder": list(zorder) if zorder else None,
             "columns": df.columns,
         },
     )
-    return new_v
 
 
 def _z_sorted(
@@ -2385,11 +2375,7 @@ def _compact_write(spark, df, pcols, zorder, staging, target_files=None):
         out = df.repartition(*pcols)
         if zorder:
             out = _z_sorted(out, df, zorder, pcols)
-        (
-            out.write.mode("overwrite")
-            .partitionBy(*pcols)
-            .parquet(staging)
-        )
+        _write_parquet(out, pcols, staging)
     elif zorder:
         from .layout import write_z_ordered
 
@@ -2442,7 +2428,7 @@ def compact_partitions(
         )
     df = read_table(spark, root, base_v)
     rewritten = df.where(
-        _part_dir_expr(pcols).isin(*[_rel_cmp(r) for r in touched_rels])
+        _part_dir_expr(pcols).isin(*[_rel_cmp(r, pcols) for r in touched_rels])
     ).repartition(*pcols)
     if zorder:
         rewritten = _z_sorted(rewritten, rewritten, zorder, pcols)
@@ -2811,33 +2797,20 @@ def repartition_table(
     missing = [c for c in pcols if c not in df.columns]
     if missing:
         raise ValueError(f"partition_by column(s) {missing} not in {df.columns}")
-    new_v = base_v + 1
-    vdir = _claim_version(root, new_v)
-    staging = vdir + ".staging"
-    try:
-        if pcols:
-            df.repartition(*pcols).write.mode("overwrite").partitionBy(
-                *pcols
-            ).parquet(staging)
-        else:
-            df.write.mode("overwrite").parquet(staging)
-        os.rename(staging, vdir)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        _unclaim(vdir)  # un-burn the claim
-        raise
-    _commit(
+    return _commit_version(
         root,
-        new_v,
+        base_v + 1,
+        lambda staging: _write_parquet(
+            df.repartition(*pcols) if pcols else df, pcols, staging
+        ),
         {
             "action": "repartition",
             "schema_json": df.schema.json(),
             "parent": base_v,
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
+            "partition_by": _part_scheme(pcols),
             "columns": df.columns,
         },
     )
-    return new_v
 
 
 def read_changes(
@@ -2914,8 +2887,9 @@ def read_changes(
         # touched values come from the log as RELATIVE partition-directory
         # paths (nulls as the hive default marker, ``c1=v1/c2=v2`` when
         # nested); compare in the same space.
-        dirval = _part_dir_expr(_part_cols(part_col))
-        cmps = sorted(_rel_cmp(r) for r in touched)
+        pcols = _part_cols(part_col)
+        dirval = _part_dir_expr(pcols)
+        cmps = sorted(_rel_cmp(r, pcols) for r in touched)
         old = old.where(dirval.isin(cmps))
         new = new.where(dirval.isin(cmps))
 
@@ -3724,46 +3698,21 @@ def merge_branch(
     if cur == base and meta.get("ff_ok", True):
         # fast-forward: hardlink the branch head in as main's next version
         src = _vdir(broot, head)
-        evolved, renames = _since_reset(bhist)
-        new_v = cur + 1
-        vdir = _claim_version(root, new_v)
-        staging = vdir + ".staging"
-        try:
-            _linked, carry_copied = _link_tree(src, staging)
-            os.rename(staging, vdir)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            _unclaim(vdir)
-            raise
-        _commit(
+        bentries = [e for e in bhist if e["version"] <= head]
+        evolved, renames = _since_reset(bentries)
+        new_v = _commit_version(
             root,
-            new_v,
+            cur + 1,
+            lambda staging: _link_tree(src, staging),
             {
                 "action": "merge_branch",
                 "parent": cur,
                 "branch": name,
                 "branch_version": head,
-                **(
-                    {"schema_json": sj}
-                    if (sj := next(
-                        (
-                            e.get("schema_json")
-                            for e in reversed(bhist)
-                            if e.get("schema_json")
-                        ),
-                        None,
-                    ))
-                    else {}
-                ),
-                **({"carry_copied_files": carry_copied} if carry_copied else {}),
-                "partition_by": bhist[-1].get("partition_by"),
-                "columns": _cols_at(bhist, head),
+                **_carried_state(bentries),
                 "evolved": evolved,
                 "renames_active": renames,
-                "checks": next(
-                    (e["checks"] for e in reversed(bhist) if "checks" in e), {}
-                )
-                or {},
+                "checks": table_checks(broot, head),
             },
         )
         _advance_meta(new_v, "ff")

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import store_state
-from .table_format import current_version, partition_scheme, read_table
+from .table_format import _HIVE_NULL, current_version, partition_scheme, read_table
 
 _SUPPORTED_PREFIXES = (
     "int",
@@ -225,7 +225,7 @@ def zone_debt_report(
         if "/" not in path or not path.startswith(prefix):
             continue
         pval = path.split("/", 1)[0][len(prefix):]
-        if pval == "__HIVE_DEFAULT_PARTITION__":
+        if pval == _HIVE_NULL:
             pval = "\x00null"
         b = (e.get("stats") or {}).get(col)
         if b is None:

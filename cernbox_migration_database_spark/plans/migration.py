@@ -242,8 +242,7 @@ def run_migration(
 
     dead = dead1.select("id", "error_stage")
     dead = dead.unionByName(dead2.select("id", "error_stage"))
-    if dead3 is not None:
-        dead = dead.unionByName(dead3.select("id", "error_stage"))
+    dead = dead.unionByName(dead3.select("id", "error_stage"))
 
     merged = merge_updates(
         shares, updates, key="id", update_cols=UPDATE_COLS, check_cardinality=True

@@ -72,9 +72,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructField, StructType
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
 
 
 # ---------------------------------------------------------------------------
@@ -89,14 +87,15 @@ def _snapshot_meta(root: str, v: int):
     entries = [e for e in TF.history(root) if e["version"] <= v]
     if not entries:
         raise FileNotFoundError(f"no committed version <= {v} at {root}")
-    cols = entries[-1].get("columns") or entries[0].get("columns")
-    pcols = TF._part_cols(entries[-1].get("partition_by"))
+    state = TF._carried_state(entries)
     _, renames = TF._since_reset(entries)
-    sj = next(
-        (e["schema_json"] for e in reversed(entries) if e.get("schema_json")),
-        None,
+    return (
+        entries,
+        state["columns"],
+        TF._part_cols(state["partition_by"]),
+        renames,
+        state.get("schema_json"),
     )
-    return entries, cols, pcols, renames, sj
 
 
 def _rename_chain_names(logical: str, renames) -> list[str]:
@@ -206,43 +205,12 @@ def _logical_schema(root: str, v: int) -> StructType:
     if pcols:
         by_col: dict[str, list] = {c: [] for c in pcols}
         for e in TF.manifest(root, v):
-            for c, raw in _split_rel(e["path"], pcols)[1].items():
+            for c, raw in TF._rel_values(e["path"], pcols).items():
                 by_col[c].append(raw)
         for c in pcols:
             if c in fields and by_col[c]:
                 fields[c] = StructField(c, _infer_pcol_type(by_col[c]), True)
     return StructType([fields[c] for c in cols])
-
-
-def _split_rel(rel: str, pcols: list[str]) -> tuple[str, dict]:
-    """A manifest-relative file path → (partition dir rel, {pcol: raw
-    string or None}). Hive layout: exactly one ``col=value`` directory
-    per partition column between the version dir and the file."""
-    parts = rel.split("/")
-    vals: dict = {}
-    for seg, col in zip(parts[: len(pcols)], pcols):
-        raw = seg.split("=", 1)[1] if "=" in seg else seg
-        vals[col] = None if raw == _HIVE_NULL else _unescape_pv(raw)
-    return "/".join(parts[:-1]), vals
-
-
-def _unescape_pv(raw: str) -> str:
-    """Undo Spark's hive-path percent-escaping of special characters."""
-    if "%" not in raw:
-        return raw
-    out, i = [], 0
-    while i < len(raw):
-        ch = raw[i]
-        if ch == "%" and i + 2 < len(raw) + 1 and i + 3 <= len(raw):
-            try:
-                out.append(chr(int(raw[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(ch)
-        i += 1
-    return "".join(out)
 
 
 def _parse_pv(raw: str | None, dt):
@@ -668,7 +636,7 @@ def _plan_files(
     skipped = 0
     for e in TF.manifest(root, v):
         rel = e["path"]
-        pdir, raw_vals = _split_rel(rel, pcols)
+        pdir, raw_vals = os.path.dirname(rel), TF._rel_values(rel, pcols)
         keep = True
         for f, col in flt:
             if col in raw_vals:
@@ -816,7 +784,7 @@ class CbxTableStreamReader(DataSourceStreamReader):
         out = []
         for e in new:
             rel = e["path"]
-            _pdir, raw_vals = _split_rel(rel, pcols)
+            raw_vals = TF._rel_values(rel, pcols)
             if self._with_version:
                 # rides the same typed-constant path as partition values:
                 # one microbatch may span SEVERAL commits, and a
@@ -845,36 +813,9 @@ def _opt_bool_default(options, key: str, default: bool) -> bool:
 # the SUCCESSFUL tasks' commit messages into one atomic table version.
 # Speculative/retried task attempts may leave stray files in the staging
 # area — they are never committed (only message-listed files move) and
-# the job dir is removed afterwards.
-
-# Spark's ExternalCatalogUtils.escapePathName character set: hive
-# partition directories written here must be byte-identical to what the
-# native Spark writer produces, or one table would mix two encodings.
-_ESCAPE = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(0x20)}
-
-
-def _escape_pv(val: str) -> str:
-    return "".join(
-        f"%{ord(c):02X}" if c in _ESCAPE else c for c in val
-    )
-
-
-def _pv_to_path(val) -> str:
-    """A typed partition value as its hive directory string."""
-    if val is None:
-        return _HIVE_NULL
-    if isinstance(val, bool):
-        return "true" if val else "false"
-    import datetime
-    import decimal
-
-    if isinstance(val, (int, str, decimal.Decimal)):
-        return _escape_pv(str(val))
-    if isinstance(val, float):
-        return _escape_pv(repr(val))
-    if isinstance(val, (datetime.date, datetime.datetime)):
-        return _escape_pv(val.isoformat(sep=" ") if isinstance(val, datetime.datetime) else val.isoformat())
-    raise ValueError(f"unsupported partition value type {type(val)}")
+# the job dir is removed afterwards. Partition directories are named by
+# table_format's codec, so they are byte-identical to what the native
+# Spark writer produces and one table never mixes two encodings.
 
 
 class _WriteResult(WriterCommitMessage):
@@ -928,6 +869,21 @@ class CbxTableWriter(DataSourceArrowWriter):
         bad = [c for c in self._pcols if c.startswith(("_", "."))]
         if bad:
             raise ValueError(f"partition column name(s) {bad} are reserved")
+        floats = [
+            f.name
+            for f in schema.fields
+            if f.name in self._pcols
+            and isinstance(f.dataType, (FloatType, DoubleType))
+        ]
+        if floats:
+            # Spark names such directories with Java's Double.toString,
+            # which this JVM-free writer cannot reproduce exactly
+            raise ValueError(
+                f"cbxtable cannot write float/double partition column(s) "
+                f"{floats}: their directory names follow Java's "
+                f"Double.toString (1e20 is '1.0E20'); write through "
+                f"table_format.create_table/insert_into instead"
+            )
         # job staging INSIDE the table root: same filesystem as the final
         # version dir, so every commit-time move is a metadata rename
         self._job_dir = os.path.join(root, f".ds_write_{uuid.uuid4().hex}")
@@ -940,6 +896,8 @@ class CbxTableWriter(DataSourceArrowWriter):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
+
+        from ..operators import table_format as TF
 
         batches = list(iterator)
         if not batches:
@@ -981,17 +939,15 @@ class CbxTableWriter(DataSourceArrowWriter):
         )
         for i in range(combos.num_rows):
             mask = None
-            segs = []
-            for c in self._pcols:
-                v = combos.column(c)[i].as_py()
+            vals = tuple(combos.column(c)[i].as_py() for c in self._pcols)
+            for c, v in zip(self._pcols, vals):
                 cond = (
                     pc.is_null(tbl.column(c))
                     if v is None
                     else pc.equal(tbl.column(c), v)
                 )
                 mask = cond if mask is None else pc.and_(mask, cond)
-                segs.append(f"{c}={_pv_to_path(v)}")
-            emit(tbl.filter(mask), "/".join(segs))
+            emit(tbl.filter(mask), TF._part_rel(self._pcols, vals))
         return _WriteResult(rels, tbl.num_rows)
 
     # -- driver side --------------------------------------------------------
@@ -1037,68 +993,52 @@ class CbxTableWriter(DataSourceArrowWriter):
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.rename(os.path.join(self._job_dir, rel), dst)
 
-    def _commit_new(self, rels: list[str], action: str, version: int) -> None:
-        import shutil
-
+    def _commit_new(self, rels: list[str], action: str, version: int) -> int:
         from ..operators import table_format as TF
 
-        pcols = self._pcols
-        root = self._root
-        vdir = TF._claim_version(root, version)
-        staging = vdir + ".staging"
-        try:
+        def fill(staging: str) -> None:
             os.makedirs(staging)
             self._move_listed(rels, staging)
-            os.rename(staging, vdir)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            TF._unclaim(vdir)
-            raise
-        meta = {
-            "action": action,
-            "schema_json": self._schema.json(),
-            "partition_by": pcols[0] if len(pcols) == 1 else (pcols or None),
-            "columns": list(self._schema.names),
-            **({"checks": {}} if action == "create" else {}),
-            **(
-                {"parent": version - 1}
-                if action != "create"
-                else {}
-            ),
-        }
-        TF._commit(root, version, meta)
 
-    def _commit_append(self, rels: list[str]) -> None:
-        import shutil
+        return TF._commit_version(
+            self._root,
+            version,
+            fill,
+            {
+                "action": action,
+                "schema_json": self._schema.json(),
+                "partition_by": TF._part_scheme(self._pcols),
+                "columns": list(self._schema.names),
+                **({"checks": {}} if action == "create" else {}),
+                **({"parent": version - 1} if action != "create" else {}),
+            },
+        )
 
+    def _commit_append(self, rels: list[str]) -> int:
         from ..operators import table_format as TF
 
         root = self._root
         base_v = TF.current_version(root)
-        version = base_v + 1
-        vdir = TF._claim_version(root, version)
-        staging = vdir + ".staging"
-        try:
-            os.makedirs(staging)
-            _linked, carry_copied = TF._link_tree(TF._vdir(root, base_v), staging)
+        state = TF._carried_state(
+            [e for e in TF.history(root) if e["version"] <= base_v]
+        )
+
+        def fill(staging: str) -> int:
+            copied = TF._link_tree(TF._vdir(root, base_v), staging)
             self._move_listed(rels, staging)
-            os.rename(staging, vdir)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            TF._unclaim(vdir)
-            raise
-        entries = [e for e in TF.history(root) if e["version"] <= base_v]
-        TF._commit(
+            return copied
+
+        # the log records the WRITE schema, not the carried one
+        return TF._commit_version(
             root,
-            version,
+            base_v + 1,
+            fill,
             {
                 "action": "insert",
                 "parent": base_v,
+                **state,
                 "schema_json": self._schema.json(),
-                "partition_by": entries[-1].get("partition_by"),
-                "columns": entries[-1].get("columns")
-                or list(self._schema.names),
-                **({"carry_copied_files": carry_copied} if carry_copied else {}),
+                "columns": state["columns"] or list(self._schema.names),
             },
         )
 

@@ -757,27 +757,235 @@ def test_compact_resets_schema_merge_need(spark, tmp_path):
     assert got == {1: None, 2: 0.5, 3: None, 4: None}
 
 
-def test_failed_write_does_not_burn_version_claim(spark, tmp_path):
-    """A merge whose WRITE fails (after the claim) must clean up its
-    claimed version dir so the next merge can claim base_v+1 — otherwise
-    one transient executor failure bricks the table."""
+def _without_links(monkeypatch, op):
+    """``op`` run with a hardlink carry that fails mid-stage."""
+
+    def fail():
+        def boom(src, dst):
+            raise OSError("injected link failure")
+
+        with monkeypatch.context() as m:
+            m.setattr(TF, "_link_tree", boom)
+            op()
+
+    return fail
+
+
+def _poisoned(df):
+    """``df`` with a column whose evaluation raises at write time."""
+    return df.withColumn("val", F.assert_true(F.lit(False)).cast("double"))
+
+
+def _failing_commit(spark, tmp_path, monkeypatch, case):
+    """(table root, version the failed commit claimed, failing op, op that
+    must then commit that same version)."""
     root = str(tmp_path / "t")
+    if case == "create":
+        return (
+            root, 1,
+            lambda: TF.create_table(_poisoned(_base(spark)), root, partition_by="grp"),
+            lambda: TF.create_table(_base(spark), root, partition_by="grp"),
+        )
+    if case == "cbxtable_append":
+        import pyarrow as pa
+
+        from cernbox_migration_database_spark.sources import cbx_datasource as DS
+
+        TF.create_table(
+            spark.createDataFrame([(1, "a", 10)], "id long, p string, v long"),
+            root, partition_by="p",
+        )
+
+        def append(i):
+            writer = DS.CbxTableWriter(root, DS._logical_schema(root, 1), False, {})
+            batch = pa.table(
+                {"id": [i], "p": ["a"], "v": [i * 10]},
+                schema=pa.schema(
+                    [("id", pa.int64()), ("p", pa.string()), ("v", pa.int64())]
+                ),
+            )
+            writer.commit([writer.write(iter(batch.to_batches()))])
+            return TF.current_version(root)
+
+        return root, 2, _without_links(monkeypatch, lambda: append(2)), lambda: append(3)
     TF.create_table(_base(spark), root, partition_by="grp")
-    # source whose evaluation raises at write time (lazy assert_true)
-    poison = spark.createDataFrame([Row(id=2, grp="a", val=1.0)]).withColumn(
-        "val", F.assert_true(F.lit(False)).cast("double")
-    )
+    if case == "cow_merge":
+        def merge(df):
+            return TF.merge_into(spark, root, df, on="id", when_not_matched=None)
+
+        return (
+            root, 2,
+            lambda: merge(_poisoned(spark.createDataFrame([Row(id=2, grp="a", val=1.0)]))),
+            lambda: merge(spark.createDataFrame([Row(id=2, grp="a", val=21.0)])),
+        )
+    if case == "mor_delete":
+        return (
+            root, 2,
+            lambda: TF.delete_where(
+                spark, root, F.assert_true(F.lit(False)).isNull(), mode="mor"
+            ),
+            lambda: TF.delete_where(spark, root, "id = 1", mode="mor"),
+        )
+    if case == "rename_column":
+        def rename():
+            return TF.rename_column(spark, root, "val", "amount")
+
+        return root, 2, _without_links(monkeypatch, rename), rename
+    if case == "restore":
+        TF.delete_where(spark, root, "id = 1")
+
+        def restore():
+            return TF.restore(root, 1)
+
+        return root, 3, _without_links(monkeypatch, restore), restore
+    assert case == "clone_table"
+    dst = str(tmp_path / "clone")
+
+    def clone():
+        return TF.clone_table(root, dst)
+
+    return dst, 1, _without_links(monkeypatch, clone), clone
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "create", "cow_merge", "mor_delete", "rename_column", "restore",
+        "clone_table", "cbxtable_append",
+    ],
+)
+def test_failed_write_does_not_burn_version_claim(spark, tmp_path, monkeypatch, case):
+    """A commit whose fill step fails (after the claim) must clean up its
+    claimed version dir and its staging dir and leave the pointer alone,
+    so the next commit claims the same version — otherwise one transient
+    executor failure bricks the table."""
+    root, n, fail, ok = _failing_commit(spark, tmp_path, monkeypatch, case)
+    ptr = os.path.join(root, TF._POINTER)
+
+    def pointer():
+        if not os.path.exists(ptr):
+            return None
+        with open(ptr, encoding="utf-8") as fh:
+            return fh.read()
+
+    before = pointer()
     with pytest.raises(Exception):
-        TF.merge_into(spark, root, poison, on="id", when_not_matched=None)
-    assert TF.current_version(root) == 1  # pointer untouched
-    # the version number is NOT burned: a valid merge succeeds as v2
-    ok = spark.createDataFrame([Row(id=2, grp="a", val=21.0)])
-    assert TF.merge_into(spark, root, ok, on="id", when_not_matched=None) == 2
-    got = {r["id"]: r["val"] for r in TF.read_table(spark, root).collect()}
-    assert got[2] == 21.0
-    # failed create cleans its claim too (bad partition column fails fast)
+        fail()
+    vdir = TF._vdir(root, n)
+    assert not os.path.exists(vdir)
+    assert not os.path.exists(vdir + ".staging")
+    assert pointer() == before
+    assert ok() == n
+    assert TF.current_version(root) == n
+
+
+def test_failed_create_validation_claims_nothing(spark, tmp_path):
+    """A bad partition column fails before the claim."""
+    root = str(tmp_path / "c")
     with pytest.raises(ValueError, match="partition_by"):
-        TF.create_table(_base(spark), str(tmp_path / "c"), partition_by="nope")
+        TF.create_table(_base(spark), root, partition_by="nope")
+    assert not os.path.exists(os.path.join(root, "_versions"))
+
+
+@pytest.mark.parametrize(
+    "ddl,vals",
+    [
+        ("id long, p boolean, val double", [None, True, False, False]),
+        ("id long, p double, val double", [None, 12345678.0, 1e20, 1e20]),
+    ],
+    ids=["boolean", "double"],
+)
+def test_cow_writes_find_boolean_and_double_partitions_on_disk(
+    spark, tmp_path, ddl, vals
+):
+    """Spark names these partition directories ``p=true`` and
+    ``p=1.2345678E7`` / ``p=1.0E20``; Python spells the values ``True``,
+    ``12345678.0`` and ``1e+20``. A rewrite must skip, and log, the
+    directories it read as they are named on disk, or the carry loop
+    hardlinks the old partition next to its rewrite."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "t")
+    TF.create_table(
+        spark.createDataFrame(
+            [(i, v, float(i)) for i, v in enumerate(vals)], ddl
+        ),
+        root,
+        partition_by="p",
+    )
+
+    def ids_by_dir(v):
+        return {
+            rel: set(pq.read_table(full).column("id").to_pylist())
+            for rel, full in TF._leaf_partition_dirs(TF._vdir(root, v), ["p"])
+        }
+
+    def check(changed, expect_ids):
+        got = sorted(r["id"] for r in TF.read_table(spark, root).collect())
+        assert got == expect_ids  # no row twice
+        e = TF.history(root)[-1]
+        old, new = ids_by_dir(e["parent"]), ids_by_dir(e["version"])
+        touched = set(e["touched_partitions"])
+        assert touched <= set(old) | set(new)  # names on disk
+        assert touched & set(old) == {d for d, ids in old.items() if ids & changed}
+
+    src = spark.createDataFrame([(1, vals[1], 10.0), (2, vals[2], 20.0)], ddl)
+    TF.merge_into(spark, root, src, on="id")
+    check({1, 2}, [0, 1, 2, 3])
+    TF.update_where(spark, root, "id IN (1, 2)", {"val": "val + 1"})
+    check({1, 2}, [0, 1, 2, 3])
+    TF.delete_where(spark, root, "id = 2")
+    check({2}, [0, 1, 3])
+
+
+def test_one_commit_path_and_one_partition_codec():
+    """One copy of the commit protocol and of the hive partition-directory
+    codec: only ``table_format._commit_version`` claims, stages, publishes
+    and releases a version, and only table_format.py spells the null
+    marker or the %XX escape. Three read-only scans also name the staging
+    suffix, to recognize leftovers of crashed writers."""
+    import ast
+    import re
+
+    pkg = os.path.dirname(os.path.dirname(TF.__file__))
+    staging_readers = {
+        ("operators/table_format.py", "_claim_activity"),
+        ("operators/table_format.py", "vacuum"),
+        ("operators/maintenance.py", "plan_maintenance"),
+    }
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg)
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            if rel != "operators/table_format.py":
+                assert "__HIVE_DEFAULT_PARTITION__" not in src, rel
+                assert not re.search(r"%\{[^}]*:02X\}", src), rel
+            for top in ast.parse(src).body:
+                owner = getattr(top, "name", None)
+                for node in ast.walk(top):
+                    if isinstance(node, ast.Call):
+                        f = node.func
+                        name = getattr(f, "id", None) or getattr(f, "attr", None)
+                        if name in ("_claim_version", "_unclaim"):
+                            found.append((rel, owner, name))
+                        elif (
+                            ast.unparse(f) == "os.rename"
+                            and ast.unparse(node.args[0]) == "staging"
+                        ):
+                            found.append((rel, owner, "os.rename(staging"))
+                    elif isinstance(node, ast.Constant) and node.value == ".staging":
+                        if (rel, owner) not in staging_readers:
+                            found.append((rel, owner, ".staging"))
+    where = {(rel, owner) for rel, owner, _ in found}
+    assert where == {("operators/table_format.py", "_commit_version")}
+    assert sorted({what for *_, what in found}) == [
+        ".staging", "_claim_version", "_unclaim", "os.rename(staging"
+    ]
 
 
 def test_read_changes_key_only_table(spark, tmp_path):
