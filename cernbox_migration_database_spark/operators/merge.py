@@ -3,13 +3,10 @@
 The reference writes one prepared ``UPDATE ... WHERE id=?`` per row and
 asserts exactly one row was affected (main.go:217-240). Set-at-a-time this is
 a MERGE: join the base table with the computed update set on the key and
-coalesce new values over old. The exactly-one check becomes a group-by-key
-cardinality assertion on the update set — caught before any write happens,
-which is strictly stronger than the reference's after-the-fact check.
-
-For a real JDBC target the merged rows go out via foreachPartition with one
-prepared statement per partition (vs per row in the reference); with a Delta
-lake target this is ``MERGE INTO``. Both sinks consume the same merged plan.
+take new values over old. Building the plan runs no job: each sink that
+writes owns the exactly-one check (A2). ``merge_updates`` carries it inside
+its plan, ``table_format.merge_into`` runs it in its pre-write pass and
+``write_upserts`` runs it before any DBAPI partition writes.
 """
 
 from __future__ import annotations
@@ -36,26 +33,20 @@ def merge_updates(
     updates: DataFrame,
     key: str,
     update_cols: list[str],
-    check_cardinality: bool = True,
-    broadcast_updates: bool = False,
 ) -> DataFrame:
     """Pure-DataFrame MERGE: rows of ``base`` with ``update_cols`` overwritten
     where ``updates`` has a matching key, untouched otherwise (upsert-style
     output, S6). ``updates`` must carry ``key`` + ``update_cols``.
 
-    ``broadcast_updates`` is a caller-supplied hint for when the update set is
-    known to be small relative to base (the common migration shape: a few
-    thousand updates against a billion-row table) — AQE also converts to
-    broadcast from runtime statistics, so leaving it False is never wrong,
-    but the explicit hint skips the initial shuffle plan entirely."""
-    if check_cardinality:
-        assert_exactly_one(updates, key)
-    upd = updates.select(
-        F.col(key),
-        *[F.col(c).alias(f"__new_{c}") for c in update_cols],
-        F.lit(True).alias("__matched"),
+    The update set is grouped by key, so the join cannot fan out. Reading an
+    updated column or ``updated`` raises ``update set has duplicate key`` if
+    any key has two updates, which fails the consuming job (A2)."""
+    dup = F.raise_error(F.format_string("update set has duplicate key %s", F.col(key)))
+    upd = updates.groupBy(key).agg(
+        *[F.first(c).alias(f"__new_{c}") for c in update_cols],
+        F.when(F.count(F.lit(1)) == 1, True).otherwise(dup).alias("__matched"),
     )
-    joined = base.join(F.broadcast(upd) if broadcast_updates else upd, key, "left")
+    joined = base.join(upd, key, "left")
     out_cols = []
     for c in base.columns:
         if c in update_cols:
@@ -66,6 +57,14 @@ def merge_updates(
             out_cols.append(F.col(c))
     out_cols.append(F.coalesce(F.col("__matched"), F.lit(False)).alias("updated"))
     return joined.select(*out_cols)
+
+
+def write_upserts(df: DataFrame, key: str | list[str], writer) -> None:
+    """``df.foreachPartition(writer)`` once ``assert_exactly_one`` holds: the
+    partition tasks commit independently, so duplicate keys are rejected
+    before any partition writes."""
+    assert_exactly_one(df, key)
+    df.foreachPartition(writer)
 
 
 def dbapi_upsert_writer(
@@ -81,15 +80,14 @@ def dbapi_upsert_writer(
     bounded batches — the reference's per-row prepared UPDATE
     (main.go:217-240) amortized set-at-a-time. Use as::
 
-        merged.filter("updated").foreachPartition(
-            dbapi_upsert_writer(connect, "oc_share", "id", [...]))
+        write_upserts(updates, "id",
+                      dbapi_upsert_writer(connect, "oc_share", "id", [...]))
 
     ``connect`` is a zero-arg callable returning a DBAPI connection; it runs
     ON EXECUTORS, so any driver import belongs inside it. The reference's
     exactly-one-row-affected assertion (main.go:232-238) becomes a per-batch
     rowcount check: affected rows must equal batch size, else the partition
-    task fails (and upstream assert_exactly_one has already rejected
-    duplicate keys before any write started).
+    task fails; :func:`write_upserts` rejects duplicate keys first.
     """
     # placeholder follows the driver's paramstyle: '?' (qmark — sqlite3),
     # '%s' (format — mysql-connector). Values always travel as bind

@@ -72,7 +72,8 @@ def create_command(row) -> list[str]:
 
 @dataclass
 class MigrationResult:
-    """The three first-class output streams + the merged base table."""
+    """The three first-class output streams + the merged base table, all
+    lazy; reading ``merged``'s updated columns checks A2 (``merge_updates``)."""
 
     merged: DataFrame      # base rows with updates applied (S6), `updated` flag
     updates: DataFrame     # the computed update set (id + 4 columns)
@@ -119,8 +120,10 @@ def run_migration(
     barrier — stage 4's laziness is deliberately broken here and nowhere
     else.
 
-    The result is lazy: nothing is written until the caller writes
-    ``updates``, ``audit`` or ``dead``, so the returned plan is the dry run.
+    The result is lazy: only the P7 empty guard and ``create_fn`` run, and
+    nothing is written until the caller writes ``updates``, ``audit`` or
+    ``dead``, so the returned plan is the dry run. The sink that writes
+    ``updates`` checks A2 (``merge_into``, ``merge.write_upserts``).
     The routed rows are persisted for the sinks that share them;
     ``util.release_persisted()`` frees them once the sinks are written.
     """
@@ -244,7 +247,5 @@ def run_migration(
     dead = dead.unionByName(dead2.select("id", "error_stage"))
     dead = dead.unionByName(dead3.select("id", "error_stage"))
 
-    merged = merge_updates(
-        shares, updates, key="id", update_cols=UPDATE_COLS, check_cardinality=True
-    )
+    merged = merge_updates(shares, updates, key="id", update_cols=UPDATE_COLS)
     return MigrationResult(merged=merged, updates=updates, audit=audit, dead=dead)

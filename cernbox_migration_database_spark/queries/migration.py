@@ -465,10 +465,7 @@ def migration_upsert_versioned(spark, sf_dir):
     shares = _mig_shares(spark, sf_dir)
     TF.create_table(shares, root, partition_by="share_type")
     res = _run_mig(spark, sf_dir)
-    updates = res.merged.where("updated").select(
-        "id", "item_source", "item_target", "file_source", "file_target"
-    )
-    TF.merge_into(spark, root, updates, on="id", when_not_matched=None)
+    TF.merge_into(spark, root, res.updates, on="id", when_not_matched=None)
     touched = TF.history(root)[-1]["touched_partitions"]
     assert touched == ["share_type=3"], touched
     return (

@@ -309,7 +309,8 @@ def pg_upsert_sink(
     touches the same key twice ('command cannot affect row a second
     time'), so without the collapse a non-deduped input aborted the write
     mid-partition. Across batches the same key simply upserts again —
-    later statements win, preserving arrival order within a partition.
+    later statements win, preserving arrival order within a partition, so
+    A2 (one update per key) is the caller's job: ``merge.assert_exactly_one``.
     (Rows whose key columns are all NULL never conflict in Postgres;
     they still collapse here, which only matters for keyless feeds — use
     a real key.) Returns the number of input rows consumed, counted by an

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import pytest
 
@@ -20,3 +21,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_TEST_DIR
+
+
+class SparkStatus(NamedTuple):
+    last_execution: int  # id of the latest SQL execution, -1 before any
+    job_ids: frozenset[int]
+    cached_rdds: frozenset[int]
+
+
+@pytest.fixture
+def spark_status(spark):
+    """Returns a reader of Spark's status stores that first waits until
+    every queued listener event has reached them. SQL execution ids are
+    consecutive, while the store's execution count stops growing at
+    spark.sql.ui.retainedExecutions, so callers compare ids."""
+    sc = spark.sparkContext._jsc.sc()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def read() -> SparkStatus:
+        sc.listenerBus().waitUntilEmpty()
+        runs = sql_store.executionsList()
+        rdds = sc.statusStore().rddList(True)
+        return SparkStatus(
+            runs.last().executionId() if runs.nonEmpty() else -1,
+            frozenset(spark.sparkContext.statusTracker().getJobIdsForGroup()),
+            frozenset(rdds.apply(i).id() for i in range(rdds.length())),
+        )
+
+    return read

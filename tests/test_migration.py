@@ -130,26 +130,30 @@ def test_migration_empty_guard(spark):
         )
 
 
-def _cached_rdds(spark) -> set[int]:
-    """Ids of the RDDs the status store lists as cached, once every queued
-    listener event has reached it."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    rdds = sc.statusStore().rddList(True)
-    return {rdds.apply(i).id() for i in range(rdds.length())}
+@pytest.mark.parametrize("with_create", [True, False])
+def test_migration_runs_only_its_guard_and_create(spark, spark_status, with_create):
+    """run_migration stays lazy: its only SQL executions are the P7 empty
+    guard and the create sink. The A2 duplicate-id check belongs to the
+    sink that writes the updates."""
+    create = _create_fn(spark)[0] if with_create else None
+    shares, meta = _shares(spark), _meta(spark)
+    before = spark_status().last_execution
+    run_migration(shares, meta, create_fn=create)
+    assert spark_status().last_execution - before == (2 if with_create else 1)
+    U.release_persisted()
 
 
-def test_migration_releases_its_cache(spark):
+def test_migration_releases_its_cache(spark, spark_status):
     """What run_migration persists for its sinks is freed by
     release_persisted(), so repeated runs in one session do not pile up
     cached blocks."""
-    before = _cached_rdds(spark)
+    before = spark_status().cached_rdds
     create, _ = _create_fn(spark)
     res = run_migration(_shares(spark), _meta(spark), create_fn=create)
     for df in (res.updates, res.audit, res.dead):
         df.collect()
     U.release_persisted()
-    assert not _cached_rdds(spark) - before
+    assert not spark_status().cached_rdds - before
 
 
 def test_missing_create_fn_dead_letters(spark):

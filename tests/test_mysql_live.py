@@ -19,7 +19,10 @@ import subprocess
 import pytest
 from pyspark.sql import functions as F
 
-from cernbox_migration_database_spark.operators.merge import dbapi_upsert_writer
+from cernbox_migration_database_spark.operators.merge import (
+    dbapi_upsert_writer,
+    write_upserts,
+)
 from cernbox_migration_database_spark.sources.io import dbapi_parallel_scan
 
 
@@ -288,10 +291,12 @@ def test_live_end_to_end_migration_pipeline(spark, my_sock):
 
     res = run_migration(scan(), meta, create_fn=create)
     upd_cols = ["item_source", "item_target", "file_source", "file_target"]
-    res.updates.select("id", *upd_cols).foreachPartition(
+    write_upserts(
+        res.updates.select("id", *upd_cols),
+        "id",
         dbapi_upsert_writer(
             connect, "oc_share", "id", upd_cols, placeholder="%s"
-        )
+        ),
     )
 
     def snap():

@@ -15,6 +15,7 @@ import subprocess
 import pytest
 from pyspark.sql import functions as F
 
+from cernbox_migration_database_spark.operators.merge import assert_exactly_one
 from cernbox_migration_database_spark.sources import pgsql as PG
 
 pytestmark = pytest.mark.skipif(
@@ -216,6 +217,9 @@ def test_live_end_to_end_migration_pipeline(spark, pg_dsn):
             )],
         )
     )
+    # pg_upsert_sink keeps the last row of a duplicate key, so A2 is
+    # checked here, before any partition writes
+    assert_exactly_one(upd, "id")
     PG.pg_upsert_sink(full, pg_dsn, "oc_share", key_cols=["id"])
 
     def snap():

@@ -8,12 +8,14 @@ import os
 import tempfile
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from cernbox_migration_database_spark.operators.merge import (
     dbapi_upsert_writer,
     jdbc_upsert_writer,
     merge_updates,
+    write_upserts,
 )
 
 
@@ -83,7 +85,7 @@ def test_jdbc_upsert_sqlite_roundtrip(spark, tmp_path):
     writer = jdbc_upsert_writer(
         f"sqlite://{db}", "oc_share", "id", ["item_source", "item_target"]
     )
-    updates.repartition(2).foreachPartition(writer)
+    write_upserts(updates.repartition(2), "id", writer)
 
     con = sqlite3.connect(db)
     rows = {
@@ -134,24 +136,40 @@ def test_jdbc_writer_rejects_unknown_scheme():
 
 
 def test_merge_rejects_duplicate_update_keys(spark):
+    """A2 inside the merged plan: building it runs no job, a key-only read
+    cannot fan out, and reading the updated columns fails the job."""
     base = spark.range(10).select(F.col("id"), F.lit(1.0).alias("v"))
     dup = spark.createDataFrame([(1, 2.0), (1, 3.0)], "id long, v double")
-    with pytest.raises(ValueError, match="duplicate keys"):
-        merge_updates(base, dup, key="id", update_cols=["v"])
+    merged = merge_updates(base, dup, key="id", update_cols=["v"])
+    assert merged.select("id").count() == 10
+    with pytest.raises(SparkRuntimeException, match="duplicate key"):
+        merged.collect()
 
 
-def test_merge_broadcast_hint_in_plan(spark):
-    """broadcast_updates=True must surface as a broadcast join in the plan
-    (the caller-knows-best hint for tiny update sets against huge bases);
-    default False leaves the strategy to Catalyst/AQE."""
-    base = spark.range(10_000).select(F.col("id"), F.lit(1.0).alias("v"))
-    upd = spark.range(5).select(F.col("id"), F.lit(2.0).alias("v"))
-    hinted = merge_updates(
-        base, upd, key="id", update_cols=["v"], broadcast_updates=True
-    )
-    plan = hinted._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-    assert {r["v"] for r in hinted.filter("updated").collect()} == {2.0}
+def test_write_upserts_rejects_duplicate_keys_before_any_write(spark, tmp_path):
+    """DBAPI twin of the test above: the partition tasks commit on their
+    own, so a duplicate key anywhere in a 3-partition update set must fail
+    before any partition writes."""
+    import sqlite3
+
+    db = str(tmp_path / "sink.db")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT)")
+    con.executemany("INSERT INTO t VALUES (?, 'old')", [(i,) for i in range(9)])
+    con.commit()
+    con.close()
+
+    rows = [(i, f"new{i}") for i in range(9)] + [(4, "again")]
+    updates = spark.createDataFrame(rows, "id long, v string").repartition(3)
+    assert updates.rdd.getNumPartitions() == 3
+    writer = jdbc_upsert_writer(f"sqlite://{db}", "t", "id", ["v"])
+    with pytest.raises(ValueError, match="duplicate keys: \\[4\\]"):
+        write_upserts(updates, "id", writer)
+    con = sqlite3.connect(db)
+    assert con.execute("SELECT id, v FROM t ORDER BY id").fetchall() == [
+        (i, "old") for i in range(9)
+    ]
+    con.close()
 
 
 class _FakeMySQLCursor:

@@ -424,7 +424,7 @@ class _Crash(RuntimeError):
 
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
 def test_torn_sidecar_write_keeps_previous_state(
-    spark, tmp_path, monkeypatch, family
+    spark, spark_status, tmp_path, monkeypatch, family
 ):
     """Crash the refresh's first sidecar write half-way through its
     payload: the sidecar on disk must still parse to its pre-crash value,
@@ -452,19 +452,13 @@ def test_torn_sidecar_write_keeps_previous_state(
     with open(sidecar, encoding="utf-8") as fh:
         assert json.load(fh) == before
     version = refresh()
-    writes, jobs = [], _job_ids(spark)
+    writes, jobs = [], spark_status().job_ids
     with monkeypatch.context() as m:
         m.setattr(store_state, "write", lambda *a: writes.append(a))
         assert refresh() == version
     assert writes == []
-    assert _job_ids(spark) == jobs
+    assert spark_status().job_ids == jobs
     assert served() == scratch()
-
-
-def _job_ids(spark) -> set:
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return set(sc.statusTracker().getJobIdsForGroup())
 
 
 _PKG = os.path.join(

@@ -152,28 +152,20 @@ def test_duplicate_source_keys_raise_before_any_write(spark, tmp_path, shape):
 @pytest.mark.parametrize(
     "shape", [*sorted(_MERGE_SHAPES), "cow_update_where_partition"]
 )
-def test_one_sql_execution_before_commit(spark, tmp_path, monkeypatch, shape):
+def test_one_sql_execution_before_commit(
+    spark, spark_status, tmp_path, monkeypatch, shape
+):
     """Every write shape settles A2 and its touched partitions in ONE
     SQL execution before the commit starts."""
-    sc = spark.sparkContext
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        # The id of the latest SQL execution: ids are consecutive, while
-        # the store's count stops growing at spark.sql.ui.retainedExecutions.
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        runs = store.executionsList()
-        return runs.last().executionId() if runs.nonEmpty() else -1
-
     root, run = _run_shape(spark, tmp_path, shape)
     at_commit = []
     for name in ("_cow_commit", "_mor_commit"):
         def hooked(*a, _orig=getattr(TF, name), **kw):
-            at_commit.append(executions())
+            at_commit.append(spark_status().last_execution)
             return _orig(*a, **kw)
 
         monkeypatch.setattr(TF, name, hooked)
-    before = executions()
+    before = spark_status().last_execution
     assert run() == 2
     assert [n - before for n in at_commit] == [1]
 
